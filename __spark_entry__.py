@@ -95,10 +95,12 @@ def _spread(df: DataFrame, spark: SparkSession) -> DataFrame:
     getNumPartitions). Round-robin repartition ONLY when the scan has
     fewer files than cores — at production scale the input is many
     files/splits and this is a no-op (no shuffle of a 10^12-doc
-    corpus). Result rows are unchanged (pure per-row kernel; the
-    driver compares sorted rows)."""
+    corpus). An empty ``inputFiles()`` (an in-memory or otherwise
+    non-file source) means the layout is unknown, not small: no-op too.
+    Result rows are unchanged (pure per-row kernel; the driver compares
+    sorted rows)."""
     target = spark.sparkContext.defaultParallelism
-    if len(df.inputFiles()) < target:
+    if 0 < len(df.inputFiles()) < target:
         return df.repartition(target)
     return df
 

@@ -239,11 +239,12 @@ def get_link_density(e: Element) -> float:
 #: bounded memo caches for pure regex verdicts over class/id strings --
 #: those strings come from a small site-template vocabulary, so the same
 #: handful of values is re-scanned thousands of times per corpus. Keyed
-#: per variant where the patterns differ. Cleared when oversized (wild
-#: corpora have unbounded attr vocabularies).
+#: by the `Variant` object itself (identity hash), so two variants that
+#: share a name but not their regexes never read each other's verdicts.
+#: Cleared when oversized (wild corpora have unbounded attr vocabularies).
 _REGEX_MEMO_MAX = 8192
-_CLASS_WEIGHT_CACHES: dict[str, dict] = {}
-_C1_VERDICT_CACHES: dict[str, dict] = {}
+_CLASS_WEIGHT_CACHES: dict[P.Variant, dict] = {}
+_C1_VERDICT_CACHES: dict[P.Variant, dict] = {}
 _IMG_CLASSID_CACHE: dict[str, int] = {}
 
 
@@ -255,7 +256,7 @@ def get_class_weight(e: Element, variant: P.Variant) -> int:
     if not class_name and not node_id:
         # both patterns are non-empty alternations: cannot match ""
         return 0
-    cache = _CLASS_WEIGHT_CACHES.setdefault(variant.name, {})
+    cache = _CLASS_WEIGHT_CACHES.setdefault(variant, {})
     key = (class_name, node_id)
     w = cache.get(key)
     if w is not None:
@@ -382,7 +383,7 @@ class ReadabilityKernel:
                     # memoized pure verdict over the class+id string
                     # (the tag check is hoisted -- predicate order among
                     # pure conditions cannot change the outcome)
-                    c1 = _C1_VERDICT_CACHES.setdefault(variant.name, {})
+                    c1 = _C1_VERDICT_CACHES.setdefault(variant, {})
                     hit = c1.get(unlikely_match_string)
                     if hit is None:
                         hit = bool(

@@ -33,12 +33,15 @@ Two mixes:
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 _LCG_MOD = 2_147_483_648  # 2^31
 _LCG_MUL = 1_103_515_245
 _LCG_INC = 12_345
+_SPLIT_NAME = re.compile(r"[A-Za-z0-9_.-]+")
 
 
 def _mix_col(id_col: str, seed: int, mix: str) -> Column:
@@ -127,12 +130,15 @@ def hash_split(
     """
     if not fractions:
         raise ValueError("fractions must be a non-empty dict")
-    quoted = [k for k in fractions if "'" in k or "\n" in k]
-    if quoted:
+    bad_names = [k for k in fractions if not _SPLIT_NAME.fullmatch(k)]
+    if bad_names:
         # split names are rendered into SQL string literals by oracle /
-        # replay code (round-6 advice): reject quote-bearing names here
-        # rather than emit broken SQL downstream
-        raise ValueError(f"split names must not contain quotes: {quoted}")
+        # replay code: a quote, a trailing backslash or a newline would
+        # break the literal, so only a plain identifier-ish set passes
+        raise ValueError(
+            "split names must match [A-Za-z0-9_.-]+ (no quotes, backslashes"
+            f" or whitespace): {bad_names}"
+        )
     bad = {k: v for k, v in fractions.items() if v < 0}
     if bad:
         raise ValueError(f"negative fractions: {bad}")

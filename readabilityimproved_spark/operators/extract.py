@@ -21,6 +21,7 @@ from __future__ import annotations
 
 import datetime as dt
 import html
+import re
 from collections.abc import Iterator
 from functools import partial
 
@@ -35,9 +36,10 @@ EXTRACTED_SCHEMA = (
     "n_spans int, n_images int, top_score int, status string"
 )
 
-#: documents whose reconstructed HTML exceeds this are not parsed at all
-#: (status='oversize'); protects executor memory/CPU from pathological
-#: inputs at 10^12-doc scale (SURVEY.md §7)
+#: documents whose reconstructed HTML exceeds this are parsed by no
+#: operator (`map_documents` hands them over as ``html=None``; extraction
+#: reports status='oversize'); protects executor memory/CPU from
+#: pathological inputs at 10^12-doc scale (SURVEY.md §7)
 MAX_HTML_BYTES = 20 * 1024 * 1024
 
 
@@ -61,57 +63,84 @@ def reconstruct_html(spans: list[dict]) -> str:
     return "".join(parts)
 
 
-def _extract_batches(
-    batches: Iterator[pd.DataFrame],
-    ref_date: dt.datetime,
-    variant: str,
-) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        has_base = "base_uri" in pdf.columns
-        has_part = "part" in pdf.columns
-        out_rows = []
-        for row in pdf.itertuples(index=False):
-            spans_in = getattr(row, "spans")
-            html = reconstruct_html(
-                [dict(s) for s in spans_in] if spans_in is not None else []
-            )
-            base_uri = getattr(row, "base_uri") if has_base else ""
-            if not isinstance(base_uri, str):  # None/NaN from null columns
-                base_uri = ""
-            if len(html) > MAX_HTML_BYTES:
-                result = ExtractionResult(spans=[], status="oversize")
-            else:
-                result = extract_document(
-                    html, base_uri=base_uri, ref_date=ref_date, variant=variant
+#: flush the buffered output rows once this many are held, BETWEEN
+#: documents only (rows stay in emit order, one doc's rows are never
+#: split across chunks): bounds one batch's Python list at O(chunk +
+#: one doc's rows) instead of O(batch docs x rows per doc)
+CHUNK_ROWS = 20_000
+
+
+def _column_names(schema: str) -> list[str]:
+    """Top-level column names of a DDL schema string; the commas nested
+    inside ``array<struct<...>>`` or ``decimal(p,s)`` do not separate
+    columns."""
+    flat = schema
+    while "<" in flat or "(" in flat:
+        flat = re.sub(r"<[^<>]*>|\([^()]*\)", "", flat)
+    return [field.split()[0] for field in flat.split(",")]
+
+
+def map_documents(df, per_doc, schema: str):
+    """The one per-document map every span-reading operator runs on.
+
+    For each input row it rebuilds the page (`reconstruct_html`),
+    normalizes ``base_uri`` to a ``str`` ('' when the column is absent
+    or null) and calls ``per_doc(row, html, base_uri)``, which returns
+    the row's output tuples in ``schema`` column order. A page over
+    `MAX_HTML_BYTES` is handed over as ``html=None`` and must not be
+    parsed. Output is flushed in chunks of `CHUNK_ROWS`.
+    """
+    columns = _column_names(schema)
+
+    def batches(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in pdfs:
+            has_base = "base_uri" in pdf.columns
+            rows = []
+            for row in pdf.itertuples(index=False):
+                if len(rows) >= CHUNK_ROWS:
+                    yield pd.DataFrame(rows, columns=columns)
+                    rows = []
+                spans = row.spans
+                html = reconstruct_html(
+                    [dict(s) for s in spans] if spans is not None else []
                 )
-            part_val = getattr(row, "part") if has_part else None
-            out_rows.append(
-                {
-                    "doc_id": getattr(row, "doc_id"),
-                    "part": int(part_val) if not pd.isna(part_val) else -1,
-                    "spans": [
-                        {"kind": k, "text": t, "media_ref": m, "offset": o}
-                        for (k, t, m, o) in result.spans
-                    ],
-                    "n_spans": len(result.spans),
-                    "n_images": len(result.images),
-                    # the reference's scored-DOM intermediate distilled to
-                    # its decisive number (top candidate content score,
-                    # cf. test/newsHTML.txt golden dump)
-                    "top_score": result.top_content_score,
-                    "status": result.status,
-                }
-            )
-        yield pd.DataFrame(
-            out_rows,
-            columns=[
-                "doc_id", "part", "spans", "n_spans", "n_images",
-                "top_score", "status",
-            ],
+                if len(html) > MAX_HTML_BYTES:
+                    html = None
+                base_uri = row.base_uri if has_base else ""
+                if not isinstance(base_uri, str):  # None/NaN from null columns
+                    base_uri = ""
+                rows.extend(per_doc(row, html, base_uri))
+            yield pd.DataFrame(rows, columns=columns)
+
+    return df.mapInPandas(batches, schema=schema)
+
+
+def _extracted(row, html, base_uri, ref_date, variant):
+    if html is None:
+        result = ExtractionResult(spans=[], status="oversize")
+    else:
+        result = extract_document(
+            html, base_uri=base_uri, ref_date=ref_date, variant=variant
         )
+    part = getattr(row, "part", None)
+    return [(
+        row.doc_id,
+        int(part) if not pd.isna(part) else -1,
+        [
+            {"kind": k, "text": t, "media_ref": m, "offset": o}
+            for (k, t, m, o) in result.spans
+        ],
+        len(result.spans),
+        len(result.images),
+        # the reference's scored-DOM intermediate distilled to its
+        # decisive number (top candidate content score, cf.
+        # test/newsHTML.txt golden dump)
+        result.top_content_score,
+        result.status,
+    )]
 
 
 def extract_spans(df, ref_date: dt.datetime = DEFAULT_REF_DATE, variant: str = "img"):
     """documents(doc_id, spans[, base_uri, part]) -> extracted table."""
-    kernel = partial(_extract_batches, ref_date=ref_date, variant=variant)
-    return df.mapInPandas(kernel, schema=EXTRACTED_SCHEMA)
+    per_doc = partial(_extracted, ref_date=ref_date, variant=variant)
+    return map_documents(df, per_doc, EXTRACTED_SCHEMA)

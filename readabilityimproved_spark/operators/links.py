@@ -42,69 +42,34 @@ Scale shape:
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from functools import partial
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..dom import parse
-from .extract import MAX_HTML_BYTES, reconstruct_html
+from .extract import map_documents
 
 OUTLINKS_SCHEMA = (
     "doc_id string, link_no int, url string, anchor string, rel string"
 )
 
 
-#: flush the accumulated link rows to a DataFrame once this many are
-#: buffered: bounds the per-batch Python list at O(chunk + one doc's
-#: links) instead of O(batch rows x max_links) — round-6 verdict item 7
-_OUTLINK_CHUNK_ROWS = 20_000
-
-
-def _outlink_batches(
-    batches: Iterator[pd.DataFrame], max_links: int
-) -> Iterator[pd.DataFrame]:
-    cols = ["doc_id", "link_no", "url", "anchor", "rel"]
-    for pdf in batches:
-        has_base = "base_uri" in pdf.columns
-        rows = []
-        for row in pdf.itertuples(index=False):
-            if len(rows) >= _OUTLINK_CHUNK_ROWS:
-                # flush BETWEEN documents only: rows stay in emit order,
-                # one doc's links are never split across chunks
-                yield pd.DataFrame(rows, columns=cols)
-                rows = []
-            spans_in = getattr(row, "spans")
-            html = reconstruct_html(
-                [dict(s) for s in spans_in] if spans_in is not None else []
-            )
-            if len(html) > MAX_HTML_BYTES:
-                continue  # same oversize policy as the extraction kernel
-            base_uri = getattr(row, "base_uri") if has_base else ""
-            if not isinstance(base_uri, str):
-                base_uri = ""
-            doc = parse(html, base_uri=base_uri)
-            link_no = 0
-            for a in doc.get_elements_by_tag("a", include_self=False):
-                if link_no >= max_links:
-                    break
-                if not a.attr("href"):
-                    continue  # anchors without a target aren't links
-                url = a.abs_url("href")
-                if not url:
-                    continue  # unresolvable (no base + relative href)
-                rows.append(
-                    {
-                        "doc_id": getattr(row, "doc_id"),
-                        "link_no": link_no,
-                        "url": url,
-                        "anchor": a.text(),
-                        "rel": a.attr("rel"),
-                    }
-                )
-                link_no += 1
-        yield pd.DataFrame(rows, columns=cols)
+def _outlinks(row, html, base_uri, max_links):
+    if html is None:
+        return
+    doc = parse(html, base_uri=base_uri)
+    link_no = 0
+    for a in doc.get_elements_by_tag("a", include_self=False):
+        if link_no >= max_links:
+            break
+        if not a.attr("href"):
+            continue  # anchors without a target aren't links
+        url = a.abs_url("href")
+        if not url:
+            continue  # unresolvable (no base + relative href)
+        yield (row.doc_id, link_no, url, a.text(), a.attr("rel"))
+        link_no += 1
 
 
 def extract_outlinks(df: DataFrame, max_links_per_doc: int = 10_000) -> DataFrame:
@@ -122,9 +87,6 @@ def extract_outlinks(df: DataFrame, max_links_per_doc: int = 10_000) -> DataFram
             f"max_links_per_doc must be >= 1, got {max_links_per_doc}"
         )
 
-    def gen(batches):
-        return _outlink_batches(batches, max_links_per_doc)
-
     # doc_id keeps the INPUT's type: a bigint documents table used to
     # hit an Arrow int->string conversion error because the schema
     # hardcoded string (round-6 advice); values pass through verbatim
@@ -133,7 +95,9 @@ def extract_outlinks(df: DataFrame, max_links_per_doc: int = 10_000) -> DataFram
         f"doc_id {id_type}, link_no int, url string, anchor string,"
         " rel string"
     )
-    return df.mapInPandas(gen, schema=schema)
+    return map_documents(
+        df, partial(_outlinks, max_links=max_links_per_doc), schema
+    )
 
 
 def host_link_graph(

@@ -22,8 +22,13 @@ from pyspark.sql import SparkSession
 ARROW_BATCH_SIZE = 256
 
 
-def _enable_preload_daemon() -> bool:
+def _enable_preload_daemon(master: str) -> bool:
     """Make the worker fork-server preload importable, then opt in.
+
+    Local masters only: on a cluster the package ships with
+    ``--py-files``, which is not on the path the daemon is started
+    with, so ``python -m`` of the preload module would fail and take
+    every Python worker down with it.
 
     The daemon process (``spark.python.daemon.module``) is what every
     Python worker forks from; plans/preload_daemon.py imports pandas +
@@ -35,6 +40,8 @@ def _enable_preload_daemon() -> bool:
     before the JVM starts. Best-effort: if the path cannot be resolved
     the stock ``pyspark.daemon`` is kept.
     """
+    if not master.startswith("local"):
+        return False
     try:
         pkg_root = os.path.dirname(  # .../repo (parent of the package)
             os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -77,7 +84,7 @@ def build_session(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )
-    if _enable_preload_daemon():
+    if _enable_preload_daemon(master):
         builder = builder.config(
             "spark.python.daemon.module",
             "readabilityimproved_spark.plans.preload_daemon",

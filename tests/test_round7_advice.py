@@ -65,18 +65,23 @@ def test_hash_split_rejects_quoted_names(spark):
     df = spark.range(10).selectExpr("id as doc_id")
     with pytest.raises(ValueError, match="quotes"):
         hash_split(df, {"tr'ain": 0.5, "test": 0.5})
+    # a trailing backslash escapes the closing quote of the SQL literal
+    with pytest.raises(ValueError, match="quotes"):
+        hash_split(df, {"train\\": 0.5, "test": 0.5})
     # clean names still work
     out = hash_split(df, {"train": 0.5, "test": 0.5})
     assert set(r["split"] for r in out.collect()) <= {"train", "test"}
 
 
-def test_outlink_batches_chunked_yields_identical_rows():
+def test_outlink_batches_chunked_yields_identical_rows(batch_fn):
     """Round-6 verdict item 7: the per-batch link buffer flushes in
-    bounded chunks. Rows, order and values must be identical to one
-    monolithic yield; peak buffered rows must stay bounded."""
+    bounded chunks (the shared `map_documents` chunk size). Rows, order
+    and values must be identical to one monolithic yield; peak buffered
+    rows must stay bounded."""
     import pandas as pd
 
-    from readabilityimproved_spark.operators import links as L
+    from readabilityimproved_spark.operators import extract as E
+    from readabilityimproved_spark.operators.links import extract_outlinks
 
     def spans_for(i):
         n = 40
@@ -90,18 +95,19 @@ def test_outlink_batches_chunked_yields_identical_rows():
         {"doc_id": [f"d{i}" for i in range(100)],
          "spans": [spans_for(i) for i in range(100)]}
     )
+    outlink_batches = batch_fn(extract_outlinks)
 
-    old_chunk = L._OUTLINK_CHUNK_ROWS
+    old_chunk = E.CHUNK_ROWS
     try:
-        L._OUTLINK_CHUNK_ROWS = 100  # force many flushes (4000 links total)
-        chunks = list(L._outlink_batches(iter([pdf]), max_links=10_000))
+        E.CHUNK_ROWS = 100  # force many flushes (4000 links total)
+        chunks = list(outlink_batches(iter([pdf])))
         assert len(chunks) > 10  # actually chunked
         assert max(len(c) for c in chunks) <= 100 + 40  # chunk + one doc
         got = pd.concat(chunks, ignore_index=True)
     finally:
-        L._OUTLINK_CHUNK_ROWS = old_chunk
+        E.CHUNK_ROWS = old_chunk
     want = pd.concat(
-        list(L._outlink_batches(iter([pdf]), max_links=10_000)),
+        list(outlink_batches(iter([pdf]))),
         ignore_index=True,
     )
     pd.testing.assert_frame_equal(got, want)

@@ -320,3 +320,39 @@ def test_date_from_url_cache_transparent():
         for u in urls:
             for _ in range(3):  # repeated: exercise cache hits
                 assert date_from_url(u, ref) == uncached(u, ref), (u, ref)
+
+
+def test_regex_memos_are_keyed_by_variant_object():
+    """The class-weight and C1 verdict memos must not be shared between
+    two variants that merely share a name: a second ``Variant("img", ...)``
+    with other regexes reads its own verdicts, not IMG_VARIANT's."""
+    from readabilityimproved_spark import patterns as P
+    from readabilityimproved_spark.dom import parse
+    from readabilityimproved_spark.kernel.readability import (
+        ReadabilityKernel,
+        get_class_weight,
+    )
+
+    never = re.compile(r"(?!)")
+    other = P.Variant("img", never, never, never, True)
+    el = parse('<div class="comment">x</div>').get_elements_by_tag(
+        "div", include_self=False
+    )[0]
+    assert get_class_weight(el, P.IMG_VARIANT) == -25
+    assert get_class_weight(el, other) == 0
+
+    html = (
+        '<html><body><div class="comment"><p>' + "side text, more. " * 10
+        + "</p></div><div><p>" + "Main story text, long enough. " * 10
+        + "</p></div></body></html>"
+    )
+
+    def keeps_comment(variant):
+        k = ReadabilityKernel(html, "")
+        k.variant = variant
+        k.prep_document()
+        article = k.grab_article(preserve_unlikely_candidates=False)
+        return "side text" in k.doc.html() + article.html()
+
+    assert not keeps_comment(P.IMG_VARIANT)  # C1 prunes class="comment"
+    assert keeps_comment(other)

@@ -63,3 +63,15 @@ def test_mapinpandas_runs_through_preloaded_daemon(spark):
         r["id"] for r in df.mapInPandas(double, "id long").collect()
     )
     assert got == [2 * i for i in range(64)]
+
+
+def test_preload_daemon_only_on_local_masters(monkeypatch):
+    """With ``--py-files`` on a cluster the daemon module is not
+    importable and every worker would die: keep the stock daemon."""
+    from readabilityimproved_spark.plans.session import _enable_preload_daemon
+
+    monkeypatch.setenv("PYTHONPATH", "")
+    for master in ("yarn", "spark://host:7077", "k8s://https://host:443"):
+        assert not _enable_preload_daemon(master)
+        assert os.environ["PYTHONPATH"] == ""  # nothing exported either
+    assert _enable_preload_daemon("local[2]")

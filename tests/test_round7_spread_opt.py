@@ -54,6 +54,16 @@ def test_spread_noop_for_many_files(spark, entry, tmp_path):
     assert spread is df  # no shuffle injected at scale
 
 
+def test_spread_noop_for_in_memory_frame(spark, entry):
+    """No input files means an unknown layout, not a small one: an
+    in-memory DataFrame is returned as is, with no shuffle."""
+    df = spark.createDataFrame([(i,) for i in range(50)], "doc_id long")
+    assert df.inputFiles() == []
+    spread = entry._spread(df, spark)
+    assert spread is df
+    assert "Exchange" not in spread._jdf.queryExecution().executedPlan().toString()
+
+
 def test_shaped_docs_rows_unchanged_by_spread(spark, entry):
     sf = "/root/testdata/sf0.001"
     shaped = entry._shaped_docs(spark, sf)
