@@ -265,8 +265,8 @@ def ngram_jaccard_pairs(
     EXECUTOR-LOCAL blocks -- an executor loss mid-query fails the job
     instead of recomputing. That is the right trade for this one-shot
     two-stage query (the window is seconds); an iterative job with a
-    long exposure window should use reliable checkpointing instead (see
-    graph.neardup_clusters' checkpoint_dir).
+    long exposure window should snapshot to durable storage instead
+    (see graph.neardup_clusters' state_dir).
     """
     sh = _shingles(df, id_col, text_col, n).localCheckpoint(eager=True)
     counts = sh.groupBy("id").agg(F.count("*").alias("n_sh"))

@@ -102,7 +102,9 @@ def map_documents(df, per_doc, schema: str):
                     rows = []
                 spans = row.spans
                 html = reconstruct_html(
-                    [dict(s) for s in spans] if spans is not None else []
+                    # null spans and null span elements carry no content
+                    [dict(s) for s in spans if s is not None]
+                    if spans is not None else []
                 )
                 if len(html) > MAX_HTML_BYTES:
                     html = None

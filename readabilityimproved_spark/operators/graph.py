@@ -39,21 +39,19 @@ runs on top of them, so the same job both materializes the checkpoint
 blocks and returns the sum (round 4 ran two blocking round-trips per
 round: eager checkpoint, then a separate aggregate job).
 
-Durability: by default rounds are localCheckpoint()ed -- lineage is
-truncated onto EXECUTOR-LOCAL blocks, which is the right call for the
-bench and for short jobs but means an executor loss mid-iteration
-kills the job (no lineage left to recompute from). For long cluster
-runs pass ``checkpoint_dir``: every ``checkpoint_interval``-th round
-is written through reliable ``DataFrame.checkpoint`` to that
-(HDFS/object-store) path instead, so recovery replays at most
-``checkpoint_interval - 1`` rounds. The caller owns the directory
-(Spark only auto-deletes reliable checkpoints when
-``spark.cleaner.referenceTracking.cleanCheckpoints`` is set).
-
-Iterative loops must truncate lineage one way or the other: otherwise
-the plan doubles per round (exponential planning time). Checkpoint
-blocks are ContextCleaner-managed -- no CacheManager residue (same
-discipline as minhash_verified_pairs).
+Durability: iterative loops must truncate lineage, or the plan doubles
+per round (exponential planning time). By default every round is
+localCheckpoint()ed onto EXECUTOR-LOCAL blocks: right for the bench
+and short jobs, but an executor loss mid-iteration kills the job (no
+lineage left to recompute from). Checkpoint blocks are
+ContextCleaner-managed -- no CacheManager residue (same discipline as
+minhash_verified_pairs). For long cluster runs pass ``state_dir``, the
+one durable mode: every round is written as a parquet snapshot and the
+loop continues from its read-back, which truncates lineage just as
+well. The files survive executor loss (stage retry recomputes from
+them) and driver loss (a rerun resumes from the newest snapshot); the
+round's convergence sum rides the snapshot write through observe(), so
+no separate aggregate job runs.
 
 The DuckDB oracle for the driver row replays the same semantics as a
 recursive-CTE transitive closure -- exact equality, no tolerance.
@@ -61,7 +59,9 @@ recursive-CTE transitive closure -- exact equality, no tolerance.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import logging
+
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -75,6 +75,8 @@ from pyspark.sql.types import StructType
 # flushes just emits one star edge per flush, and the shared node
 # stitches the stars back together in the Hash-Min iteration.
 _CONTRACT_NODE_CAP = 2_000_000
+
+log = logging.getLogger(__name__)
 
 
 def _star_batches(batches, a_col, b_col, max_nodes, stats=None):
@@ -138,7 +140,7 @@ def _contract_local(
     pairs: DataFrame,
     id_a: str,
     id_b: str,
-    max_nodes: int = _CONTRACT_NODE_CAP,
+    max_nodes: int | None = None,
 ) -> DataFrame:
     """Arrow-batched per-partition union-find: replace every
     partition's edge set with STARS rooted at the local minimum --
@@ -162,13 +164,16 @@ def _contract_local(
 
     One pass, no shuffle (mapInPandas over whatever partitioning the
     pair generator produced). Worker memory is HARD-BOUNDED at
-    ``max_nodes`` dict entries regardless of partition size or skew:
-    the union-find flushes its partial star and restarts when it fills
-    (see _star_batches) -- labels downstream are unchanged. Measured
+    ``max_nodes`` dict entries (default ``_CONTRACT_NODE_CAP``, read at
+    call time) regardless of partition size or skew: the union-find
+    flushes its partial star and restarts when it fills (see
+    _star_batches) -- labels downstream are unchanged. Measured
     ~0.4M edges/s/core on this host's Python (1M random edges, 500k
     nodes, 2.3 s): a 10^12-edge contraction is ~minutes across a few
     thousand cores, paid once to shrink every subsequent round.
     """
+    if max_nodes is None:
+        max_nodes = _CONTRACT_NODE_CAP
     if max_nodes < 2:
         # validate on the DRIVER before any plan is built: inside
         # _star_batches the same check would only fire lazily on
@@ -185,63 +190,219 @@ def _contract_local(
     return pairs.select(id_a, id_b).mapInPandas(gen, out_schema)
 
 
+_MARKER_SCHEMA = "round int, label_sum string, edge_fp string"
+
+
+def _list_snapshots(spark, state_dir: str):
+    # (round, jvm Path) for every labels_r{N} dir, from ONE listing;
+    # the listed Path is reused for deletion so path construction
+    # cannot drift from what the filesystem resolved
+    from ..plans.pipeline import _hadoop_fs
+
+    fs, p = _hadoop_fs(spark, state_dir)
+    if not fs.exists(p):
+        return fs, []
+    out = []
+    for st in fs.listStatus(p):
+        name = st.getPath().getName()
+        if st.isDirectory() and name.startswith("labels_r"):
+            try:
+                out.append((int(name[len("labels_r"):]), st.getPath()))
+            except ValueError:
+                pass
+    return fs, out
+
+
+def _prune_snapshots(
+    spark, state_dir: str, current: int, keep: int = 2
+) -> None:
+    # resume needs only the newest snapshot (plus one spare in case
+    # that write was torn); without pruning every round would leave one
+    # full label-table copy behind. Round ``current`` is never dropped:
+    # the loop reads it back next, even when a higher round survives
+    # from an earlier run that could not be resumed
+    from pyspark.errors import AnalysisException
+
+    try:
+        fs, snaps = _list_snapshots(spark, state_dir)
+        dropped = [
+            s for s in sorted(snaps, key=lambda t: t[0])[:-keep]
+            if s[0] != current
+        ]
+        for _, path in dropped:
+            fs.delete(path, True)
+        if not dropped:
+            return
+        # compact the marker table to the SURVIVING rounds: markers
+        # are append-only one-row parquet files, so without this
+        # every resume's mergeSchema read opens one footer per
+        # lifetime snapshot -- O(total snapshots ever) RPCs on an
+        # object store. Rows are tiny (one per snapshot), so a
+        # driver-side collect + overwrite is the cheap rewrite;
+        # legacy no-fingerprint rows are kept with a null edge_fp
+        # (resume already treats that as UNVERIFIED).
+        kept = {r for r, _ in snaps} - {r for r, _ in dropped}
+        try:
+            rows = spark.read.option("mergeSchema", "true").parquet(
+                f"{state_dir}/state"
+            ).collect()
+        except AnalysisException:
+            return  # no marker table yet: nothing to compact
+        live = [
+            (int(r["round"]), str(r["label_sum"]), r.asDict().get("edge_fp"))
+            for r in rows
+            if int(r["round"]) in kept
+        ]
+        if len(live) < len(rows):
+            spark.createDataFrame(live, _MARKER_SCHEMA).coalesce(
+                1
+            ).write.mode("overwrite").parquet(f"{state_dir}/state")
+    except Exception as exc:
+        # pruning is hygiene, not correctness: never fail the job
+        # over it, but leave a trace (unbounded growth is a cost)
+        log.warning(
+            "snapshot prune in %s failed (%s: %s); older snapshots may "
+            "accumulate", state_dir, type(exc).__name__, exc,
+        )
+
+
+def _clear_state(spark, state_dir: str) -> None:
+    # a state_dir whose content VERIFIABLY does not belong to THIS
+    # input (fingerprint mismatch) must be emptied, not just
+    # ignored: markers are append-only and labels_r{N} dirs are
+    # keyed by round alone, so leaving foreign rows behind lets a
+    # later rerun tie-break onto the WRONG labels parquet (silently
+    # wrong clusters) or rank a stale higher-round marker first
+    # forever (resume permanently dead)
+    from ..plans.pipeline import _fs_delete
+
+    try:
+        fs, snaps = _list_snapshots(spark, state_dir)
+        for _, path in snaps:
+            fs.delete(path, True)
+        _fs_delete(spark, f"{state_dir}/state")
+    except Exception as exc:
+        log.warning(
+            "could not clear stale state in %s (%s: %s); delete it "
+            "manually before the next resume",
+            state_dir, type(exc).__name__, exc,
+        )
+
+
+def _resume_state(spark, state_dir: str, edge_fp: str):
+    """(round, labels, label_sum) of the newest readable snapshot in
+    ``state_dir`` that belongs to the input fingerprinted ``edge_fp``,
+    or None to start fresh."""
+    from decimal import Decimal
+
+    from pyspark.errors import AnalysisException
+
+    try:
+        # mergeSchema: pre-round-6 markers have no edge_fp column.
+        # dropDuplicates on round: repeat runs append identical
+        # marker rows, and two copies of the newest round would
+        # defeat the one-older-snapshot fallback below.
+        markers = spark.read.option("mergeSchema", "true").parquet(
+            f"{state_dir}/state"
+        )
+        rows = (
+            markers.dropDuplicates(["round"])
+            .orderBy(F.col("round").desc())
+            .limit(2)
+            .collect()
+        )
+    except AnalysisException:
+        return None  # no state yet: the expected first-run case
+    except Exception as exc:
+        # a marker READ failure is not proof of corruption -- an
+        # object-store throttle or FS timeout lands here too, and
+        # deleting days of valid snapshots over a transient error
+        # is worse than one redundant recompute. Keep the data,
+        # warn loudly, start fresh; only a VERIFIED mismatch (the
+        # fingerprint branch below) clears the directory.
+        log.warning(
+            "state resume from %s failed (%s: %s); starting fresh "
+            "WITHOUT clearing it (may be transient -- if the state "
+            "table is truly corrupt, delete the directory manually)",
+            state_dir, type(exc).__name__, exc,
+        )
+        return None
+    has_fp = "edge_fp" in markers.columns
+    for row in rows:
+        stored_fp = row["edge_fp"] if has_fp else None
+        if stored_fp is None:
+            log.warning(
+                "snapshot in %s carries no input fingerprint (pre-round-6 "
+                "state); resuming UNVERIFIED -- the caller must guarantee "
+                "the pairs input is unchanged", state_dir,
+            )
+        elif stored_fp != edge_fp:
+            # a different pairs input: resuming would silently drop
+            # nodes absent from the old labels and import foreign
+            # clusters -- the one failure mode worse than recompute.
+            # The stale content is CLEARED, not just ignored: mixed
+            # markers/snapshots from two inputs could otherwise
+            # tie-break a later rerun onto the wrong labels table.
+            log.warning(
+                "state_dir %s was built from a DIFFERENT pairs input "
+                "(fingerprint %s != %s); clearing it and starting fresh",
+                state_dir, stored_fp, edge_fp,
+            )
+            _clear_state(spark, state_dir)
+            return None
+        rnd = int(row["round"])
+        try:
+            labels = spark.read.parquet(f"{state_dir}/labels_r{rnd}")
+            return (rnd, labels, Decimal(row["label_sum"]))
+        except Exception as exc:
+            log.warning(
+                "snapshot labels_r%d in %s unreadable (%s: %s); trying "
+                "the previous snapshot",
+                rnd, state_dir, type(exc).__name__, exc,
+            )
+    return None
+
+
 def neardup_clusters(
     pairs: DataFrame,
     id_a: str = "id_a",
     id_b: str = "id_b",
     max_rounds: int = 20,
-    checkpoint_dir: str | None = None,
-    checkpoint_interval: int = 5,
     pre_contract: bool = True,
     state_dir: str | None = None,
-    contract_node_cap: int = _CONTRACT_NODE_CAP,
 ) -> DataFrame:
     """(doc_id, cluster_id) for every document appearing in ``pairs``;
     ``cluster_id`` is the minimum doc id of the connected component.
 
-    ``state_dir``: optional DRIVER-loss recovery (orthogonal to
-    ``checkpoint_dir``, which survives executor loss within a live
-    job): every ``checkpoint_interval``-th round the label table is
-    snapshotted as parquet (``labels_r{N}``) with an appended marker
-    row, one extra write action per snapshot. A rerun with the same
-    ``state_dir`` and the SAME pairs input resumes from the newest
-    readable snapshot instead of round 1 -- including after a
-    round-cap RuntimeError, whose completed snapshots remain valid.
-    Each marker records an INPUT FINGERPRINT (pair count + exact
-    decimal sum of per-pair xxhash64 over (min, max) of the RAW pairs
-    -- orientation/order/partitioning-invariant, and computed before
-    the layout-dependent contraction pass; one cheap action per run):
-    resuming against a state_dir built from a DIFFERENT pairs input
-    would silently drop nodes and import foreign labels, so on
-    fingerprint mismatch the run warns, CLEARS the stale directory
-    (mixed markers from two inputs could tie-break a later rerun onto
-    the wrong labels table), and starts fresh. Snapshots are PRUNED to
-    the newest 2 (resume needs the latest; one spare in case the
-    newest write was torn -- resume falls back to it).
-
-    ``checkpoint_dir``: optional reliable-checkpoint location. In this
-    mode NOTHING is localCheckpoint-ed (local checkpoints truncate
-    lineage onto executor-local blocks, which would make an executor
-    loss fatal): the symmetrized edge table and every
-    ``checkpoint_interval``-th round's labels are written through
-    reliable ``DataFrame.checkpoint`` to the directory, intermediate
-    rounds persist() with lineage INTACT (unpersisted as soon as the
-    next round materializes), and the converged result is checkpointed
-    before returning. Losing an executor therefore costs a recompute
-    from the last reliable files (<= checkpoint_interval - 1 rounds of
-    lineage), handled by Spark's own stage retry -- no manual replay.
-    Costs vs the default mode: checkpoint rounds run their plan twice
-    (Spark writes reliable checkpoints in a separate job; the recompute
-    reads the previous round's persisted blocks, so it is one
-    round-transform, not the window), and one extra write finalizes the
-    result. The previous checkpoint dir is restored on exit when one
-    was set; the caller owns the directory's lifecycle.
+    ``state_dir``: optional durability. The symmetrized edge table is
+    written once per run to ``{state_dir}/edges`` and every round's
+    labels to ``{state_dir}/labels_r{N}`` (plus a marker row in
+    ``{state_dir}/state``); each round continues from the parquet
+    read-back instead of a local checkpoint, and the converged result
+    is the last snapshot's read-back. Nothing is cached or
+    checkpointed, so the files are the only copy: an executor loss is
+    recomputed from them by Spark's stage retry, and after a driver
+    loss a rerun with the same ``state_dir`` and the SAME pairs input
+    resumes from the newest readable snapshot instead of round 1 --
+    including after a round-cap RuntimeError, whose completed
+    snapshots remain valid. Each marker records an INPUT FINGERPRINT
+    (pair count + exact decimal sum of per-pair xxhash64 over (min,
+    max) of the RAW pairs -- orientation/order/partitioning-invariant,
+    and computed before the layout-dependent contraction pass; one
+    cheap action per run): resuming against a state_dir built from a
+    DIFFERENT pairs input would silently drop nodes and import foreign
+    labels, so on fingerprint mismatch the run warns, CLEARS the stale
+    directory (mixed markers from two inputs could tie-break a later
+    rerun onto the wrong labels table), and starts fresh. Snapshots
+    are PRUNED to the newest 2 (resume needs the latest; one spare in
+    case the newest write was torn -- resume falls back to it). The
+    caller owns the directory.
 
     ``pre_contract``: run the per-partition union-find pass first
     (_contract_local) -- identical labels, much smaller iterated edge
     table and fewer rounds whenever a component's pairs are at all
     co-located (bucketed pair generators emit them that way). Worker
-    memory is bounded by ``contract_node_cap`` dict entries (the
+    memory is bounded by ``_CONTRACT_NODE_CAP`` dict entries (the
     union-find flushes partial stars when it fills), so the pass is
     safe on arbitrarily skewed pair files; disable only to skip the
     extra map pass on inputs known to be already star-shaped.
@@ -263,19 +424,6 @@ def neardup_clusters(
     run, so a rerun after the raise continues making progress."""
     from pyspark.sql.types import IntegralType
 
-    if checkpoint_interval < 1:
-        raise ValueError(
-            f"checkpoint_interval must be >= 1, got {checkpoint_interval} "
-            "(0 would divide by zero mid-job; negative silently disables "
-            "the reliable checkpoints the caller asked for)"
-        )
-    if pre_contract and contract_node_cap < 2:
-        # checked here, not just lazily in the Arrow pass: by the time
-        # an executor raises, the caller has already paid the optional
-        # fingerprint action and job-launch overhead
-        raise ValueError(
-            f"contract_node_cap must be >= 2, got {contract_node_cap}"
-        )
     for col in (id_a, id_b):
         if col not in pairs.columns:
             raise ValueError(
@@ -294,6 +442,7 @@ def neardup_clusters(
     # as float NaN, and NaN != NaN would spin union-find's parent walk
     # forever.)
     pairs = pairs.filter(F.col(id_a).isNotNull() & F.col(id_b).isNotNull())
+    spark = pairs.sparkSession
     edge_fp = None
     if state_dir is not None:
         # input fingerprint for snapshot/resume validation, computed
@@ -315,333 +464,113 @@ def neardup_clusters(
         ).collect()[0]
         edge_fp = f"{fp['cnt']}:{fp['hsum']}"
     if pre_contract:
-        pairs = _contract_local(pairs, id_a, id_b, max_nodes=contract_node_cap)
-
-    reliable = checkpoint_dir is not None
-    sc = pairs.sparkSession.sparkContext
-    prev_ckpt_dir = None
-    if reliable:
-        try:  # JVM internals; a failure just means we can't restore
-            opt = sc._jsc.sc().getCheckpointDir()
-            prev_ckpt_dir = opt.get() if opt.isDefined() else None
-        except Exception:
-            prev_ckpt_dir = None
-        sc.setCheckpointDir(checkpoint_dir)
-    live_persists: list[DataFrame] = []
-
-    def _stage(df: DataFrame, rnd: int) -> DataFrame:
-        # lazy in every branch: the convergence aggregate below is the
-        # single action that materializes blocks/files each round
-        if not reliable:
-            return df.localCheckpoint(eager=False)
-        if rnd % checkpoint_interval == 0:
-            return df.checkpoint(eager=False)
-        # lineage INTACT: blocks are executor-local, but a loss
-        # recomputes from the last reliable checkpoint via stage retry
-        p = df.persist()
-        live_persists.append(p)
-        return p
-
-    def _drop_persists(keep_last: bool) -> None:
-        while len(live_persists) > (1 if keep_last else 0):
-            live_persists.pop(0).unpersist(False)
-
-    def _finish(labels: DataFrame) -> DataFrame:
-        out = labels.select(
-            F.col("node").alias("doc_id"),
-            F.col("label").alias("cluster_id"),
-        )
-        if reliable:
-            # make the result durable and leave no cached residue
-            out = out.checkpoint(eager=True)
-            _drop_persists(keep_last=False)
-        return out
-
-    spark = pairs.sparkSession
+        pairs = _contract_local(pairs, id_a, id_b)
 
     def _dsum(col: str):
         # decimal(38,0): exact, and immune to the bigint overflow a
-        # 10^12-row id sum hits (ANSI mode would raise mid-job)
-        return F.sum(F.col(col).cast("decimal(38,0)"))
-
-    def _list_snapshots():
-        # (round, jvm Path) for every labels_r{N} dir, from ONE listing;
-        # the listed Path is reused for deletion so path construction
-        # cannot drift from what the filesystem resolved
-        from ..plans.pipeline import _hadoop_fs
-
-        fs, p = _hadoop_fs(spark, state_dir)
-        if not fs.exists(p):
-            return fs, []
-        out = []
-        for st in fs.listStatus(p):
-            name = st.getPath().getName()
-            if st.isDirectory() and name.startswith("labels_r"):
-                try:
-                    out.append((int(name[len("labels_r"):]), st.getPath()))
-                except ValueError:
-                    pass
-        return fs, out
-
-    def _prune_snapshots(keep: int = 2) -> None:
-        # resume needs only the newest snapshot (plus one spare in case
-        # that write was torn); without pruning a long incremental
-        # cadence accumulates one full label-table copy per k rounds
-        from pyspark.errors import AnalysisException
-
-        try:
-            fs, snaps = _list_snapshots()
-            dropped = sorted(snaps, key=lambda t: t[0])[:-keep]
-            for _, path in dropped:
-                fs.delete(path, True)
-            if not dropped:
-                return
-            # compact the marker table to the SURVIVING rounds: markers
-            # are append-only one-row parquet files, so without this
-            # every resume's mergeSchema read opens one footer per
-            # lifetime snapshot -- O(total snapshots ever) RPCs on an
-            # object store. Rows are tiny (one per snapshot), so a
-            # driver-side collect + overwrite is the cheap rewrite;
-            # legacy no-fingerprint rows are kept with a null edge_fp
-            # (resume already treats that as UNVERIFIED).
-            kept = {r for r, _ in snaps} - {r for r, _ in dropped}
-            try:
-                rows = spark.read.option("mergeSchema", "true").parquet(
-                    f"{state_dir}/state"
-                ).collect()
-            except AnalysisException:
-                return  # no marker table yet: nothing to compact
-            live = [
-                (int(r["round"]), str(r["label_sum"]),
-                 r.asDict().get("edge_fp"))
-                for r in rows
-                if int(r["round"]) in kept
-            ]
-            if len(live) < len(rows):
-                spark.createDataFrame(
-                    live, "round int, label_sum string, edge_fp string"
-                ).coalesce(1).write.mode("overwrite").parquet(
-                    f"{state_dir}/state"
-                )
-        except Exception as exc:
-            # pruning is hygiene, not correctness: never fail the job
-            # over it, but leave a trace (unbounded growth is a cost)
-            print(
-                f"[neardup_clusters] snapshot prune in {state_dir} "
-                f"failed ({type(exc).__name__}: {exc}); older snapshots "
-                "may accumulate"
-            )
-
-    def _clear_state() -> None:
-        # a state_dir whose content VERIFIABLY does not belong to THIS
-        # input (fingerprint mismatch) must be emptied, not just
-        # ignored: markers are append-only and labels_r{N} dirs are
-        # keyed by round alone, so leaving foreign rows behind lets a
-        # later rerun tie-break onto the WRONG labels parquet (silently
-        # wrong clusters) or rank a stale higher-round marker first
-        # forever (resume permanently dead)
-        from ..plans.pipeline import _fs_delete
-
-        try:
-            fs, snaps = _list_snapshots()
-            for _, path in snaps:
-                fs.delete(path, True)
-            _fs_delete(spark, f"{state_dir}/state")
-        except Exception as exc:
-            print(
-                f"[neardup_clusters] could not clear stale state in "
-                f"{state_dir} ({type(exc).__name__}: {exc}); delete it "
-                "manually before the next resume"
-            )
-
-    def _snapshot(labels_df: DataFrame, rnd: int, label_sum, edge_fp) -> None:
-        labels_df.write.mode("overwrite").parquet(
-            f"{state_dir}/labels_r{rnd}"
+        # 10^12-row id sum hits (ANSI mode would raise mid-job); 0, not
+        # null, on an empty graph so a snapshot marker stays a number
+        return F.coalesce(
+            F.sum(F.col(col).cast("decimal(38,0)")),
+            F.lit(0).cast("decimal(38,0)"),
         )
-        spark.createDataFrame(
-            [(rnd, str(label_sum), edge_fp)],
-            "round int, label_sum string, edge_fp string",
-        ).write.mode("append").parquet(f"{state_dir}/state")
-        _prune_snapshots()
 
-    def _resume_state(edge_fp):
+    def _materialize(df: DataFrame, rnd: int, *sums):
+        # round rnd's labels plus its convergence sums, in ONE action.
+        # Default: the aggregate materializes the lazy local checkpoint.
+        # Durable: the sums ride the snapshot write through observe(),
+        # and the loop continues from the parquet read-back, which
+        # truncates lineage just as the checkpoint does.
         if state_dir is None:
-            return None
-        from pyspark.errors import AnalysisException
+            labels = df.localCheckpoint(eager=False)
+            return labels, labels.agg(*sums).collect()[0]
+        path = f"{state_dir}/labels_r{rnd}"
+        obs = Observation()
+        df.observe(obs, *sums).write.mode("overwrite").parquet(path)
+        got = obs.get
+        spark.createDataFrame(
+            [(rnd, str(got["new"]), edge_fp)], _MARKER_SCHEMA
+        ).write.mode("append").parquet(f"{state_dir}/state")
+        _prune_snapshots(spark, state_dir, rnd)
+        return spark.read.parquet(path), got
 
-        try:
-            # mergeSchema: pre-round-6 markers have no edge_fp column.
-            # dropDuplicates on round: repeat runs append identical
-            # marker rows, and two copies of the newest round would
-            # defeat the one-older-snapshot fallback below.
-            markers = spark.read.option("mergeSchema", "true").parquet(
-                f"{state_dir}/state"
-            )
-            rows = (
-                markers.dropDuplicates(["round"])
-                .orderBy(F.col("round").desc())
-                .limit(2)
-                .collect()
-            )
-        except AnalysisException:
-            return None  # no state yet: the expected first-run case
-        except Exception as exc:
-            # a marker READ failure is not proof of corruption -- an
-            # object-store throttle or FS timeout lands here too, and
-            # deleting days of valid snapshots over a transient error
-            # is worse than one redundant recompute. Keep the data,
-            # warn loudly, start fresh; only a VERIFIED mismatch (the
-            # fingerprint branch below) clears the directory.
-            print(
-                f"[neardup_clusters] state resume from {state_dir} "
-                f"failed ({type(exc).__name__}: {exc}); starting fresh "
-                "WITHOUT clearing it (may be transient -- if the state "
-                "table is truly corrupt, delete the directory manually)"
-            )
-            return None
-        has_fp = "edge_fp" in markers.columns
-        for row in rows:
-            stored_fp = row["edge_fp"] if has_fp else None
-            if stored_fp is None:
-                print(
-                    f"[neardup_clusters] snapshot in {state_dir} carries "
-                    "no input fingerprint (pre-round-6 state); resuming "
-                    "UNVERIFIED -- the caller must guarantee the pairs "
-                    "input is unchanged"
-                )
-            elif stored_fp != edge_fp:
-                # a different pairs input: resuming would silently drop
-                # nodes absent from the old labels and import foreign
-                # clusters -- the one failure mode worse than recompute.
-                # The stale content is CLEARED, not just ignored: mixed
-                # markers/snapshots from two inputs could otherwise
-                # tie-break a later rerun onto the wrong labels table.
-                print(
-                    f"[neardup_clusters] state_dir {state_dir} was built "
-                    f"from a DIFFERENT pairs input (fingerprint "
-                    f"{stored_fp} != {edge_fp}); clearing it and "
-                    "starting fresh"
-                )
-                _clear_state()
-                return None
-            rnd = int(row["round"])
-            from decimal import Decimal
-
-            try:
-                labels = spark.read.parquet(f"{state_dir}/labels_r{rnd}")
-                return (rnd, labels, Decimal(row["label_sum"]))
-            except Exception as exc:
-                print(
-                    f"[neardup_clusters] snapshot labels_r{rnd} in "
-                    f"{state_dir} unreadable ({type(exc).__name__}: "
-                    f"{exc}); trying the previous snapshot"
-                )
-        return None
-
-    try:
-        fwd = pairs.select(F.col(id_a).alias("s"), F.col(id_b).alias("d"))
-        edges = fwd.unionByName(
-            fwd.select(F.col("d").alias("s"), F.col("s").alias("d"))
-        ).distinct()
-        edges = (
-            edges.checkpoint(eager=False)
-            if reliable
-            else edges.localCheckpoint(eager=False)
+    fwd = pairs.select(F.col(id_a).alias("s"), F.col(id_b).alias("d"))
+    edges = fwd.unionByName(
+        fwd.select(F.col("d").alias("s"), F.col("s").alias("d"))
+    ).distinct()
+    resumed = None
+    if state_dir is None:
+        edges = edges.localCheckpoint(eager=False)
+    else:
+        resumed = _resume_state(spark, state_dir, edge_fp)
+        edges.write.mode("overwrite").parquet(f"{state_dir}/edges")
+        edges = spark.read.parquet(f"{state_dir}/edges")
+    if resumed is not None:
+        # the marker stored the snapshot's exact decimal sum -- no
+        # re-aggregation pass over the snapshot. prev is unknown
+        # across the restart: worth at most one extra (no-op) round
+        # before convergence is re-detected.
+        start_rnd, labels, new_sum = resumed
+        prev_sum = None
+        start = start_rnd + 1
+    else:
+        # fused round 1: label = min(self, neighbors). The
+        # symmetrized edge list contains every node as `s`, so one
+        # groupBy covers the whole node set -- no join, and it
+        # doubles as label initialization. Convergence via the
+        # label-sum invariant: labels only ever DECREASE (min of self
+        # and neighbors), so sum(label) is unchanged iff no label
+        # changed.
+        labels, first = _materialize(
+            edges.groupBy("s").agg(F.min("d").alias("m")).select(
+                F.col("s").alias("node"),
+                F.least(F.col("s"), F.col("m")).alias("label"),
+            ),
+            1,
+            _dsum("label").alias("new"),
+            _dsum("node").alias("prev"),
         )
-        resumed = _resume_state(edge_fp)
-        if resumed is not None:
-            # the marker stored the snapshot's exact decimal sum -- no
-            # re-aggregation pass over the snapshot. prev is unknown
-            # across the restart: worth at most one extra (no-op) round
-            # before convergence is re-detected.
-            start_rnd, labels, new_sum = resumed
-            prev_sum = None
-            start = start_rnd + 1
-        else:
-            # fused round 1: label = min(self, neighbors). The
-            # symmetrized edge list contains every node as `s`, so one
-            # groupBy covers the whole node set -- no join, and it
-            # doubles as label initialization.
-            labels = _stage(
-                edges.groupBy("s").agg(F.min("d").alias("m")).select(
-                    F.col("s").alias("node"),
-                    F.least(F.col("s"), F.col("m")).alias("label"),
-                ),
-                1,
+        prev_sum, new_sum = first["prev"], first["new"]
+        start = 2
+    # the cap bounds rounds executed in THIS run: on a fresh run the
+    # fused round 1 already consumed one, and on resume the snapshot
+    # rounds were a previous run's budget -- a rerun after a cap
+    # raise must make progress, not instantly re-raise
+    last = max_rounds if start == 2 else start + max_rounds - 1
+    for rnd in range(start, last + 2):
+        if new_sum == prev_sum:
+            return labels.select(
+                F.col("node").alias("doc_id"),
+                F.col("label").alias("cluster_id"),
             )
-            # convergence via the label-sum invariant: labels only ever
-            # DECREASE (min of self and neighbors), so sum(label) is
-            # unchanged iff no label changed. One narrow aggregate per
-            # round, and because the stage above is lazy, this SAME
-            # action materializes it.
-            first = labels.agg(
-                _dsum("label").alias("new"), _dsum("node").alias("prev")
-            ).collect()[0]
-            prev_sum, new_sum = first["prev"], first["new"]
-            start = 2
-        # the cap bounds rounds executed in THIS run: on a fresh run the
-        # fused round 1 already consumed one, and on resume the snapshot
-        # rounds were a previous run's budget -- a rerun after a cap
-        # raise must make progress, not instantly re-raise
-        last = max_rounds if start == 2 else start + max_rounds - 1
-        for rnd in range(start, last + 2):
-            if new_sum == prev_sum:
-                return _finish(labels)
-            if rnd == last + 1:
-                break
-            prev_sum = new_sum
-            # propagation graph: real edges + pointer edges
-            # (s -> label(s)). The single join then hands every node
-            # its neighbors' labels (via the real edges) and its
-            # label's label (via the pointer edge -- the jump). No
-            # explicit self branch is needed: the jump value
-            # label(label(s)) <= label(s) because labels only ever
-            # decrease, so the min stays monotone -- the property the
-            # sum-convergence test relies on.
-            g = edges.unionByName(
-                labels.select(
-                    F.col("node").alias("s"), F.col("label").alias("d")
-                )
-            )
-            labels = _stage(
-                g.join(labels.withColumnRenamed("node", "d"), "d")
-                .groupBy("s")
-                .agg(F.min("label").alias("label"))
-                .select(F.col("s").alias("node"), "label"),
-                rnd,
-            )
-            new_sum = labels.agg(_dsum("label")).collect()[0][0]
-            if state_dir is not None and rnd % checkpoint_interval == 0:
-                _snapshot(labels, rnd, new_sum, edge_fp)
-            # this round is materialized: older persisted rounds are no
-            # longer needed for forward progress (recovery re-derives
-            # them from the last reliable checkpoint by lineage)
-            _drop_persists(keep_last=True)
-        raise RuntimeError(
-            f"neardup_clusters did not converge in {max_rounds} rounds -- "
-            "component diameter exceeds the cap (raise max_rounds, or "
-            "switch to large-star/small-star for adversarial graphs)"
+        if rnd == last + 1:
+            break
+        prev_sum = new_sum
+        # propagation graph: real edges + pointer edges
+        # (s -> label(s)). The single join then hands every node
+        # its neighbors' labels (via the real edges) and its
+        # label's label (via the pointer edge -- the jump). No
+        # explicit self branch is needed: the jump value
+        # label(label(s)) <= label(s) because labels only ever
+        # decrease, so the min stays monotone -- the property the
+        # sum-convergence test relies on.
+        g = edges.unionByName(
+            labels.select(F.col("node").alias("s"), F.col("label").alias("d"))
         )
-    finally:
-        # EVERY exit path -- convergence, round-cap raise, or a Spark
-        # failure mid-iteration -- must leave the CacheManager clean:
-        # _drop_persists is idempotent (a second call after _finish's
-        # own cleanup is a no-op), so it lives here rather than on each
-        # raise site (round-5 advice: an exception escaping mid-round
-        # left the persisted rounds registered)
-        _drop_persists(keep_last=False)
-        if reliable:
-            if prev_ckpt_dir is not None:
-                sc.setCheckpointDir(prev_ckpt_dir)
-            else:
-                try:
-                    # Scala setCheckpointDir(null) clears the Option --
-                    # otherwise the session keeps pointing at the
-                    # caller-owned dir long after this call (and after
-                    # the caller may have deleted it)
-                    sc._jsc.sc().setCheckpointDir(None)
-                except Exception:
-                    pass
+        labels, got = _materialize(
+            g.join(labels.withColumnRenamed("node", "d"), "d")
+            .groupBy("s")
+            .agg(F.min("label").alias("label"))
+            .select(F.col("s").alias("node"), "label"),
+            rnd,
+            _dsum("label").alias("new"),
+        )
+        new_sum = got["new"]
+    raise RuntimeError(
+        f"neardup_clusters did not converge in {max_rounds} rounds -- "
+        "component diameter exceeds the cap (raise max_rounds, or "
+        "switch to large-star/small-star for adversarial graphs)"
+    )
 
 
 def dedup_keep_representative(
@@ -650,19 +579,16 @@ def dedup_keep_representative(
     id_col: str = "doc_id",
     id_a: str = "id_a",
     id_b: str = "id_b",
-    checkpoint_dir: str | None = None,
     state_dir: str | None = None,
 ) -> DataFrame:
     """The cluster-level dedup a pipeline actually applies: drop every
     clustered document EXCEPT its component's representative (minimum
     id). Documents in no pair survive untouched; the anti join keys on
     the (small) loser list, which Catalyst/AQE broadcasts.
-    ``checkpoint_dir`` (executor-loss durability) and ``state_dir``
-    (driver-loss resume) pass through to neardup_clusters for long
-    cluster runs."""
+    ``state_dir`` (durable snapshots, resume after driver loss) passes
+    through to neardup_clusters for long cluster runs."""
     clusters = neardup_clusters(
-        pairs, id_a=id_a, id_b=id_b,
-        checkpoint_dir=checkpoint_dir, state_dir=state_dir,
+        pairs, id_a=id_a, id_b=id_b, state_dir=state_dir
     )
     losers = clusters.filter(
         F.col("cluster_id") != F.col("doc_id")

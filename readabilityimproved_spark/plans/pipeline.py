@@ -38,6 +38,7 @@ and debug DOM dump (Extractor.java:103-108; ReadabilityForImg.java:786-791).
 from __future__ import annotations
 
 import datetime as dt
+import logging
 import os
 import time
 
@@ -46,6 +47,8 @@ from pyspark.sql import functions as F
 
 from ..kernel.dates import DEFAULT_REF_DATE
 from ..operators.extract import extract_spans
+
+log = logging.getLogger(__name__)
 
 #: documents whose span count exceeds this go down the giant-doc path
 GIANT_SPAN_THRESHOLD = 200
@@ -402,10 +405,10 @@ def run_extraction(
             # (lineage_rows came from them), so this only surfaces the event
             m = obs.get
             if int(m.get("docs") or 0) != sum(r[1] for r in lineage_rows):
-                print(
-                    f"[pipeline] wave {wave_idx}: observed docs {m.get('docs')} != "
-                    f"committed {sum(r[1] for r in lineage_rows)}; "
-                    "lineage uses committed counts"
+                log.warning(
+                    "wave %d: observed docs %s != committed %d; lineage "
+                    "uses committed counts",
+                    wave_idx, m.get("docs"), sum(r[1] for r in lineage_rows),
                 )
             lineage = spark.createDataFrame(
                 lineage_rows,
@@ -472,10 +475,10 @@ def run_extraction(
         # stays the source of truth, so the run must not fail here; but a
         # permissions error or schema clash on the metrics write has to
         # leave a trace, not vanish (round-5 verdict: bare pass hid it)
-        print(
-            f"[pipeline] metrics rollup to {metrics_path} failed "
-            f"({type(exc).__name__}: {exc}); committed lineage at "
-            f"{lineage_path} remains authoritative"
+        log.warning(
+            "metrics rollup to %s failed (%s: %s); committed lineage at %s "
+            "remains authoritative",
+            metrics_path, type(exc).__name__, exc, lineage_path,
         )
     return stats
 

@@ -585,12 +585,13 @@ def test_neardup_clusters_single_action_per_round(spark, monkeypatch):
 
 
 def test_neardup_clusters_reliable_checkpoint(spark, tmp_path, monkeypatch):
-    """checkpoint_dir = the durability mode: same labels, reliable
-    checkpoint files actually land in the directory, NO localCheckpoint
-    anywhere (a local checkpoint truncates lineage onto executor-local
-    blocks -- executor loss would then be fatal, the exact failure the
-    mode exists to survive), no cached residue afterwards, and the
-    session's prior checkpoint dir is restored."""
+    """state_dir = the durability mode: same labels, the edge table and
+    per-round label snapshots actually land in the directory, NO
+    localCheckpoint anywhere (a local checkpoint truncates lineage onto
+    executor-local blocks -- executor loss would then be fatal, the
+    exact failure the mode exists to survive), no cached residue
+    afterwards, and the session's prior checkpoint dir is left as it
+    was."""
     from pyspark.sql.classic.dataframe import DataFrame
 
     from readabilityimproved_spark.operators.graph import neardup_clusters
@@ -609,19 +610,20 @@ def test_neardup_clusters_reliable_checkpoint(spark, tmp_path, monkeypatch):
     )
     prior_dir = str(tmp_path / "prior")
     spark.sparkContext.setCheckpointDir(prior_dir)
-    ckdir = tmp_path / "ck"
+    state = tmp_path / "state"
     got = {
         tuple(r)
-        for r in neardup_clusters(
-            pairs, checkpoint_dir=str(ckdir), checkpoint_interval=2
-        ).collect()
+        for r in neardup_clusters(pairs, state_dir=str(state)).collect()
     }
     assert got == {(i, 1) for i in range(1, 10)} | {(100, 100), (200, 100)}
-    written = [p for p in ckdir.rglob("*") if p.is_file()]
-    assert written, "no reliable checkpoint files were written"
-    assert local_calls["n"] == 0, "reliable mode must not truncate lineage"
+    names = {p.name for p in state.iterdir()}
+    assert "edges" in names and "state" in names, names
+    assert any(n.startswith("labels_r") for n in names), names
+    written = [p for p in (state / "edges").rglob("*.parquet")]
+    assert written, "no edge snapshot files were written"
+    assert local_calls["n"] == 0, "the durable mode must not truncate lineage"
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty(), (
-        "reliable mode leaked persisted rounds"
+        "the durable mode leaked persisted rounds"
     )
     restored = spark.sparkContext._jsc.sc().getCheckpointDir()
     assert restored.isDefined() and prior_dir in restored.get()

@@ -206,77 +206,6 @@ def test_clusters_survive_hashed_near_max_ids(spark):
     }
 
 
-def test_clusters_state_dir_resumes_after_driver_loss(spark, tmp_path, monkeypatch):
-    """state_dir = driver-loss recovery: a run killed by the round cap
-    leaves parquet snapshots; a rerun with the same state_dir resumes
-    from the newest snapshot (strictly fewer propagation rounds than a
-    fresh run) and converges to identical labels."""
-    from pyspark.sql.classic.dataframe import DataFrame
-
-    from readabilityimproved_spark.operators.graph import neardup_clusters
-
-    # long chain, pre-contraction disabled and spread out, so the run
-    # genuinely needs many rounds
-    chain = spark.createDataFrame(
-        [(i, i + 1) for i in range(400)], "id_a long, id_b long"
-    ).repartition(8)
-    state = str(tmp_path / "state")
-
-    with pytest.raises(RuntimeError, match="converge"):
-        neardup_clusters(
-            chain, max_rounds=6, pre_contract=False,
-            checkpoint_interval=2, state_dir=state,
-        )
-
-    def collects(**kw):
-        calls = {"n": 0}
-        orig = DataFrame.collect
-
-        def counting(self):
-            calls["n"] += 1
-            return orig(self)
-
-        monkeypatch.setattr(DataFrame, "collect", counting)
-        try:
-            res = neardup_clusters(chain, pre_contract=False, **kw)
-            labels = {tuple(r) for r in orig(res)}
-        finally:
-            monkeypatch.setattr(DataFrame, "collect", orig)
-        return labels, calls["n"]
-
-    resumed_labels, resumed_actions = collects(
-        checkpoint_interval=2, state_dir=state
-    )
-    fresh_labels, fresh_actions = collects()
-    want = {(i, 0) for i in range(401)}
-    assert resumed_labels == want and fresh_labels == want
-    assert resumed_actions < fresh_actions, (resumed_actions, fresh_actions)
-
-
-def test_clusters_state_dir_rerun_same_cap_progresses(spark, tmp_path):
-    """max_rounds bounds the rounds of THIS run: rerunning with the
-    SAME arguments after a cap raise continues from the snapshot and
-    eventually converges, instead of re-raising forever."""
-    from readabilityimproved_spark.operators.graph import neardup_clusters
-
-    chain = spark.createDataFrame(
-        [(i, i + 1) for i in range(400)], "id_a long, id_b long"
-    ).repartition(8)
-    state = str(tmp_path / "state")
-    kw = dict(
-        max_rounds=4, pre_contract=False,
-        checkpoint_interval=2, state_dir=state,
-    )
-    labels = None
-    for _ in range(6):  # each rerun advances >= 2 snapshot rounds
-        try:
-            labels = {tuple(r) for r in neardup_clusters(chain, **kw).collect()}
-            break
-        except RuntimeError:
-            continue
-    assert labels == {(i, 0) for i in range(401)}
-
-
 def test_run_extraction_rejects_null_parts_loudly(spark, tmp_path):
     """Null-part rows land on disk under part=__HIVE_DEFAULT_PARTITION__,
     which the listing-derived inventory cannot represent -- the run
@@ -336,24 +265,30 @@ def test_metrics_rollup_counts_wave_wall_once(spark, tmp_path):
 def test_clusters_checkpoint_interval_validated_and_dir_cleared(
     spark, tmp_path
 ):
-    """checkpoint_interval < 1 fails fast, and when no checkpoint dir
-    was set before the call, the session is left with none afterwards
-    (not permanently pointed at the caller-owned directory)."""
+    """The retired reliable-checkpoint options (checkpoint_dir,
+    checkpoint_interval, contract_node_cap) fail fast on the driver
+    instead of being silently ignored, and when no checkpoint dir was
+    set before the call, a durable run leaves the session with none
+    afterwards (not permanently pointed at a caller-owned directory)."""
     from readabilityimproved_spark.operators.graph import neardup_clusters
 
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3)], "id_a long, id_b long"
     )
-    with pytest.raises(ValueError, match="checkpoint_interval"):
-        neardup_clusters(
-            pairs, checkpoint_dir=str(tmp_path / "ck"), checkpoint_interval=0
-        )
+    for retired in (
+        dict(checkpoint_interval=0),
+        dict(checkpoint_dir=str(tmp_path / "ck")),
+        dict(contract_node_cap=4),
+    ):
+        with pytest.raises(TypeError, match=next(iter(retired))):
+            neardup_clusters(pairs, **retired)
+    assert not (tmp_path / "ck").exists()
 
     spark.sparkContext._jsc.sc().setCheckpointDir(None)
     got = {
         tuple(r)
         for r in neardup_clusters(
-            pairs, checkpoint_dir=str(tmp_path / "ck2"), checkpoint_interval=2
+            pairs, state_dir=str(tmp_path / "state")
         ).collect()
     }
     assert got == {(1, 1), (2, 1), (3, 1)}

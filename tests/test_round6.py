@@ -1,8 +1,9 @@
-"""Round-6 pins: bounded-memory star contraction, state_dir input
-fingerprinting + snapshot pruning, loud metrics-rollup failures, and
-the ADVICE r5 hardening items (finally-scoped unpersist, legacy-lineage
-metrics rollup, id-column validation)."""
+"""Round-6 pins: bounded-memory star contraction, loud metrics-rollup
+failures, and the ADVICE r5 hardening items (legacy-lineage metrics
+rollup, id-column validation). The state_dir pins live in
+test_graph.py."""
 
+import logging
 import os
 
 import pytest
@@ -53,12 +54,13 @@ def test_star_batches_flushes_at_node_cap():
         list(_star_batches(iter([chain]), "a", "b", 1))
 
 
-def test_clusters_identical_labels_under_tiny_contract_cap(spark):
+def test_clusters_identical_labels_under_tiny_contract_cap(spark, monkeypatch):
     """Flushing partial stars is a pure memory bound: labels through
     neardup_clusters must be identical with an absurdly small cap, a
     production-size cap, and contraction off."""
     import random
 
+    from readabilityimproved_spark.operators import graph as G
     from readabilityimproved_spark.operators.graph import neardup_clusters
 
     rng = random.Random(606)
@@ -69,12 +71,9 @@ def test_clusters_identical_labels_under_tiny_contract_cap(spark):
         edges.add((min(a, b), max(a, b)))
     df = spark.createDataFrame(sorted(edges), "id_a long, id_b long")
     for layout in (df.coalesce(1), df.repartition(7)):
-        tiny = {
-            tuple(r)
-            for r in neardup_clusters(
-                layout, contract_node_cap=4
-            ).collect()
-        }
+        with monkeypatch.context() as m:
+            m.setattr(G, "_CONTRACT_NODE_CAP", 4)
+            tiny = {tuple(r) for r in neardup_clusters(layout).collect()}
         off = {
             tuple(r)
             for r in neardup_clusters(layout, pre_contract=False).collect()
@@ -109,175 +108,11 @@ def test_dom_attr_names_with_quotes_roundtrip_stable():
 
 
 # ---------------------------------------------------------------------------
-# state_dir: input fingerprint + snapshot retention
-# ---------------------------------------------------------------------------
-
-def test_clusters_state_dir_pruned_to_two_snapshots(spark, tmp_path):
-    """Snapshots must not accumulate one label-table copy per k rounds:
-    only the newest two survive, and resume still works off them."""
-    from readabilityimproved_spark.operators.graph import neardup_clusters
-
-    chain = spark.createDataFrame(
-        [(i, i + 1) for i in range(400)], "id_a long, id_b long"
-    ).repartition(8)
-    state = tmp_path / "state"
-    got = {
-        tuple(r)
-        for r in neardup_clusters(
-            chain, pre_contract=False, checkpoint_interval=1,
-            state_dir=str(state),
-        ).collect()
-    }
-    assert got == {(i, 0) for i in range(401)}
-    snaps = sorted(
-        p.name for p in state.iterdir() if p.name.startswith("labels_r")
-    )
-    assert len(snaps) == 2, snaps
-    # the MARKER table is compacted alongside: markers are append-only
-    # one-row parquet files, so without compaction every resume's
-    # mergeSchema read opens one footer per lifetime snapshot. After
-    # pruning, only rows for the surviving rounds remain.
-    kept_rounds = {int(s[len("labels_r"):]) for s in snaps}
-    marker_rounds = {
-        r["round"]
-        for r in spark.read.parquet(str(state / "state")).collect()
-    }
-    assert marker_rounds <= kept_rounds, (marker_rounds, kept_rounds)
-    # resume from the pruned directory still converges
-    again = {
-        tuple(r)
-        for r in neardup_clusters(
-            chain, pre_contract=False, checkpoint_interval=1,
-            state_dir=str(state),
-        ).collect()
-    }
-    assert again == got
-
-
-def test_clusters_state_dir_rejects_foreign_pairs(spark, tmp_path, capsys):
-    """Resuming a state_dir built from a DIFFERENT pairs input must not
-    silently import foreign labels / drop nodes: the fingerprint
-    mismatch warns and starts fresh, and the result is correct for the
-    NEW input."""
-    from readabilityimproved_spark.operators.graph import neardup_clusters
-
-    state = str(tmp_path / "state")
-    kw = dict(pre_contract=False, checkpoint_interval=1, state_dir=state)
-    chain_a = spark.createDataFrame(
-        [(i, i + 1) for i in range(60)], "id_a long, id_b long"
-    ).repartition(4)
-    neardup_clusters(chain_a, **kw).collect()
-    capsys.readouterr()
-
-    chain_b = spark.createDataFrame(
-        [(i, i + 1) for i in range(1000, 1060)], "id_a long, id_b long"
-    ).repartition(4)
-    got = {tuple(r) for r in neardup_clusters(chain_b, **kw).collect()}
-    assert got == {(i, 1000) for i in range(1000, 1061)}
-    assert "DIFFERENT pairs input" in capsys.readouterr().out
-
-    # the stale content was CLEARED, not left to poison later reruns:
-    # every surviving marker carries B's fingerprint only (mixed rounds
-    # from two inputs could tie-break a future resume onto the wrong
-    # labels table), and rerunning A starts fresh again -- correctly
-    fps = {
-        r["edge_fp"]
-        for r in spark.read.parquet(f"{state}/state").collect()
-    }
-    assert len(fps) == 1
-    got_a = {tuple(r) for r in neardup_clusters(chain_a, **kw).collect()}
-    assert got_a == {(i, 0) for i in range(61)}
-    assert "DIFFERENT pairs input" in capsys.readouterr().out
-
-
-def test_clusters_fingerprint_is_layout_invariant(spark, tmp_path, capsys):
-    """The fingerprint hashes the RAW pairs, not the contracted stars:
-    the same input rerun at a different partitioning (different flush
-    boundaries, different local roots) must RESUME, not false-mismatch
-    -- that is the whole driver-loss scenario state_dir exists for."""
-    from readabilityimproved_spark.operators.graph import neardup_clusters
-
-    state = str(tmp_path / "state")
-    rows = [(i, i + 1) for i in range(80)] + [(200, 201)]
-    a = spark.createDataFrame(rows, "id_a long, id_b long").repartition(2)
-    # reversed orientation + different layout + different contract cap:
-    # same logical input
-    b = spark.createDataFrame(
-        [(y, x) for x, y in rows], "id_a long, id_b long"
-    ).repartition(9)
-    want = {(i, 0) for i in range(81)} | {(200, 200), (201, 200)}
-
-    got = {
-        tuple(r)
-        for r in neardup_clusters(
-            a, checkpoint_interval=1, state_dir=state
-        ).collect()
-    }
-    assert got == want
-    capsys.readouterr()
-    got2 = {
-        tuple(r)
-        for r in neardup_clusters(
-            b, checkpoint_interval=1, state_dir=state, contract_node_cap=5
-        ).collect()
-    }
-    assert got2 == want
-    out = capsys.readouterr().out
-    assert "DIFFERENT pairs input" not in out, out
-
-
-def test_clusters_legacy_marker_resumes_with_warning(spark, tmp_path, capsys):
-    """Pre-round-6 state markers carry no fingerprint column: they must
-    still resume (back-compat), but loudly marked UNVERIFIED."""
-    from readabilityimproved_spark.operators.graph import neardup_clusters
-
-    state = str(tmp_path / "state")
-    kw = dict(pre_contract=False, checkpoint_interval=1, state_dir=state)
-    chain = spark.createDataFrame(
-        [(i, i + 1) for i in range(60)], "id_a long, id_b long"
-    ).repartition(4)
-    neardup_clusters(chain, **kw).collect()
-
-    # strip the fingerprint column, emulating a round-5 marker table
-    rows = [
-        (r["round"], r["label_sum"])
-        for r in spark.read.parquet(f"{state}/state").collect()
-    ]
-    spark.createDataFrame(
-        rows, "round int, label_sum string"
-    ).write.mode("overwrite").parquet(f"{state}/state")
-    capsys.readouterr()
-
-    got = {tuple(r) for r in neardup_clusters(chain, **kw).collect()}
-    assert got == {(i, 0) for i in range(61)}
-    assert "UNVERIFIED" in capsys.readouterr().out
-
-
-def test_clusters_reliable_mode_cap_raise_leaves_no_cached_residue(
-    spark, tmp_path
-):
-    """Any exit path -- here the round-cap raise -- must clear the
-    persisted intermediate rounds (the finally-scoped unpersist), not
-    just the convergence path."""
-    from readabilityimproved_spark.operators.graph import neardup_clusters
-
-    chain = spark.createDataFrame(
-        [(i, i + 1) for i in range(500)], "id_a long, id_b long"
-    ).repartition(8)
-    with pytest.raises(RuntimeError, match="converge"):
-        neardup_clusters(
-            chain, pre_contract=False, max_rounds=3,
-            checkpoint_dir=str(tmp_path / "ck"), checkpoint_interval=2,
-        )
-    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
-
-
-# ---------------------------------------------------------------------------
 # pipeline metrics rollup: loud failures, legacy-schema tolerance
 # ---------------------------------------------------------------------------
 
 def test_metrics_rollup_failure_is_logged_not_swallowed(
-    spark, tmp_path, monkeypatch, capsys
+    spark, tmp_path, monkeypatch, caplog
 ):
     """A failing metrics write (permissions, schema clash, disk) must
     leave a diagnosable trace while the run itself still succeeds --
@@ -300,12 +135,12 @@ def test_metrics_rollup_failure_is_logged_not_swallowed(
         return orig(self, path, *a, **kw)
 
     monkeypatch.setattr(DataFrameWriter, "parquet", failing)
+    caplog.set_level(logging.WARNING, logger=P.__name__)
     stats = P.run_extraction(
         spark, corpus, out, num_parts=8, waves=2, resume=False
     )
     assert stats["docs"] == 40
-    printed = capsys.readouterr().out
-    assert "metrics rollup" in printed and "injected" in printed
+    assert "metrics rollup" in caplog.text and "injected" in caplog.text
     # lineage landed; only the derived rollup is missing
     assert spark.read.parquet(os.path.join(out, "lineage")).count() > 0
     assert not os.path.exists(os.path.join(out, "metrics"))
@@ -347,59 +182,38 @@ def test_metrics_rollup_tolerates_pre_wave_lineage(spark, tmp_path):
     assert sum(r["docs"] for r in real) == 40
 
 
-def test_clusters_corrupt_marker_read_preserves_snapshots(
-    spark, tmp_path, capsys
-):
-    """A marker READ failure is not proof of corruption -- an object
-    store throttle lands in the same except path -- so resume must warn
-    and start fresh WITHOUT deleting the (possibly valid) snapshots.
-    Only a verified fingerprint mismatch may clear the directory."""
-    from readabilityimproved_spark.operators.graph import neardup_clusters
-
-    state = tmp_path / "state"
-    chain = spark.createDataFrame(
-        [(i, i + 1) for i in range(60)], "id_a long, id_b long"
-    )
-    want = {(i, 0) for i in range(61)}
-    kw = dict(checkpoint_interval=1, state_dir=str(state))
-    assert {tuple(r) for r in neardup_clusters(chain, **kw).collect()} == want
-    snaps_before = sorted(
-        p.name for p in state.iterdir() if p.name.startswith("labels_r")
-    )
-    assert snaps_before
-    # corrupt the marker table: a garbage file makes the parquet read
-    # raise a non-AnalysisException error
-    for f in (state / "state").iterdir():
-        if f.name.endswith(".parquet"):
-            f.write_bytes(b"not a parquet file")
-    capsys.readouterr()
-    got = {tuple(r) for r in neardup_clusters(chain, **kw).collect()}
-    assert got == want  # fresh recompute is still correct
-    out = capsys.readouterr().out
-    assert "WITHOUT clearing" in out, out
-    snaps_after = sorted(
-        p.name for p in state.iterdir() if p.name.startswith("labels_r")
-    )
-    # the label snapshots survived the unreadable-marker episode
-    assert set(snaps_before) <= set(snaps_after), (snaps_before, snaps_after)
-
-
-def test_clusters_contract_cap_validated_eagerly(spark):
-    """contract_node_cap < 2 must raise on the DRIVER before any job
-    launches, like every other argument check -- not as an opaque
+def test_clusters_contract_cap_validated_eagerly(spark, monkeypatch):
+    """A contraction node cap < 2 must raise on the DRIVER before any
+    job launches, like every other argument check -- not as an opaque
     executor-side PythonException mid-job."""
-    import pytest
+    from pyspark.sql.classic.dataframe import DataFrame
 
+    from readabilityimproved_spark.operators import graph as G
     from readabilityimproved_spark.operators.graph import (
         _contract_local,
         neardup_clusters,
     )
 
     pairs = spark.createDataFrame([(1, 2)], "id_a long, id_b long")
-    with pytest.raises(ValueError, match="contract_node_cap"):
-        neardup_clusters(pairs, contract_node_cap=1)
     with pytest.raises(ValueError, match="max_nodes"):
         _contract_local(pairs, "id_a", "id_b", max_nodes=1)
+
+    actions = {"n": 0}
+    orig_collect = DataFrame.collect
+
+    def counting(self):
+        actions["n"] += 1
+        return orig_collect(self)
+
+    monkeypatch.setattr(DataFrame, "collect", counting)
+    monkeypatch.setattr(G, "_CONTRACT_NODE_CAP", 1)
+    with pytest.raises(ValueError, match="max_nodes"):
+        neardup_clusters(pairs)
+    assert actions["n"] == 0, "the cap check ran after a job launched"
+
+
+# ---------------------------------------------------------------------------
+# temporal joins    assert sum(r["docs"] for r in real) == 40
 
 
 # ---------------------------------------------------------------------------
