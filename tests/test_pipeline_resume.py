@@ -1,0 +1,245 @@
+"""Pins for the wave pipeline's resume plan, its driver-side fixed cost
+and its lineage/metrics contract (plans/pipeline.py)."""
+
+import logging
+import os
+
+import pytest
+from pyspark.sql import functions as F
+
+import readabilityimproved_spark.plans.pipeline as P
+from readabilityimproved_spark.sources.synth import write_synth_corpus
+
+N_DOCS = 60
+
+
+@pytest.fixture(scope="module")
+def corpus(spark, tmp_path_factory):
+    path = str(tmp_path_factory.mktemp("resume") / "corpus")
+    write_synth_corpus(spark, N_DOCS, path)
+    return path
+
+
+@pytest.fixture(scope="module")
+def uninterrupted(spark, corpus, tmp_path_factory):
+    out = str(tmp_path_factory.mktemp("resume") / "full")
+    P.run_extraction(spark, corpus, out, waves=4, resume=False)
+    return _extracted(spark, out)
+
+
+def _extracted(spark, out):
+    rows = spark.read.parquet(os.path.join(out, "extracted")).collect()
+    return {r["doc_id"]: (r["status"], r["spans"]) for r in rows}
+
+
+def _lineage(spark, out):
+    return spark.read.parquet(os.path.join(out, "lineage"))
+
+
+def _assert_each_part_once(spark, corpus, out):
+    rows = _lineage(spark, out).select("part", "status").collect()
+    assert sorted(r["part"] for r in rows) == sorted(_visible_sizes(corpus))
+    assert {r["status"] for r in rows} == {"ok"}
+
+
+def test_resume_finishes_the_original_wave_plan(
+    spark, corpus, uninterrupted, tmp_path
+):
+    """A job killed after wave 2 of 4 resumes with waves 2 and 3 of the
+    SAME plan: two waves run, not a re-split of the remaining parts into
+    four new ones, and lineage keeps the original wave indices."""
+    out = str(tmp_path / "out")
+    first = P.run_extraction(
+        spark, corpus, out, waves=4, resume=False, fail_after_wave=2
+    )
+    assert first.get("failed_injected") and first["waves_run"] == 2
+    second = P.run_extraction(spark, corpus, out, waves=4, resume=True)
+    assert second["waves_run"] == 2
+
+    lineage = _lineage(spark, out).collect()
+    waves_by_attempt = {}
+    for r in lineage:
+        waves_by_attempt.setdefault(r["attempt"], set()).add(r["wave"])
+    assert len(waves_by_attempt) == 2
+    killed, resumed = (waves_by_attempt[a] for a in sorted(waves_by_attempt))
+    assert killed == {0, 1}
+    assert resumed == {2, 3}
+    _assert_each_part_once(spark, corpus, out)
+    assert first["docs"] + second["docs"] == N_DOCS
+    assert _extracted(spark, out) == uninterrupted
+
+    # one file per part directory, as in an uninterrupted run
+    ext = os.path.join(out, "extracted")
+    for d in os.listdir(ext):
+        if d.startswith("part="):
+            files = [
+                f for f in os.listdir(os.path.join(ext, d))
+                if f.endswith(".parquet")
+            ]
+            assert len(files) == 1, (d, files)
+
+
+def test_resume_with_other_wave_count_runs_each_unfinished_part_once(
+    spark, corpus, uninterrupted, tmp_path
+):
+    """Resuming under a different ``waves`` plans differently, but the
+    done parts are still dropped: every unfinished part is extracted
+    exactly once and the output equals an uninterrupted run."""
+    out = str(tmp_path / "out")
+    P.run_extraction(
+        spark, corpus, out, waves=4, resume=False, fail_after_wave=1
+    )
+    done = {r["part"] for r in _lineage(spark, out).collect()}
+    second = P.run_extraction(spark, corpus, out, waves=3, resume=True)
+    assert second["parts_skipped"] == len(done)
+    _assert_each_part_once(spark, corpus, out)
+    assert _extracted(spark, out) == uninterrupted
+
+
+def test_kill_and_resume_runs_no_python_worker_outside_the_kernel(
+    spark, corpus, tmp_path, monkeypatch
+):
+    """Lineage rows reach the JVM as Arrow data: a kill-and-resume run
+    never calls SparkContext.parallelize (which would start Python
+    workers to write a handful of rows). The lineage schema, its
+    per-part counts and the metrics/job_summary totals are unchanged."""
+    from pyspark import SparkContext
+
+    calls = {"parallelize": 0}
+    orig = SparkContext.parallelize
+
+    def counting(self, *a, **kw):
+        calls["parallelize"] += 1
+        return orig(self, *a, **kw)
+
+    monkeypatch.setattr(SparkContext, "parallelize", counting)
+    out = str(tmp_path / "out")
+    first = P.run_extraction(
+        spark, corpus, out, waves=4, resume=False, fail_after_wave=2
+    )
+    second = P.run_extraction(spark, corpus, out, waves=4, resume=True)
+    monkeypatch.setattr(SparkContext, "parallelize", orig)
+    assert calls["parallelize"] == 0, calls
+
+    lineage = _lineage(spark, out)
+    assert [(f.name, f.dataType.simpleString()) for f in lineage.schema] == [
+        ("part", "int"),
+        ("doc_count", "bigint"),
+        ("span_count", "bigint"),
+        ("image_count", "bigint"),
+        ("error_count", "bigint"),
+        ("status", "string"),
+        ("attempt", "int"),
+        ("wave", "int"),
+        ("wall_ms", "int"),
+    ]
+
+    extracted = spark.read.parquet(os.path.join(out, "extracted"))
+    direct = {
+        r["part"]: (r["d"], r["s"], r["i"], r["e"])
+        for r in extracted.groupBy("part")
+        .agg(
+            F.count(F.lit(1)).alias("d"),
+            F.sum("n_spans").alias("s"),
+            F.sum("n_images").alias("i"),
+            F.sum(F.when(F.col("status") != "ok", 1).otherwise(0)).alias("e"),
+        )
+        .collect()
+    }
+    recorded = {
+        r["part"]: (
+            r["doc_count"], r["span_count"], r["image_count"], r["error_count"]
+        )
+        for r in lineage.collect()
+        if r["doc_count"] > 0
+    }
+    assert recorded == direct
+
+    by_attempt = [first, second]
+    metrics = sorted(
+        spark.read.parquet(os.path.join(out, "metrics")).collect(),
+        key=lambda r: r["attempt"],
+    )
+    summary = P.job_summary(spark, out).collect()
+    assert [r["attempt"] for r in metrics] == [r["attempt"] for r in summary]
+    for stats, m, s in zip(by_attempt, metrics, summary):
+        assert m["docs"] == s["docs"] == stats["docs"]
+        assert s["waves"] == stats["waves_run"]
+        assert m["wall_ms_sum"] == s["wall_ms_sum"]
+    assert sum(r["docs"] for r in summary) == N_DOCS
+
+
+def test_unreadable_lineage_is_logged_then_redone(
+    spark, corpus, tmp_path, caplog
+):
+    """A corrupt lineage still falls back to "nothing done" (every part
+    is redone), but the fallback is logged with the lineage path and
+    the exception type instead of passing silently."""
+    out = tmp_path / "out"
+    lineage = out / "lineage"
+    lineage.mkdir(parents=True)
+    (lineage / "part-x.parquet").write_bytes(b"not a parquet file")
+    caplog.set_level(logging.WARNING, logger=P.__name__)
+    stats = P.run_extraction(spark, corpus, str(out), waves=2, resume=True)
+    assert stats["parts_skipped"] == 0 and stats["docs"] == N_DOCS
+    warnings = [
+        r.getMessage() for r in caplog.records
+        if r.levelno == logging.WARNING
+        and r.getMessage().startswith("lineage at ")
+    ]
+    assert warnings, caplog.text
+    assert str(lineage) in warnings[0]
+    with pytest.raises(Exception) as raised:
+        spark.read.parquet(str(lineage / "part-x.parquet")).collect()
+    assert f"({type(raised.value).__name__}:" in warnings[0], warnings[0]
+
+
+def _visible_sizes(root):
+    """Bytes of the visible files in each ``part=<int>`` directory."""
+    sizes = {}
+    for d in os.listdir(root):
+        if not (d.startswith("part=") and d[5:].isdigit()):
+            continue
+        for f in os.listdir(os.path.join(root, d)):
+            if not f.startswith((".", "_")):
+                part = int(d[5:])
+                sizes[part] = sizes.get(part, 0) + os.path.getsize(
+                    os.path.join(root, d, f)
+                )
+    return sizes
+
+
+def test_part_sizes_equal_visible_data_files(spark, corpus, tmp_path):
+    """The size map is the summed size of the data files in each part=N
+    directory (checksum .crc files excluded), also under a root whose
+    name contains glob metacharacters."""
+    sizes, unparsed = P._fs_part_sizes(spark, corpus)
+    assert unparsed == set()
+    assert sizes and sizes == _visible_sizes(corpus)
+
+    odd = str(tmp_path / "c[1]{a,b}*?")
+    spark.read.parquet(corpus).write.partitionBy("part").parquet(odd)
+    assert _visible_sizes(odd)
+    assert P._fs_part_sizes(spark, odd) == (_visible_sizes(odd), set())
+
+    assert P._fs_part_sizes(spark, str(tmp_path / "missing")) == ({}, set())
+    flat = str(tmp_path / "flat")
+    spark.read.parquet(corpus).write.parquet(flat)
+    assert P._fs_part_sizes(spark, flat) == ({}, set())
+
+
+def test_part_sizes_report_null_part_directory(spark, corpus, tmp_path):
+    broken = str(tmp_path / "broken")
+    (
+        spark.read.parquet(corpus)
+        .withColumn(
+            "part",
+            F.when(F.col("part") % 7 == 0, F.lit(None)).otherwise(F.col("part")),
+        )
+        .write.partitionBy("part")
+        .parquet(broken)
+    )
+    sizes, unparsed = P._fs_part_sizes(spark, broken)
+    assert unparsed == {"part=__HIVE_DEFAULT_PARTITION__"}
+    assert sizes == _visible_sizes(broken)
+    assert sizes and all(k % 7 for k in sizes)
