@@ -1,8 +1,13 @@
-"""spark-submit entry point.
+"""Command-line entry point: ``synth``, ``extract`` and ``stream``.
 
-    spark-submit --py-files engine.zip -m ... cli.py synth   --n 100000 --out /data/corpus
-    spark-submit --py-files engine.zip ...    cli.py extract --input /data/corpus --output /data/out
-    python -m readabilityimproved_spark.cli extract --input ... --output ...
+    python -m readabilityimproved_spark.cli synth   --n 100000 --out /data/corpus
+    python -m readabilityimproved_spark.cli extract --input /data/corpus --output /data/out
+
+Under spark-submit, ship the package with ``--py-files`` and submit
+``tools/submit_job.py``, which runs the extraction job. This module uses
+relative imports, so it cannot be the job file itself:
+
+    spark-submit --py-files engine.zip tools/submit_job.py /data/corpus /data/out
 
 The extraction job resumes from the lineage table by default; pass
 --no-resume to reprocess everything.

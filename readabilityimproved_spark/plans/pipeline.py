@@ -1,5 +1,5 @@
-"""The end-to-end extraction job: scan -> resume filter -> salted
-repartition -> Arrow kernel -> extracted + lineage + metrics tables.
+"""The end-to-end extraction job: scan -> resume filter -> Arrow kernel
+-> extracted + lineage + metrics tables.
 
 Scale design (BASELINE.json north_rule — explicit partitioning, skew
 handling, checkpoint/resume):
@@ -29,13 +29,11 @@ handling, checkpoint/resume):
   capped at ``parallelism``, the committed re-read passes the schema
   it just wrote (no footer-inference job), and lineage rows reach the
   JVM as one Arrow table written as one file (no Python worker);
-* **skew**: extraction cost is proportional to document size; ~1% giant
-  documents (100x spans) would straggle a hash partition. Giants are
-  split out by a cheap ``size(spans)`` predicate and round-robin
-  repartitioned independently of the hash-partitioned normals (salting
-  by cost class), then the two extracted streams union — no shuffle of
-  the union itself, and the slowest task is bounded by one giant doc,
-  not a hash bucket of them;
+* **skew**: extraction cost is proportional to document bytes, so the
+  scan's byte-based file splits (``spark.sql.files.maxPartitionBytes``)
+  spread ~1% giant documents across tasks with no shuffle before the
+  kernel (plan: Scan -> MapInPandas); the only exchange is the writer's
+  ``part`` hash;
 * everything relational (resume anti-filter, metrics rollup) is plain
   DataFrame code — Catalyst/AQE handle pushdown and small-side
   broadcast; the only Python worker runs the Arrow kernel.
@@ -60,9 +58,6 @@ from ..operators.extract import extract_spans
 
 log = logging.getLogger(__name__)
 
-#: documents whose span count exceeds this go down the giant-doc path
-GIANT_SPAN_THRESHOLD = 200
-
 #: one row per part per committed wave (see run_extraction)
 LINEAGE_SCHEMA = (
     "part int, doc_count bigint, span_count bigint, image_count bigint,"
@@ -78,46 +73,6 @@ def with_part(df: DataFrame, num_parts: int) -> DataFrame:
         return df
     return df.withColumn(
         "part", F.pmod(F.xxhash64(F.col("doc_id")), F.lit(num_parts)).cast("int")
-    )
-
-
-def salted_extract(
-    df: DataFrame,
-    parallelism: int,
-    ref_date: dt.datetime = DEFAULT_REF_DATE,
-    giant_threshold: int = GIANT_SPAN_THRESHOLD,
-    strategy: str = "bytes",
-) -> DataFrame:
-    """Skew-aware extraction.
-
-    strategy='bytes' (default, measured fastest and shuffle-free): rely
-    on byte-based file splits -- extraction cost is proportional to
-    bytes, so `spark.sql.files.maxPartitionBytes` spreads giant
-    documents across tasks with NO shuffle at all (plan: Scan ->
-    MapInPandas). Size the conf so corpus_bytes / maxPartitionBytes >=
-    ~3x total cores (plans.session sets a 128 MB default; bench uses
-    512 KB for its 24 MB corpus).
-
-    strategy='hash': explicit two-pool salting for adversarial layouts
-    (e.g. all giants physically clustered in one file): normals
-    hash-repartition on doc_id, giants round-robin across the full
-    parallelism, then the two extracted streams union.
-    """
-    if strategy == "bytes":
-        return extract_spans(df, ref_date=ref_date)
-    sized = df.withColumn("_n", F.size("spans"))
-    normal = (
-        sized.filter(F.col("_n") <= giant_threshold)
-        .drop("_n")
-        .repartition(parallelism, F.xxhash64("doc_id"))
-    )
-    giant = (
-        sized.filter(F.col("_n") > giant_threshold)
-        .drop("_n")
-        .repartition(parallelism)  # round-robin: giants spread evenly
-    )
-    return extract_spans(normal, ref_date=ref_date).unionByName(
-        extract_spans(giant, ref_date=ref_date)
     )
 
 
@@ -234,6 +189,47 @@ def plan_waves(
     return [sorted(w) for w in packed if w]
 
 
+def _read_lineage(spark: SparkSession, lineage_path: str) -> DataFrame:
+    """The lineage table, read with the declared LINEAGE_SCHEMA (no
+    footer-inference job). Back-compat: ``wave`` first appeared in the
+    round-4 lineage schema, and resuming an older output_dir appends
+    new-schema files next to wave-less ones. The declared schema reads
+    the missing column as null, which lands in wave -1."""
+    lineage = spark.read.schema(LINEAGE_SCHEMA).parquet(lineage_path)
+    return lineage.withColumn("wave", F.coalesce(F.col("wave"), F.lit(-1)))
+
+
+def _attempt_totals(lineage: DataFrame) -> DataFrame:
+    """One row per attempt: waves, parts, docs, spans, images, errors
+    and wall_ms_sum -- the rollup behind the metrics table and
+    job_summary.
+
+    ``wall_ms`` is stored per WAVE (repeated on every part row of the
+    wave), so it is counted ONCE per (attempt, wave, wall_ms) group;
+    summing it per row would inflate it by the parts-per-wave factor.
+    Grouping on ``wall_ms`` too is a no-op for rows with a wave and
+    keeps a multi-wave legacy attempt (all in wave -1) apart by its
+    per-wave walls -- two legacy waves that measured the exact same
+    wall merge, slightly undercounting, which beats the 2-3x undercount
+    of one max() over all waves."""
+    per_wave = lineage.groupBy("attempt", "wave", "wall_ms").agg(
+        F.countDistinct("part").alias("parts"),
+        F.sum("doc_count").alias("docs"),
+        F.sum("span_count").alias("spans"),
+        F.sum("image_count").alias("images"),
+        F.sum("error_count").alias("errors"),
+    )
+    return per_wave.groupBy("attempt").agg(
+        F.count(F.lit(1)).alias("waves"),
+        F.sum("parts").alias("parts"),
+        F.sum("docs").alias("docs"),
+        F.sum("spans").alias("spans"),
+        F.sum("images").alias("images"),
+        F.sum("errors").alias("errors"),
+        F.sum("wall_ms").alias("wall_ms_sum"),
+    )
+
+
 def completed_parts(spark: SparkSession, lineage_path: str) -> set[int]:
     # cheap existence check first (on the path's OWN filesystem): avoids a
     # logged AnalysisException stack on every fresh run
@@ -241,10 +237,9 @@ def completed_parts(spark: SparkSession, lineage_path: str) -> set[int]:
         return set()
     try:
         rows = (
-            spark.read.parquet(lineage_path)
+            _read_lineage(spark, lineage_path)
             .filter(F.col("status") == "ok")
             .select("part")
-            .distinct()
             .collect()
         )
         return {r["part"] for r in rows}
@@ -270,7 +265,6 @@ def run_extraction(
     parallelism: int | None = None,
     ref_date: dt.datetime = DEFAULT_REF_DATE,
     resume: bool = True,
-    strategy: str = "bytes",
     fail_after_wave: int | None = None,  # test hook for kill-and-resume
 ) -> dict:
     """Run (or resume) the full extraction job. Returns run stats."""
@@ -356,9 +350,7 @@ def run_extraction(
             # when the corpus was written by sources.synth
             wave_df = docs.filter(F.col("part").isin(wave_parts))
             t0 = time.time()
-            extracted = salted_extract(
-                wave_df, parallelism, ref_date=ref_date, strategy=strategy
-            )
+            extracted = extract_spans(wave_df, ref_date=ref_date)
             # hash the rows by part onto at most `parallelism` writer tasks:
             # each part lands in exactly one task, so each part directory
             # gets one file. Without this exchange every map task opens a
@@ -487,45 +479,12 @@ def run_extraction(
         else:
             spark.conf.set(overwrite_key, prev_mode)
 
-    # metrics rollup (declarative; AQE coalesces). wall_ms is stored
-    # per WAVE repeated on every part row, so it must be counted once
-    # per (attempt, wave) -- summing it per row would inflate
-    # wall_ms_sum by the parts-per-wave factor (the same discipline
-    # job_summary applies)
+    # metrics rollup (declarative; AQE coalesces)
     try:
-        # mergeSchema + wave backfill: resuming a pre-round-4 output_dir
-        # appends new-schema lineage next to wave-less legacy files, and
-        # a plain read infers from ONE footer -- the same back-compat
-        # treatment job_summary applies
-        lineage_all = spark.read.option("mergeSchema", "true").parquet(
-            lineage_path
-        )
-        if "wave" not in lineage_all.columns:
-            lineage_all = lineage_all.withColumn("wave", F.lit(-1))
-        else:
-            lineage_all = lineage_all.withColumn(
-                "wave", F.coalesce(F.col("wave"), F.lit(-1))
-            )
-        per_wave = (
-            lineage_all
-            .groupBy("attempt", "wave", "wall_ms")
-            .agg(
-                F.sum("doc_count").alias("docs"),
-                F.sum("span_count").alias("spans"),
-                F.sum("image_count").alias("images"),
-                F.sum("error_count").alias("errors"),
-                F.countDistinct("part").alias("parts"),
-            )
-        )
-        metrics = per_wave.groupBy("attempt").agg(
-            F.sum("docs").alias("docs"),
-            F.sum("spans").alias("spans"),
-            F.sum("images").alias("images"),
-            F.sum("errors").alias("errors"),
-            F.sum("wall_ms").alias("wall_ms_sum"),
-            F.sum("parts").alias("parts"),
-        )
-        metrics.write.mode("overwrite").parquet(metrics_path)
+        _attempt_totals(_read_lineage(spark, lineage_path)).select(
+            "attempt", "docs", "spans", "images", "errors", "wall_ms_sum",
+            "parts",
+        ).write.mode("overwrite").parquet(metrics_path)
     except Exception as exc:
         # the rollup is derived data -- lineage (already committed above)
         # stays the source of truth, so the run must not fail here; but a
@@ -548,49 +507,13 @@ def job_summary(
     completion fraction (resumable jobs report partial progress).
 
     Reads only the (tiny) lineage table -- never the extracted data --
-    so it is safe to run against a live job's output directory.
-    ``wall_ms`` is stored per WAVE (repeated on every part row of the
-    wave), so wave wall is counted ONCE per (attempt, wave).
-
-    Back-compat: ``wave`` first appeared in the round-4 lineage schema.
-    Resuming a pre-round-4 output_dir appends new-schema files next to
-    old ones, and a plain parquet read infers from ONE footer -- so the
-    read merges schemas and old rows (no wave) land in wave -1 instead
-    of raising or lumping under null. Legacy rows still separate into
-    waves by their distinct per-wave ``wall_ms`` values (wall_ms is
-    constant within a wave, so grouping on it too is a no-op for
-    new-schema rows and keeps a multi-wave legacy attempt from
-    collapsing into one max() -- two legacy waves that measured the
-    exact same wall merge, slightly undercounting, which beats the
-    2-3x undercount of max-of-all-waves)."""
-    lineage = spark.read.option("mergeSchema", "true").parquet(
-        os.path.join(output_dir, "lineage")
-    )
-    if "wave" not in lineage.columns:
-        lineage = lineage.withColumn("wave", F.lit(-1))
-    else:
-        lineage = lineage.withColumn(
-            "wave", F.coalesce(F.col("wave"), F.lit(-1))
-        )
-    per_wave = lineage.groupBy("attempt", "wave", "wall_ms").agg(
-        F.countDistinct("part").alias("parts_done"),
-        F.sum("doc_count").alias("docs"),
-        F.sum("span_count").alias("spans"),
-        F.sum("image_count").alias("images"),
-        F.sum("error_count").alias("errors"),
-        F.max("wall_ms").alias("wave_wall_ms"),
-    )
+    so it is safe to run against a live job's output directory. The
+    totals are the metrics table's (see _attempt_totals), with ``parts``
+    named ``parts_done``."""
+    lineage = _read_lineage(spark, os.path.join(output_dir, "lineage"))
     agg = (
-        per_wave.groupBy("attempt")
-        .agg(
-            F.count(F.lit(1)).alias("waves"),
-            F.sum("parts_done").alias("parts_done"),
-            F.sum("docs").alias("docs"),
-            F.sum("spans").alias("spans"),
-            F.sum("images").alias("images"),
-            F.sum("errors").alias("errors"),
-            F.sum("wave_wall_ms").alias("wall_ms_sum"),
-        )
+        _attempt_totals(lineage)
+        .withColumnRenamed("parts", "parts_done")
         .withColumn(
             "docs_per_sec",
             F.round(

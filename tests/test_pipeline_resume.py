@@ -243,3 +243,107 @@ def test_part_sizes_report_null_part_directory(spark, corpus, tmp_path):
     assert unparsed == {"part=__HIVE_DEFAULT_PARTITION__"}
     assert sizes == _visible_sizes(broken)
     assert sizes and all(k % 7 for k in sizes)
+
+
+def _jobs_run(spark, group, fn):
+    """Number of Spark jobs ``fn()`` starts, counted through a job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.fixture(scope="module")
+def resumed_twice(spark, corpus, tmp_path_factory):
+    """Kill after wave 2 of 4, resume, append a wave-less legacy attempt
+    (id 111, two waves of wall 800 and 900, non-zero errors), then
+    resume once more with every part done. Returns the output dir and
+    the number of Spark jobs that last resume ran."""
+    out = str(tmp_path_factory.mktemp("rollup") / "out")
+    P.run_extraction(
+        spark, corpus, out, waves=4, resume=False, fail_after_wave=2
+    )
+    P.run_extraction(spark, corpus, out, waves=4, resume=True)
+    spark.createDataFrame(
+        [
+            (90, 7, 30, 3, 1, "ok", 111, 800),
+            (91, 5, 20, 2, 2, "ok", 111, 900),
+        ],
+        "part int, doc_count bigint, span_count bigint, image_count bigint,"
+        " error_count bigint, status string, attempt int, wall_ms int",
+    ).write.mode("append").parquet(os.path.join(out, "lineage"))
+    jobs = _jobs_run(
+        spark, "resume-all-done",
+        lambda: P.run_extraction(spark, corpus, out, waves=4, resume=True),
+    )
+    return out, jobs
+
+
+def test_lineage_reads_run_one_job(spark, corpus, resumed_twice):
+    """``completed_parts`` reads lineage with its declared schema in one
+    job (no footer inference, no shuffle distinct), and a resume with
+    every part done runs at most 7 jobs."""
+    out, resume_jobs = resumed_twice
+    lineage = os.path.join(out, "lineage")
+    done = set()
+    jobs = _jobs_run(
+        spark, "completed-parts",
+        lambda: done.update(P.completed_parts(spark, lineage)),
+    )
+    assert done == set(_visible_sizes(corpus)) | {90, 91}
+    assert jobs == 1
+    assert resume_jobs <= 7
+
+
+def _by_rank(rows, wall_fields):
+    """Rows as dicts with attempt ids replaced by their rank; the
+    wall-dependent fields are dropped except for the legacy attempt
+    (rank 0), whose wall_ms_sum is fixed by the fixture."""
+    rank = {a: i for i, a in enumerate(sorted(r["attempt"] for r in rows))}
+    out = []
+    for r in sorted(rows, key=lambda r: r["attempt"]):
+        d = {**r.asDict(), "attempt": rank[r["attempt"]]}
+        for k in wall_fields:
+            if not (d["attempt"] == 0 and k == "wall_ms_sum"):
+                del d[k]
+        out.append(d)
+    return out
+
+
+def test_metrics_and_job_summary_rows_are_pinned(spark, resumed_twice):
+    """The metrics table and job_summary over a killed, resumed run plus a
+    wave-less legacy attempt: rows and schemas as the rollup has always
+    produced them."""
+    out, _ = resumed_twice
+    metrics = spark.read.parquet(os.path.join(out, "metrics"))
+    assert metrics.schema.simpleString() == (
+        "struct<attempt:int,docs:bigint,spans:bigint,images:bigint,"
+        "errors:bigint,wall_ms_sum:bigint,parts:bigint>"
+    )
+    assert _by_rank(metrics.collect(), ["wall_ms_sum"]) == [
+        dict(attempt=0, docs=12, spans=50, images=5, errors=3,
+             wall_ms_sum=1700, parts=2),
+        dict(attempt=1, docs=30, spans=270, images=53, errors=0, parts=26),
+        dict(attempt=2, docs=30, spans=287, images=56, errors=0, parts=26),
+    ]
+
+    summary = P.job_summary(spark, out, num_parts=64)
+    assert summary.schema.simpleString() == (
+        "struct<attempt:int,waves:bigint,parts_done:bigint,docs:bigint,"
+        "spans:bigint,images:bigint,errors:bigint,wall_ms_sum:bigint,"
+        "docs_per_sec:double,completion:double>"
+    )
+    rows = summary.collect()
+    assert [r["attempt"] for r in rows] == sorted(r["attempt"] for r in rows)
+    assert _by_rank(rows, ["wall_ms_sum", "docs_per_sec"]) == [
+        dict(attempt=0, waves=2, parts_done=2, docs=12, spans=50, images=5,
+             errors=3, wall_ms_sum=1700, completion=0.0313),
+        dict(attempt=1, waves=2, parts_done=26, docs=30, spans=270,
+             images=53, errors=0, completion=0.4063),
+        dict(attempt=2, waves=2, parts_done=26, docs=30, spans=287,
+             images=56, errors=0, completion=0.4063),
+    ]

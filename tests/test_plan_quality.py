@@ -8,7 +8,6 @@ from pyspark.sql import functions as F
 
 from readabilityimproved_spark.operators.extract import extract_spans
 from readabilityimproved_spark.operators.similarity import cosine_topk
-from readabilityimproved_spark.plans.pipeline import salted_extract
 from readabilityimproved_spark.sources.synth import synth_corpus_df
 
 
@@ -21,21 +20,38 @@ def plan_of(df) -> str:
 def test_extraction_path_has_no_shuffle(spark, tmp_path):
     path = str(tmp_path / "c")
     synth_corpus_df(spark, 20, 2).write.parquet(path)
-    out = salted_extract(spark.read.parquet(path), parallelism=4)  # bytes mode
+    out = extract_spans(spark.read.parquet(path))
     plan = plan_of(out)
     assert "Exchange" not in plan, plan
     assert "MapInPandas" in plan
 
 
-def test_hash_strategy_spreads_giants(spark, tmp_path):
-    path = str(tmp_path / "c2")
-    synth_corpus_df(spark, 20, 2).write.parquet(path)
-    out = salted_extract(
-        spark.read.parquet(path), parallelism=4, strategy="hash"
-    )
-    plan = plan_of(out)
-    assert "Exchange" in plan  # the explicit salting shuffle
-    assert out.count() == 20
+def test_wave_write_has_one_part_exchange(spark, tmp_path, monkeypatch):
+    """A wave's extracted write shuffles once, hashing rows by ``part``
+    onto the writer tasks; the scan -> kernel path before it has no
+    exchange."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from readabilityimproved_spark.plans.pipeline import run_extraction
+    from readabilityimproved_spark.sources.synth import write_synth_corpus
+
+    corpus = str(tmp_path / "corpus")
+    write_synth_corpus(spark, 20, corpus)
+    plans = []
+    orig = DataFrameWriter.parquet
+
+    def capturing(self, path, *a, **kw):
+        if path.rstrip("/").endswith("/extracted"):
+            plans.append(plan_of(self._df))
+        return orig(self, path, *a, **kw)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", capturing)
+    run_extraction(spark, corpus, str(tmp_path / "out"), waves=2, resume=False)
+    assert len(plans) == 2
+    for plan in plans:
+        assert plan.count("Exchange (") == 1, plan
+        assert "hashpartitioning(part#" in plan, plan
+        assert "MapInPandas" in plan, plan
 
 
 def test_flagship_scan_prunes_columns(spark):
