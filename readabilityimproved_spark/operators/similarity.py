@@ -8,17 +8,27 @@
                         leading dimensions; top-k within the query's
                         bucket only. Recall < 1 by design; at 10^12 rows
                         the bucket join replaces the full scan.
+  * ann_multiprobe_topk -- hyperplane LSH that also probes every
+                        hamming-1 neighbor of the query's bucket.
   * kmeans_centroids / ivf_topk -- deterministic sampled Lloyd's k-means
                         (exact integer arithmetic, DuckDB-reproducible)
                         feeding IVF cluster-probed search.
+  * build_ivf_index / ivf_topk_from_index -- the same IVF search with the
+                        centroids and the cluster-partitioned corpus
+                        persisted once, then probed with a
+                        partition-pruned scan per query batch.
   * embedding_neardup_pairs -- banded multi-table hyperplane LSH
                         (4 x 16-bit default) with a per-bucket size cap
                         bounding the self-join.
 
+Every top-k operator is a candidate-side build plus one ``_search``
+(broadcast queries, drop self-matches, rank per query), and every
+similarity is the one rounded cosine ``_cosine``.
+
 Determinism across engines (the DuckDB oracle must hash-match): floats
 are scaled to integers with floor(x*1000 + 0.5) before the dot product,
 so the sum is exact in both engines; the final cosine is rounded to 6dp
-and ties break on vec_id.
+and ties break on the candidate id.
 """
 
 from __future__ import annotations
@@ -33,9 +43,46 @@ _DOT = (
 _NORM2 = "aggregate(transform({a}, x -> x * x), 0L, (acc, v) -> acc + v)"
 
 
-def _with_scaled(df: DataFrame, col: str = "embedding") -> DataFrame:
-    return df.withColumn("vec", F.expr(_SCALED.format(col=col))).withColumn(
-        "norm2", F.expr(_NORM2.format(a="vec"))
+def _vectors(
+    df: DataFrame, id_col: str, emb_col: str, id_name: str, prefix: str, *carry
+) -> DataFrame:
+    """``(id_name, *carry, {prefix}vec, {prefix}norm)``: the embedding
+    scaled to integers and its exact squared norm."""
+    vec = f"{prefix}vec"
+    return df.select(
+        F.col(id_col).alias(id_name), *carry, F.expr(_SCALED.format(col=emb_col)).alias(vec)
+    ).withColumn(f"{prefix}norm", F.expr(_NORM2.format(a=vec)))
+
+
+def _cosine(a: str, b: str) -> F.Column:
+    """Cosine of ``{a}vec`` and ``{b}vec`` rounded to 6dp: the exact
+    integer dot product over correctly-rounded square roots of the exact
+    norms, so Spark and DuckDB agree bit for bit."""
+    dot = F.expr(_DOT.format(a=f"{a}vec", b=f"{b}vec"))
+    return F.round(
+        dot
+        / (F.sqrt(F.col(f"{a}norm").cast("double")) * F.sqrt(F.col(f"{b}norm").cast("double"))),
+        6,
+    )
+
+
+def _search(corpus: DataFrame, queries: DataFrame, k: int, on: str | None = None) -> DataFrame:
+    """Top-k candidates per query: ``(query_id, cand_id, cosine, rank)``.
+
+    ``corpus`` is ``(cand_id, evec, enorm, ...)`` and ``queries`` is
+    ``(query_id, qvec, qnorm, ...)``. The query side is broadcast (small
+    by construction) and crossJoined with the corpus, or joined on the
+    ``on`` column both sides carry, so the scan side never shuffles until
+    the per-query top-k, which AQE coalesces. Self-matches are dropped;
+    ranks order by (cosine desc, cand_id asc)."""
+    q = F.broadcast(queries)
+    pairs = corpus.crossJoin(q) if on is None else corpus.join(q, on)
+    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("cand_id").asc())
+    return (
+        pairs.filter(F.col("cand_id") != F.col("query_id"))
+        .select("query_id", "cand_id", _cosine("q", "e").alias("cosine"))
+        .withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
     )
 
 
@@ -52,36 +99,11 @@ def cosine_topk(
     is embarrassingly parallel -- no shuffle until the final per-query
     top-k, which AQE coalesces.
     """
-    corpus = _with_scaled(
-        embeddings.select(F.col(id_col).alias("cand_id"), F.col(emb_col))
-    ).select("cand_id", F.col("vec").alias("cvec"), F.col("norm2").alias("cnorm"))
-    queries = _with_scaled(
-        embeddings.filter(F.col(id_col) < num_queries).select(
-            F.col(id_col).alias("query_id"), F.col(emb_col)
-        )
-    ).select("query_id", F.col("vec").alias("qvec"), F.col("norm2").alias("qnorm"))
-
-    scored = (
-        corpus.crossJoin(F.broadcast(queries))
-        .filter(F.col("cand_id") != F.col("query_id"))
-        .withColumn("dot", F.expr(_DOT.format(a="qvec", b="cvec")))
-        .withColumn(
-            "cosine",
-            F.round(
-                F.col("dot")
-                / (F.sqrt(F.col("qnorm").cast("double")) * F.sqrt(F.col("cnorm").cast("double"))),
-                6,
-            ),
-        )
+    corpus = _vectors(embeddings, id_col, emb_col, "cand_id", "e")
+    queries = _vectors(
+        embeddings.filter(F.col(id_col) < num_queries), id_col, emb_col, "query_id", "q"
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("cand_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "cand_id", "cosine", "rank")
-    )
+    return _search(corpus, queries, k)
 
 
 def sign_bucket(emb_col: str, bits: int = 8) -> F.Column:
@@ -102,37 +124,12 @@ def ann_bucketed_topk(
     emb_col: str = "embedding",
 ) -> DataFrame:
     """Approximate top-k: candidates restricted to the query's sign bucket."""
-    bucketed = embeddings.withColumn("bucket", sign_bucket(emb_col, bits))
-    corpus = _with_scaled(
-        bucketed.select(F.col(id_col).alias("cand_id"), emb_col, "bucket")
-    ).select("cand_id", "bucket", F.col("vec").alias("cvec"), F.col("norm2").alias("cnorm"))
-    queries = _with_scaled(
-        bucketed.filter(F.col(id_col) < num_queries).select(
-            F.col(id_col).alias("query_id"), emb_col, "bucket"
-        )
-    ).select("query_id", "bucket", F.col("vec").alias("qvec"), F.col("norm2").alias("qnorm"))
-
-    scored = (
-        corpus.join(F.broadcast(queries), "bucket")
-        .filter(F.col("cand_id") != F.col("query_id"))
-        .withColumn("dot", F.expr(_DOT.format(a="qvec", b="cvec")))
-        .withColumn(
-            "cosine",
-            F.round(
-                F.col("dot")
-                / (F.sqrt(F.col("qnorm").cast("double")) * F.sqrt(F.col("cnorm").cast("double"))),
-                6,
-            ),
-        )
+    bucket = sign_bucket(emb_col, bits).alias("bucket")
+    corpus = _vectors(embeddings, id_col, emb_col, "cand_id", "e", bucket)
+    queries = _vectors(
+        embeddings.filter(F.col(id_col) < num_queries), id_col, emb_col, "query_id", "q", bucket
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("cand_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "cand_id", "cosine", "rank")
-    )
+    return _search(corpus, queries, k, "bucket")
 
 
 def kmeans_centroids(
@@ -159,10 +156,9 @@ def kmeans_centroids(
       correctly-rounded-double arithmetic => Spark and the DuckDB oracle
       produce identical centroids, assignments and top-k.
     """
-    scaled = _with_scaled(
-        embeddings.select(F.col(id_col).alias("vid"), F.col(emb_col))
-    ).select("vid", "vec", "norm2")
-    sample = scaled.filter(F.col("vid") % sample_mod == 0)
+    sample = _vectors(embeddings, id_col, emb_col, "vid", "").filter(
+        F.col("vid") % sample_mod == 0
+    )
     # init = the num_centroids smallest sample vids. orderBy+limit plans
     # as TakeOrderedAndProject (distributed per-partition top-k, then a
     # k-row merge on the driver) -- a row_number over a global window
@@ -178,29 +174,7 @@ def kmeans_centroids(
     )
     for _ in range(iters):
         cent_n = cent.withColumn("cnorm", F.expr(_NORM2.format(a="cvec")))
-        sims = (
-            sample.crossJoin(F.broadcast(cent_n))
-            .withColumn("cdot", F.expr(_DOT.format(a="vec", b="cvec")))
-            .withColumn(
-                "csim",
-                F.round(
-                    F.col("cdot")
-                    / (
-                        F.sqrt(F.col("norm2").cast("double"))
-                        * F.sqrt(F.col("cnorm").cast("double"))
-                    ),
-                    6,
-                ),
-            )
-        )
-        wv = Window.partitionBy("vid").orderBy(
-            F.col("csim").desc(), F.col("cent_id").asc()
-        )
-        asg = (
-            sims.withColumn("r", F.row_number().over(wv))
-            .filter(F.col("r") == 1)
-            .select("vid", "cent_id")
-        )
+        asg = _nearest_centroids(sample, cent_n, 1, "cent_id")
         means = (
             asg.join(sample, "vid")
             .select("cent_id", F.posexplode("vec").alias("dim", "x"))
@@ -224,31 +198,25 @@ def kmeans_centroids(
     return cent.withColumn("cnorm", F.expr(_NORM2.format(a="cvec")))
 
 
-def _nearest_centroids(df: DataFrame, centroids: DataFrame, n: int, out_name: str) -> DataFrame:
-    """n nearest centroids per vector by the rounded-cosine ordering
-    (centroids broadcast; the vector side never shuffles)."""
-    sims = (
-        df.crossJoin(F.broadcast(centroids))
-        .withColumn("cdot", F.expr(_DOT.format(a="vec", b="cvec")))
-        .withColumn(
-            "csim",
-            F.round(
-                F.col("cdot")
-                / (
-                    F.sqrt(F.col("norm2").cast("double"))
-                    * F.sqrt(F.col("cnorm").cast("double"))
-                ),
-                6,
-            ),
-        )
-    )
-    w = Window.partitionBy("vid").orderBy(
-        F.col("csim").desc(), F.col("cent_id").asc()
-    )
+def _nearest_centroids(
+    points: DataFrame,
+    centroids: DataFrame,
+    n: int,
+    out_name: str,
+    key: str = "vid",
+    prefix: str = "",
+) -> DataFrame:
+    """``(key, out_name)``: the ``n`` nearest centroids of each point
+    (``key``, ``{prefix}vec``, ``{prefix}norm``) by the rounded-cosine
+    ordering, ties on the lower ``cent_id`` (centroids broadcast; the
+    point side never shuffles before the per-point window)."""
+    w = Window.partitionBy(key).orderBy(F.col("csim").desc(), F.col("cent_id").asc())
     return (
-        sims.withColumn("crank", F.row_number().over(w))
+        points.crossJoin(F.broadcast(centroids))
+        .withColumn("csim", _cosine(prefix, "c"))
+        .withColumn("crank", F.row_number().over(w))
         .filter(F.col("crank") <= n)
-        .select("vid", F.col("cent_id").alias(out_name))
+        .select(key, F.col("cent_id").alias(out_name))
     )
 
 
@@ -283,6 +251,30 @@ def _resolve_num_centroids(embeddings: DataFrame, num_centroids) -> int:
     )
 
 
+def _ivf_corpus(
+    embeddings: DataFrame, centroids: DataFrame, id_col: str, emb_col: str
+) -> DataFrame:
+    """The IVF corpus, the layout ``build_ivf_index`` persists:
+    ``(cand_id, evec, enorm, cluster)``, each vector in the cluster of
+    its nearest centroid. The assignment is one broadcast-join map over
+    the corpus -- the corpus itself never shuffles on vectors."""
+    vectors = _vectors(embeddings, id_col, emb_col, "cand_id", "e")
+    return vectors.join(
+        _nearest_centroids(vectors, centroids, 1, "cluster", "cand_id", "e"), "cand_id"
+    )
+
+
+def _probed_queries(
+    queries: DataFrame, centroids: DataFrame, nprobe: int, id_col: str, emb_col: str
+) -> DataFrame:
+    """``(query_id, qvec, qnorm, cluster)``: each query once per each of
+    its ``nprobe`` nearest clusters."""
+    vectors = _vectors(queries, id_col, emb_col, "query_id", "q")
+    return vectors.join(
+        _nearest_centroids(vectors, centroids, nprobe, "cluster", "query_id", "q"), "query_id"
+    )
+
+
 def build_ivf_index(
     embeddings: DataFrame,
     index_dir: str,
@@ -301,23 +293,14 @@ def build_ivf_index(
     because the corpus is laid out by cluster, a query's scan is
     PARTITION-PRUNED to its nprobe clusters' files (reading
     nprobe/num_centroids of the index, not filtering it post-scan).
-    Exact same arithmetic as ivf_topk, so results are identical
-    (pinned by the shared driver oracle)."""
+    The corpus and probe steps are ivf_topk's own, so results are
+    identical (pinned by the shared driver oracle)."""
     num_centroids = _resolve_num_centroids(embeddings, num_centroids)
-    scaled = _with_scaled(
-        embeddings.select(F.col(id_col).alias("vid"), F.col(emb_col))
-    ).select("vid", "vec", "norm2")
     centroids = kmeans_centroids(
         embeddings, num_centroids, kmeans_iters, sample_mod, id_col, emb_col
     )
     centroids.write.mode("overwrite").parquet(f"{index_dir}/centroids")
-    assignment = _nearest_centroids(scaled, centroids, 1, "cluster")
-    corpus = scaled.join(assignment, "vid").select(
-        F.col("vid").alias("cand_id"),
-        "cluster",
-        F.col("vec").alias("evec"),
-        F.col("norm2").alias("enorm"),
-    )
+    corpus = _ivf_corpus(embeddings, centroids, id_col, emb_col)
     corpus.repartition("cluster").write.mode("overwrite").partitionBy(
         "cluster"
     ).parquet(f"{index_dir}/corpus")
@@ -338,49 +321,14 @@ def ivf_topk_from_index(
     (num_queries x nprobe values), turned into an isin() partition
     filter so the corpus scan reads ONLY those clusters' files."""
     centroids = spark.read.parquet(f"{index_dir}/centroids")
-    qscaled = _with_scaled(
-        queries.select(F.col(id_col).alias("vid"), F.col(emb_col))
-    ).select("vid", "vec", "norm2")
-    probes = _nearest_centroids(qscaled, centroids, nprobe, "cluster")
+    probed = _probed_queries(queries, centroids, nprobe, id_col, emb_col)
     probe_clusters = sorted(
-        r["cluster"] for r in probes.select("cluster").distinct().collect()
-    )
-    qside = (
-        qscaled.select(
-            F.col("vid").alias("query_id"),
-            F.col("vec").alias("qvec"),
-            F.col("norm2").alias("qnorm"),
-        )
-        .join(probes.withColumnRenamed("vid", "query_id"), "query_id")
+        r["cluster"] for r in probed.select("cluster").distinct().collect()
     )
     corpus = spark.read.parquet(f"{index_dir}/corpus").filter(
         F.col("cluster").isin(probe_clusters)
     )
-    scored = (
-        corpus.join(F.broadcast(qside), "cluster")
-        .filter(F.col("cand_id") != F.col("query_id"))
-        .withColumn("dot", F.expr(_DOT.format(a="qvec", b="evec")))
-        .withColumn(
-            "cosine",
-            F.round(
-                F.col("dot")
-                / (
-                    F.sqrt(F.col("qnorm").cast("double"))
-                    * F.sqrt(F.col("enorm").cast("double"))
-                ),
-                6,
-            ),
-        )
-        .select("query_id", "cand_id", "cosine")
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("cand_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "cand_id", "cosine", "rank")
-    )
+    return _search(corpus, probed, k, "cluster")
 
 
 def ivf_topk(
@@ -408,63 +356,16 @@ def ivf_topk(
     shuffles on vectors.
     """
     num_centroids = _resolve_num_centroids(embeddings, num_centroids)
-    scaled = _with_scaled(
-        embeddings.select(F.col(id_col).alias("vid"), F.col(emb_col))
-    ).select("vid", "vec", "norm2")
     centroids = kmeans_centroids(
         embeddings, num_centroids, kmeans_iters, sample_mod, id_col, emb_col
     )
-
-    def nearest(df, n, out_name):
-        return _nearest_centroids(df, centroids, n, out_name)
-
-    assignment = nearest(scaled, 1, "cluster")
-    corpus = scaled.join(assignment, "vid").select(
-        F.col("vid").alias("cand_id"),
-        "cluster",
-        F.col("vec").alias("evec"),
-        F.col("norm2").alias("enorm"),
+    corpus = _ivf_corpus(embeddings, centroids, id_col, emb_col)
+    queries = _probed_queries(
+        embeddings.filter(F.col(id_col) < num_queries), centroids, nprobe, id_col, emb_col
     )
-    probes = nearest(
-        scaled.filter(F.col("vid") < num_queries), nprobe, "cluster"
-    ).withColumnRenamed("vid", "query_id")
-    queries = (
-        scaled.filter(F.col("vid") < num_queries)
-        .select(
-            F.col("vid").alias("query_id"),
-            F.col("vec").alias("qvec"),
-            F.col("norm2").alias("qnorm"),
-        )
-        .join(probes, "query_id")
-    )
-
-    scored = (
-        corpus.join(F.broadcast(queries), "cluster")
-        .filter(F.col("cand_id") != F.col("query_id"))
-        .withColumn("dot", F.expr(_DOT.format(a="qvec", b="evec")))
-        .withColumn(
-            "cosine",
-            F.round(
-                F.col("dot")
-                / (
-                    F.sqrt(F.col("qnorm").cast("double"))
-                    * F.sqrt(F.col("enorm").cast("double"))
-                ),
-                6,
-            ),
-        )
-        .select("query_id", "cand_id", "cosine")
-        # no dedup needed: each candidate lives in exactly one cluster,
-        # so it joins at most one of a query's probe rows
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("cand_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "cand_id", "cosine", "rank")
-    )
+    # no dedup needed: each candidate lives in exactly one cluster, so it
+    # joins at most one of a query's probe rows
+    return _search(corpus, queries, k, "cluster")
 
 
 def hyperplane_pairs(tables: int, bits: int, dim: int) -> list[list[tuple[int, int]]]:
@@ -555,26 +456,11 @@ def embedding_neardup_pairs(
     cand = _bucket_pairs(
         buckets.withColumnRenamed("tbl", "band"), max_bucket_size
     ).select("id_a", "id_b")
-    vecs = _with_scaled(
-        embeddings.select(F.col(id_col).alias("vid"), F.col(emb_col))
-    ).select("vid", "vec", "norm2")
     return (
-        cand.join(vecs.alias("va"), cand["id_a"] == F.col("va.vid"))
-        .join(vecs.alias("vb"), cand["id_b"] == F.col("vb.vid"))
-        .withColumn("dot", F.expr(_DOT.format(a="va.vec", b="vb.vec")))
-        .withColumn(
-            "cosine",
-            F.round(
-                F.col("dot")
-                / (
-                    F.sqrt(F.col("va.norm2").cast("double"))
-                    * F.sqrt(F.col("vb.norm2").cast("double"))
-                ),
-                6,
-            ),
-        )
+        cand.join(_vectors(embeddings, id_col, emb_col, "id_a", "a"), "id_a")
+        .join(_vectors(embeddings, id_col, emb_col, "id_b", "b"), "id_b")
+        .select("id_a", "id_b", _cosine("a", "b").alias("cosine"))
         .filter(F.col("cosine") >= threshold)
-        .select("id_a", "id_b", "cosine")
     )
 
 
@@ -598,49 +484,14 @@ def ann_multiprobe_topk(
     never shuffles. Probe buckets are distinct by construction, so no
     candidate dedupe is needed.
     """
-    pairs = hyperplane_pairs(1, bits, dim)[0]
-    bucket = hyperplane_bucket(emb_col, pairs)
-    corpus = _with_scaled(
-        embeddings.withColumn("bucket", bucket).select(
-            F.col(id_col).alias("cand_id"), "bucket", emb_col
-        )
-    ).select("cand_id", "bucket", F.col("vec").alias("cvec"),
-             F.col("norm2").alias("cnorm"))
+    bucket = hyperplane_bucket(emb_col, hyperplane_pairs(1, bits, dim)[0])
+    corpus = _vectors(embeddings, id_col, emb_col, "cand_id", "e", bucket.alias("bucket"))
     probe_arr = F.array(
         F.col("bucket0"),
         *[F.col("bucket0").bitwiseXOR(F.lit(1 << i)) for i in range(bits)],
     )
-    queries = (
-        _with_scaled(
-            embeddings.withColumn("bucket0", bucket)
-            .filter(F.col(id_col) < num_queries)
-            .select(F.col(id_col).alias("query_id"), "bucket0", emb_col)
-        )
-        .select("query_id", "bucket0", F.col("vec").alias("qvec"),
-                F.col("norm2").alias("qnorm"))
-        .withColumn("bucket", F.explode(probe_arr))
-    )
-    scored = (
-        corpus.join(F.broadcast(queries), "bucket")
-        .filter(F.col("cand_id") != F.col("query_id"))
-        .withColumn("dot", F.expr(_DOT.format(a="qvec", b="cvec")))
-        .withColumn(
-            "cosine",
-            F.round(
-                F.col("dot")
-                / (
-                    F.sqrt(F.col("qnorm").cast("double"))
-                    * F.sqrt(F.col("cnorm").cast("double"))
-                ),
-                6,
-            ),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("cand_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "cand_id", "cosine", "rank")
-    )
+    queries = _vectors(
+        embeddings.filter(F.col(id_col) < num_queries),
+        id_col, emb_col, "query_id", "q", bucket.alias("bucket0"),
+    ).withColumn("bucket", F.explode(probe_arr))
+    return _search(corpus, queries, k, "bucket")

@@ -7,7 +7,11 @@ shuffle on the extraction hot path, broadcast on the small join side.
 from pyspark.sql import functions as F
 
 from readabilityimproved_spark.operators.extract import extract_spans
-from readabilityimproved_spark.operators.similarity import cosine_topk
+from readabilityimproved_spark.operators.similarity import (
+    ann_bucketed_topk,
+    ann_multiprobe_topk,
+    cosine_topk,
+)
 from readabilityimproved_spark.sources.synth import synth_corpus_df
 
 
@@ -77,9 +81,19 @@ def test_flagship_scan_prunes_columns(spark):
 
 
 def test_similarity_broadcasts_queries(spark):
+    """Each top-k operator broadcasts its query side, and its only
+    shuffle is the per-query top-k."""
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    plan = plan_of(cosine_topk(emb, k=3, num_queries=5))
-    assert "BroadcastExchange" in plan or "Broadcast" in plan
+    for operator in (cosine_topk, ann_bucketed_topk, ann_multiprobe_topk):
+        out = operator(emb, k=3, num_queries=5)
+        plan = plan_of(out)
+        assert "BroadcastExchange" in plan or "Broadcast" in plan
+        executed = out._jdf.queryExecution().executedPlan().toString()
+        assert "BroadcastExchange" in executed, (operator.__name__, executed)
+        assert executed.count("Exchange hashpartitioning") == 1, (
+            operator.__name__, executed,
+        )
+        assert "Exchange hashpartitioning(query_id#" in executed, executed
 
 
 def test_incremental_dedup_plan_shape(spark, tmp_path):

@@ -1,6 +1,7 @@
 """Round-2 regression tests: ADVICE fixes (short-doc shingles, float32
 parity, idempotent wave writes, attribute escaping) and VERDICT asks
-(LSH bucket caps bound the join, k-means IVF recall)."""
+(LSH bucket caps bound the join). Similarity tests live in
+test_similarity.py."""
 
 import numpy as np
 import pytest
@@ -14,15 +15,6 @@ from readabilityimproved_spark.operators.dedup import (
     simhash64,
 )
 from readabilityimproved_spark.operators.extract import reconstruct_html
-from readabilityimproved_spark.operators.similarity import (
-    ann_bucketed_topk,
-    cosine_topk,
-    embedding_neardup_pairs,
-    ivf_topk,
-    kmeans_centroids,
-)
-
-EMB_SF = "/root/testdata/sf0.001/embeddings.parquet"
 
 
 # --- ADVICE high: short docs must not crash the shingle path ---------------
@@ -62,72 +54,6 @@ def test_minhash_lsh_cap_bounds_join(spark):
     df = spark.createDataFrame(rows, "doc_id string, text string")
     assert minhash_lsh_pairs(df, max_bucket_size=100).count() == 0
     assert minhash_lsh_pairs(df, max_bucket_size=200).count() == 150 * 149 // 2
-
-
-def test_embedding_neardup_cap_bounds_join(spark):
-    rows = [(i, [1.0] * 16) for i in range(150)]
-    df = spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
-    kw = dict(threshold=0.5, tables=2, bits=8, dim=16)
-    assert embedding_neardup_pairs(df, max_bucket_size=100, **kw).count() == 0
-    assert (
-        embedding_neardup_pairs(df, max_bucket_size=200, **kw).count()
-        == 150 * 149 // 2
-    )
-
-
-def test_embedding_neardup_banded_tables_union_candidates(spark):
-    """A pair colliding in table 1 but not table 0 is still found, and
-    pairs are emitted once (deduped across tables)."""
-    emb = spark.read.parquet(EMB_SF)
-    out = embedding_neardup_pairs(emb, threshold=0.0, tables=4, bits=16)
-    pairs = [(r["id_a"], r["id_b"]) for r in out.collect()]
-    assert len(pairs) == len(set(pairs))
-    single = embedding_neardup_pairs(emb, threshold=0.0, tables=1, bits=16)
-    assert out.count() >= single.count()
-
-
-# --- VERDICT: k-means IVF ---------------------------------------------------
-
-def test_ivf_kmeans_recall_on_clustered_data(spark):
-    """On genuinely clustered vectors IVF must find nearly everything at
-    nprobe=2: 8 tight clusters around orthogonal axes."""
-    rows = []
-    for i in range(400):
-        c = i % 8
-        base = [0.0] * 16
-        base[c * 2] = 10.0
-        base[c * 2 + 1] = ((i * 37) % 13 - 6) / 10.0  # small jitter
-        rows.append((i, base))
-    df = spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
-    gt = {(r["query_id"], r["cand_id"])
-          for r in cosine_topk(df, k=5, num_queries=10).collect()}
-    iv = {(r["query_id"], r["cand_id"])
-          for r in ivf_topk(df, k=5, num_queries=10, num_centroids=8,
-                            nprobe=2, sample_mod=1).collect()}
-    assert len(gt & iv) / len(gt) >= 0.9
-
-
-def test_ivf_recall_floor_on_near_random_embeddings(spark):
-    """The synthetic embeddings are near-random (no cluster structure:
-    max pairwise cosine ~0.5), which caps any IVF recall; pin the
-    measured floor so centroid-quality regressions still show."""
-    emb = spark.read.parquet(EMB_SF)
-    gt = {(r["query_id"], r["cand_id"])
-          for r in cosine_topk(emb, k=5, num_queries=10).collect()}
-    iv = {(r["query_id"], r["cand_id"])
-          for r in ivf_topk(emb, k=5, num_queries=10, num_centroids=8,
-                            nprobe=2).collect()}
-    assert len(gt & iv) / len(gt) >= 0.45
-
-
-def test_kmeans_centroids_deterministic_and_sized(spark):
-    emb = spark.read.parquet(EMB_SF)
-    a = kmeans_centroids(emb, num_centroids=8).collect()
-    b = kmeans_centroids(emb, num_centroids=8).collect()
-    assert sorted(r["cent_id"] for r in a) == list(range(8))
-    assert {r["cent_id"]: r["cvec"] for r in a} == {
-        r["cent_id"]: r["cvec"] for r in b
-    }
 
 
 # --- ADVICE medium: float32 scoring parity ----------------------------------
@@ -430,25 +356,6 @@ def test_dedup_family_survives_adversarial_text(spark):
     assert minhash_verified_pairs(df, threshold=0.5).count() >= 1
     assert simhash64(df).count() >= 1
     assert simhash_neardup_pairs(df).count() >= 1
-
-
-def test_multiprobe_recall_dominates_single_probe(spark):
-    """Hamming-1 probing must recover at least as many true neighbors as
-    single-probe LSH on the same hash (usually strictly more)."""
-    from readabilityimproved_spark.operators.similarity import (
-        ann_multiprobe_topk,
-    )
-
-    emb = spark.read.parquet(EMB_SF)
-    gt = {(r["query_id"], r["cand_id"])
-          for r in cosine_topk(emb, k=5, num_queries=10).collect()}
-    multi = {(r["query_id"], r["cand_id"])
-             for r in ann_multiprobe_topk(emb, k=5, num_queries=10,
-                                          bits=8).collect()}
-    single = {(r["query_id"], r["cand_id"])
-              for r in ann_bucketed_topk(emb, k=5, num_queries=10,
-                                         bits=8).collect()}
-    assert len(gt & multi) >= len(gt & single)
 
 
 # --- comments participate in innerHTML regex scans (Java parity) --------------

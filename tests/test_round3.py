@@ -369,52 +369,6 @@ def test_mixture_expand_epoch_counts(spark):
     assert 0.3 < upsampled / 300 < 0.7  # Bernoulli(0.5) rate
 
 
-def test_ivf_index_probe_is_partition_pruned(spark, tmp_path):
-    """The persisted-index query must read ONLY the probed clusters'
-    partition dirs (PartitionFilters on cluster), and return exactly
-    what the index-free ivf_topk computes."""
-    from readabilityimproved_spark.operators.similarity import (
-        build_ivf_index,
-        ivf_topk,
-        ivf_topk_from_index,
-    )
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    idx = str(tmp_path / "ivf")
-    build_ivf_index(emb, idx, num_centroids=8)
-    queries = emb.filter(F.col("vec_id") < 10)
-    got = ivf_topk_from_index(spark, idx, queries, k=5, nprobe=2)
-    plan = got._jdf.queryExecution().executedPlan().toString()
-    # the corpus scan is the only partitioned source in this plan
-    assert "PartitionFilters: [cluster" in plan, plan[:3000]
-    want = {tuple(r) for r in ivf_topk(emb, k=5, num_queries=10).collect()}
-    assert {tuple(r) for r in got.collect()} == want
-
-
-def test_kmeans_init_avoids_global_window(spark):
-    """Centroid init must use a distributed top-k (TakeOrderedAndProject),
-    never a row_number over the full unpartitioned sample."""
-    from readabilityimproved_spark.operators.similarity import kmeans_centroids
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    plan = kmeans_centroids(emb)._jdf.queryExecution().executedPlan().toString()
-    assert "TakeOrderedAndProject" in plan, plan[:2000]
-
-
-def test_short_embedding_fails_loudly(spark):
-    """A vector shorter than the hyperplane index's highest probe must
-    raise, not silently zero sketch bits (collapsed LSH buckets)."""
-    from readabilityimproved_spark.operators.similarity import (
-        embedding_neardup_pairs,
-    )
-
-    short = spark.createDataFrame(
-        [(1, [0.1] * 8), (2, [0.2] * 8)], "vec_id long, embedding array<float>"
-    )
-    with pytest.raises(Exception, match="dim|assert"):
-        embedding_neardup_pairs(short).collect()
-
-
 def test_minhash_verified_releases_cached_blocks(spark):
     """minhash_verified_pairs must not pin blocks in the session
     CacheManager: the candidate table is localCheckpointed (cleaner-

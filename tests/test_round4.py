@@ -1,12 +1,10 @@
 """Round-4 regression pins: VERDICT/ADVICE r3 items.
 
-Covers: ngram_jaccard cache-leak fix, IVF sizing without a corpus
-count() pass, sign-aware money rounding, hash-bucketed pack streams,
-batched wave FS listing in the pipeline, and the bucketed co-located
-join driver row.
+Covers: ngram_jaccard cache-leak fix, sign-aware money rounding,
+hash-bucketed pack streams, batched wave FS listing in the pipeline,
+and the bucketed co-located join driver row.
 """
 
-import pytest
 from pyspark.sql import functions as F
 
 
@@ -23,17 +21,6 @@ def test_ngram_jaccard_releases_cached_blocks(spark):
     spark.catalog.clearCache()
     ngram_jaccard_pairs(docs, threshold=0.1).collect()
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
-
-
-def test_ivf_sizing_requires_explicit_k_on_plain_scans(spark):
-    """num_centroids=None must NOT trigger a full corpus count() pass:
-    on a plain parquet scan (no CBO rowCount statistics) it raises with
-    sizing guidance instead of silently scanning 10^12 rows."""
-    from readabilityimproved_spark.operators.similarity import ivf_topk
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    with pytest.raises(ValueError, match="num_centroids"):
-        ivf_topk(emb, num_centroids=None)
 
 
 def test_cents_sign_aware_rounding(spark):

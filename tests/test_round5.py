@@ -1,5 +1,5 @@
-"""Round-5 pins: IVF sizing fallback hardening, pipeline metadata-job
-elision, lineage schema back-compat."""
+"""Round-5 pins: pipeline metadata-job elision, lineage schema
+back-compat."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -361,37 +361,3 @@ def test_job_summary_tolerates_pre_wave_lineage(spark, tmp_path):
     # 800 + 900 + 700, NOT max(800, 900, 700)
     assert rows[111]["wall_ms_sum"] == 2400
     assert rows[111]["waves"] == 3
-
-
-def test_resolve_num_centroids_survives_internal_api_loss(spark):
-    """_resolve_num_centroids reads Catalyst plan stats through py4j
-    internals; if a Spark upgrade moves that surface the helper must
-    degrade to the explicit-k ValueError, not crash with a Py4JError."""
-    from readabilityimproved_spark.operators import similarity as S
-
-    class Broken:
-        def __getattr__(self, name):  # any internals access explodes
-            raise RuntimeError("internal API moved")
-
-    class FakeDF:
-        _jdf = Broken()
-
-    # explicit k passes straight through, no internals touched
-    assert S._resolve_num_centroids(FakeDF(), 7) == 7
-    with pytest.raises(ValueError, match="num_centroids"):
-        S._resolve_num_centroids(FakeDF(), None)
-    # and the happy path still resolves from an ANALYZE'd table's stats
-    # (catalog rowCount reaches plan stats only under CBO; set/restore
-    # the conf on the shared session -- never stop() it)
-    spark.createDataFrame(
-        [(i, [0.1, 0.2]) for i in range(9)],
-        "vec_id long, embedding array<double>",
-    ).write.mode("overwrite").saveAsTable("r5_emb_stats")
-    prev = spark.conf.get("spark.sql.cbo.enabled")
-    try:
-        spark.sql("ANALYZE TABLE r5_emb_stats COMPUTE STATISTICS")
-        spark.conf.set("spark.sql.cbo.enabled", "true")
-        assert S._resolve_num_centroids(spark.table("r5_emb_stats"), None) == 3
-    finally:
-        spark.conf.set("spark.sql.cbo.enabled", prev)
-        spark.sql("DROP TABLE IF EXISTS r5_emb_stats")
