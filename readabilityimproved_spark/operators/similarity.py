@@ -300,6 +300,11 @@ def build_ivf_index(
         embeddings, num_centroids, kmeans_iters, sample_mod, id_col, emb_col
     )
     centroids.write.mode("overwrite").parquet(f"{index_dir}/centroids")
+    # assign from the centroids just written: the lazy ``centroids`` would
+    # replan (and rerun) the whole sampled Lloyd's lineage for the corpus
+    centroids = embeddings.sparkSession.read.schema(centroids.schema).parquet(
+        f"{index_dir}/centroids"
+    )
     corpus = _ivf_corpus(embeddings, centroids, id_col, emb_col)
     corpus.repartition("cluster").write.mode("overwrite").partitionBy(
         "cluster"

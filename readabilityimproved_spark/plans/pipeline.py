@@ -29,11 +29,18 @@ handling, checkpoint/resume):
   capped at ``parallelism``, the committed re-read passes the schema
   it just wrote (no footer-inference job), and lineage rows reach the
   JVM as one Arrow table written as one file (no Python worker);
-* **skew**: extraction cost is proportional to document bytes, so the
-  scan's byte-based file splits (``spark.sql.files.maxPartitionBytes``)
-  spread ~1% giant documents across tasks with no shuffle before the
-  kernel (plan: Scan -> MapInPandas); the only exchange is the writer's
-  ``part`` hash;
+* **skew**: extraction cost is proportional to document bytes, and
+  there is no shuffle before the kernel (plan: Scan -> MapInPandas);
+  the only exchange is the writer's ``part`` hash. The scan's file
+  splits do NOT spread giant documents under ``build_session()``
+  defaults: Spark sorts files largest first and packs them into splits
+  charging each file a 4 MB open cost
+  (``spark.sql.files.openCostInBytes``), so small files are packed by
+  count, not by bytes -- on the perfbench ``extract`` corpus (64 files,
+  4 cores) split 0 gets the 16 largest files, all 10 giants among
+  them: 256 docs carrying 3-4x the span JSON bytes of any of splits
+  1-3. A byte-sized open cost packs by bytes instead (ROADMAP, smaller
+  items);
 * everything relational (resume anti-filter, metrics rollup) is plain
   DataFrame code — Catalyst/AQE handle pushdown and small-side
   broadcast; the only Python worker runs the Arrow kernel.

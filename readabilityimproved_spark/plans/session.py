@@ -31,11 +31,19 @@ def _enable_preload_daemon(master: str) -> bool:
     every Python worker down with it.
 
     The daemon process (``spark.python.daemon.module``) is what every
-    Python worker forks from; plans/preload_daemon.py imports pandas +
-    the Arrow serializers + this package's kernel there ONCE so all
-    workers inherit them copy-on-write instead of each paying ~0.6 s of
-    imports on the cold first task wave. The daemon is launched with
-    ``python -m``, so the package parent directory must be on the
+    Python worker forks from. plans/preload_daemon.py first drops
+    Spark's own archives (pyspark.zip, the py4j zip, the jars) from its
+    ``sys.path`` when the installed pyspark/py4j match them, then imports
+    pandas + the Arrow serializers + this package's kernel there ONCE so
+    all workers inherit them copy-on-write. Measured on 4 cores: the
+    daemon's imports take ~1 s instead of ~2 s (no compiling pyspark
+    from the zip), and each Python task skips ~0.24 s of
+    ``importlib.invalidate_caches()`` re-reading those archives; the
+    extract benchmark's ``setup_s`` fell from 2.36 to 1.11 s (medians,
+    10 pairs). The preload alone (before the path fix) measured no gain
+    in setup or first-job time, but keeps worker RSS ~16% lower than a
+    stock ``pyspark.daemon`` fork (ROADMAP item 3). The daemon is
+    launched with ``python -m``, so the package parent directory must be on the
     PYTHONPATH the JVM passes down — ensured here from ``__file__``
     before the JVM starts. Best-effort: if the path cannot be resolved
     the stock ``pyspark.daemon`` is kept.

@@ -104,6 +104,32 @@ def test_operator_rows_are_pinned(spark, tmp_path):
     assert {name: _digest(df) for name, df in outputs.items()} == _PINNED
 
 
+def test_ivf_index_corpus_assigns_from_written_centroids(spark, tmp_path, monkeypatch):
+    """The corpus write reads back the centroids it just wrote instead of
+    replanning the sampled k-means lineage (its init top-k and every
+    Lloyd's round) a second time."""
+    from readabilityimproved_spark.operators import similarity
+
+    captured = []
+    ivf_corpus = similarity._ivf_corpus
+
+    def capture(*args):
+        captured.append(ivf_corpus(*args))
+        return captured[-1]
+
+    monkeypatch.setattr(similarity, "_ivf_corpus", capture)
+    idx = str(tmp_path / "ivf")
+    build_ivf_index(
+        spark.read.parquet(EMB_SF), idx, num_centroids=8, kmeans_iters=2, sample_mod=5
+    )
+    (corpus,) = captured
+    plan = corpus.repartition("cluster")._jdf.queryExecution().executedPlan().toString()
+    assert "TakeOrderedAndProject" not in plan
+    # the embeddings twice (vectors joined to their nearest centroid) + the centroids
+    assert plan.count("FileScan") == 3
+    assert "ReadSchema: struct<cent_id:int,cvec:array<bigint>,cnorm:bigint>" in plan
+
+
 @pytest.mark.parametrize(
     "operator, kw",
     [
