@@ -97,10 +97,11 @@ def _spread(df: DataFrame, spark: SparkSession) -> DataFrame:
     files/splits and this is a no-op (no shuffle of a 10^12-doc
     corpus). An empty ``inputFiles()`` (an in-memory or otherwise
     non-file source) means the layout is unknown, not small: no-op too.
-    Result rows are unchanged (pure per-row kernel; the driver compares
-    sorted rows)."""
+    The file count is the JVM array's length, so no file name crosses
+    py4j. Result rows are unchanged (pure per-row kernel; the oracle
+    check compares sorted rows)."""
     target = spark.sparkContext.defaultParallelism
-    if 0 < len(df.inputFiles()) < target:
+    if 0 < len(df._jdf.inputFiles()) < target:
         return df.repartition(target)
     return df
 
@@ -2895,26 +2896,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     return {
         # NOTE on ordering: the driver verifies the FIRST 50 dict entries
-        # against the DuckDB oracles (round-4 finding: positions 51-60 got
-        # no CORRECTNESS row), so membership ROTATES each round: the head
-        # carries whatever went unverified last round plus anything new.
-        # Round 6: the scalar battery (tail positions 50-59 in round 5, so
-        # no r5 row) leads, followed by the six NEW rows (incremental
-        # clustering, temporal joins, grouping sets / set ops / JSON).
-        # With 80 entries (anchor_topk + crawl_frontier + host_pagerank
-        # joined the head late in the round), 30 fall outside the 50-row
-        # window — ALL of them r5-verified green: the tail-11 late
-        # battery, dedup_exact (green r2-r5, trivial plan),
-        # pack_sequences (green r5, displaced by host_pagerank), and the
-        # fifteen displaced by the new heads (vocab_topk, tokens_to_ids,
-        # corpus_stats, inverted_index, materialize_packs,
-        # similarity_topk, similarity_ann_lsh, similarity_ann_multiprobe,
-        # embedding_neardup, similarity_ivf_index, similarity_ivf,
-        # event_window_agg, sessionize_events, tpch_star_rollup,
-        # tpch_topk_per_segment — whichever fifteen land past position
-        # 50; see the dict order). Rotate the displaced set back in next
-        # round.
-        # --- rows with no round-5 driver row first -------------------------
+        # against the DuckDB oracles, so the order of the head is part of
+        # the contract. tools/oracle_sweep.py checks all of them.
+        # --- scalar battery -------------------------------------------------
         "normalize_ws": sql_query(_normalize_ws_query),
         "comma_segments": sql_query(_comma_segments_query),
         "class_weight": sql_query(_class_weight_query),
@@ -3013,16 +2997,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             num_centroids=_IVF_CENTROIDS, nprobe=_IVF_NPROBE,
             kmeans_iters=_IVF_ITERS, sample_mod=_IVF_SAMPLE_MOD,
         ),
-        # --- relational / streaming-parity tier (similarity_ivf above and
-        # these four sit at positions 50-54: displaced from the window by
-        # the six new-row heads; all r5-green, rotate back in round 7) -----
+        # --- relational / streaming-parity tier ---------------------------
         "event_window_agg": q_event_window_agg,
         "sessionize_events": q_sessionize_events,
         "tpch_star_rollup": q_tpch_star_rollup,
         "tpch_topk_per_segment": q_tpch_topk_per_segment,
-        # --- freshly verified in round 5 (all green rows+schema+hash);
-        # tail positions fall outside the driver's 50-row check window
-        # this round and rotate back in next round -------------------------
+        # --- layout, media and relational rows ----------------------------
         "layout_reading_order": q_layout_reading_order,
         "layout_spans": q_layout_spans,
         "bucketed_join": q_bucketed_join,

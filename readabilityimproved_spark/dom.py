@@ -31,7 +31,6 @@ import re
 from functools import lru_cache
 from html import escape
 from urllib.parse import (
-    urljoin,
     urlparse,
     urlunparse,
     uses_netloc,

@@ -207,18 +207,30 @@ def class_weight_sql(cls: str, node_id: str, dialect: str) -> str:
     return f"({leg(cls)} + {leg(node_id)})"
 
 
+#: the whitespace-token rule: tokens are the runs of ``trim(s)`` between
+#: matches of this regex (functions.text.tokens is the Column form)
+TOKEN_RE = r"\s+"
+
+
+def tokens_sql(s: str, dialect: str) -> str:
+    return _split(f"trim({s})", TOKEN_RE, dialect)
+
+
 def token_count_sql(s: str, dialect: str) -> str:
-    tokens = _split(f"trim({s})", r"\s+", dialect)
     return (
         f"CASE WHEN trim({s}) = '' THEN 0"
-        f" ELSE {_size(tokens, dialect)} END"
+        f" ELSE {_size(tokens_sql(s, dialect), dialect)} END"
     )
+
+
+def _collapsed_lower(s: str, dialect: str) -> str:
+    """Lower-cased text with every whitespace run collapsed to one space."""
+    return _replace_all(f"lower(trim({s}))", TOKEN_RE, " ", dialect)
 
 
 def fingerprint_sql(s: str, dialect: str) -> str:
     """Document fingerprint: md5 of the lower-cased, ws-collapsed text."""
-    collapsed = _replace_all(f"lower(trim({s}))", r"\s+", " ", dialect)
-    return f"md5({collapsed})"
+    return f"md5({_collapsed_lower(s, dialect)})"
 
 
 #: GPT-2-style pre-tokenizer: contractions, letter runs, digit runs,
@@ -245,7 +257,7 @@ _RH_MOD = 1_000_000_007
 def rolling_hash_sql(s: str, dialect: str) -> str:
     """Polynomial rolling hash over the ws-collapsed lower-cased text:
     h = (h*31 + code(char)) mod 1e9+7, left-to-right."""
-    collapsed = _replace_all(f"lower(trim({s}))", r"\s+", " ", dialect)
+    collapsed = _collapsed_lower(s, dialect)
     if dialect == SPARK:
         chars = f"split({collapsed}, '')"
         return (
@@ -349,7 +361,7 @@ def _tokens_lower(s: str, dialect: str) -> str:
     """Lower-cased whitespace tokens with empties dropped (the shared
     token alphabet for the repetition metrics; same split discipline as
     :func:`token_count_sql`)."""
-    toks = _split(f"lower(trim({s}))", r"\s+", dialect)
+    toks = _split(f"lower(trim({s}))", TOKEN_RE, dialect)
     fn = "filter" if dialect == SPARK else "list_filter"
     return f"{fn}({toks}, t -> t <> '')"
 
@@ -357,7 +369,8 @@ def _tokens_lower(s: str, dialect: str) -> str:
 def _bind_spark(value: str, var: str, body: str) -> str:
     """Spark-only let-binding: evaluate ``value`` ONCE per row and hand
     it to ``body`` as the lambda variable ``var`` (1-element array
-    transform -- the same trick as dedup._bind, rendered as SQL text).
+    transform -- the same trick as functions.text._bind, rendered as SQL
+    text).
 
     Spark performs common-subexpression elimination inside a projection
     but NOT inside higher-order-function lambda bodies, so an array

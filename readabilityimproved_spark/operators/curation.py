@@ -27,28 +27,22 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions import sqlgen
-from .dedup import _gram_array
+from ..functions import sqlgen, text
 
 #: hash-fraction denominator for deterministic sampling / mixture weights
 SAMPLE_M = 1_000_000
 
 
-def _hash64(col: F.Column, salt: str, portable: bool) -> F.Column:
-    """Deterministic 64-bit-ish hash of a column + salt.
-
-    portable=True uses the 15-hex md5 slice (bit-identical in DuckDB,
-    same scheme as dedup._base_hash) so decisions are oracle-checkable;
-    production default is xxhash64 (JVM-native)."""
-    s = F.concat(col.cast("string"), F.lit(f"_{salt}"))
-    if portable:
-        return F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long")
-    return F.xxhash64(s)
+def _salted_hash64(col: F.Column, salt: str, portable: bool) -> F.Column:
+    """Deterministic 64-bit hash of a column + salt (functions.text.hash64:
+    ``portable=True`` is the oracle-checkable md5 slice)."""
+    salted = F.concat(col.cast("string"), F.lit(f"_{salt}"))
+    return text.hash64(salted, portable)
 
 
 def _hash_bucket(col: F.Column, salt: str, portable: bool) -> F.Column:
     """Deterministic bucket in [0, SAMPLE_M) from a column + salt."""
-    return F.pmod(_hash64(col, salt, portable), F.lit(SAMPLE_M))
+    return F.pmod(_salted_hash64(col, salt, portable), F.lit(SAMPLE_M))
 
 
 def deterministic_sample(
@@ -177,9 +171,9 @@ def vocab_topk(
     map-side so the exchange carries one row per (task, distinct token);
     the global top-N plans as TakeOrderedAndProject (per-partition
     top-N + a driver merge of N-row lists), never a full sort."""
-    toks = docs.select(
-        F.explode(F.split(F.trim(F.col(text_col)), r"\s+")).alias("token")
-    ).filter(F.col("token") != "")
+    toks = docs.select(F.explode(text.tokens(text_col)).alias("token")).filter(
+        F.col("token") != ""
+    )
     counts = toks.groupBy("token").agg(F.count(F.lit(1)).alias("n"))
     return counts.orderBy(F.col("n").desc(), F.col("token").asc()).limit(top_n)
 
@@ -219,9 +213,7 @@ def tokens_to_ids(
     explode position, not sort order of ids."""
     toks = docs.select(
         F.col(id_col),
-        F.posexplode(F.split(F.trim(F.col(text_col)), r"\s+")).alias(
-            "pos", "token"
-        ),
+        F.posexplode(text.tokens(text_col)).alias("pos", "token"),
     ).filter(F.col("token") != "")
     mapped = toks.join(F.broadcast(vocab_ids), "token", "left").select(
         id_col,
@@ -255,9 +247,7 @@ def inverted_index(
     reused by both the window and the groupBy."""
     toks = docs.select(
         F.col(id_col),
-        F.explode(
-            F.array_distinct(F.split(F.trim(F.col(text_col)), r"\s+"))
-        ).alias("token"),
+        F.explode(F.array_distinct(text.tokens(text_col))).alias("token"),
     ).filter(F.col("token") != "")
     w = Window.partitionBy("token")
     return (
@@ -330,11 +320,11 @@ def decontaminate(
     emitting the count (not just a flag) lets the threshold be chosen
     downstream without recomputing."""
     bench_grams = benchmark.select(
-        F.explode(F.array_distinct(_gram_array(text_col, n))).alias("g")
+        F.explode(F.array_distinct(text.ngrams(text_col, n))).alias("g")
     ).distinct()
     train_grams = train.select(
         F.col(id_col),
-        F.explode(F.array_distinct(_gram_array(text_col, n))).alias("g"),
+        F.explode(F.array_distinct(text.ngrams(text_col, n))).alias("g"),
     )
     return (
         train_grams.join(F.broadcast(bench_grams), "g")
@@ -396,7 +386,7 @@ def pack_sequences(
     bit-identical in the DuckDB oracle."""
     n_tokens = F.expr(sqlgen.token_count_sql(text_col, sqlgen.SPARK)).cast("int")
     stream = F.pmod(
-        _hash64(F.col(id_col), "pk", portable_hash), F.lit(num_streams)
+        _salted_hash64(F.col(id_col), "pk", portable_hash), F.lit(num_streams)
     ).cast("int")
     t = docs.select(
         F.col(id_col), stream.alias("stream"), n_tokens.alias("n_tokens")
@@ -444,13 +434,11 @@ def token_rarity_scores(
     (id, int) aggregation. Nothing is collected to the driver and no
     Python runs per row.
 
-    Tokenization matches the repo convention (split(trim(text), \\s+);
-    an all-whitespace document contributes one empty-string token, so
-    every input row comes back scored).
+    Tokens are functions.text.tokens (an all-space document contributes
+    one empty-string token, so every input row comes back scored).
     """
     toks = docs.select(
-        F.col(id_col).alias("id"),
-        F.explode(F.split(F.trim(F.col(text_col)), r"\s+")).alias("tok"),
+        F.col(id_col).alias("id"), F.explode(text.tokens(text_col)).alias("tok")
     )
     vocab = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("cnt"))
     total = vocab.agg(F.sum("cnt").alias("total"))

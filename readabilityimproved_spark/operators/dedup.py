@@ -14,9 +14,12 @@ All Spark-native (built-in functions only -- no Python in the hot path):
                           of candidate docs only
   * simhash64          -- 64-bit simhash from token-hash bit-majority
 
-Every hash takes ``portable_hash=True`` to swap xxhash64 (production
-default) for a 15-hex md5 slice that DuckDB reproduces bit-exactly --
-that is what makes the LSH family oracle-checkable by the driver.
+Every hash goes through functions.text.hash64: ``portable_hash=True``
+swaps xxhash64 (production default) for its 15-hex md5 slice, which
+DuckDB reproduces bit-exactly -- that is what makes the LSH family
+oracle-checkable. Tokens, shingles and fingerprints come
+from the same module (functions/text.py), shared with the curation,
+passage and layout tiers.
 
 Scale notes: the all-pairs shingle self-join (ngram_jaccard_pairs)
 shuffles on the shingle key -- at 10^12 docs use minhash_verified_pairs:
@@ -27,16 +30,15 @@ candidate docs only.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from ..functions import text
 
 
 def fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
     """md5 over lower-cased, whitespace-collapsed text."""
-    return df.withColumn(
-        "fingerprint",
-        F.md5(F.regexp_replace(F.lower(F.trim(F.col(text_col))), r"\s+", " ")),
-    )
+    return df.withColumn("fingerprint", text.fingerprint(text_col))
 
 
 def exact_dedup(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -79,20 +81,12 @@ def build_fingerprint_index(
     )
 
 
-#: refuse to build a prefilter slot table bigger than this many slots
-#: (2^28 longs ~ 2 GiB raw in the broadcast hash relation): beyond it
-#: the broadcast costs more than the anti-join exchange it skips, and
-#: the caller should shard by fingerprint prefix or skip the prefilter
-_PREFILTER_MAX_SLOTS = 1 << 28
-
-
 def dedup_against_index(
     spark,
     new_docs: DataFrame,
     index_path: str,
     id_col: str = "doc_id",
     text_col: str = "text",
-    prefilter_slots: int | None = None,
 ) -> DataFrame:
     """Incremental dedup of a new crawl batch: drop every document whose
     content fingerprint is already in the persisted index, then keep
@@ -102,60 +96,13 @@ def dedup_against_index(
     (the batch side shuffles; the index was laid out by fingerprint at
     build time) and the within-batch min-id aggregation (map-side
     partial). Text never travels: joins carry (id, fingerprint) only,
-    and the surviving ids semi-join back to the full rows.
-
-    ``prefilter_slots``: optional EXACT-preserving prefilter. In
-    steady-state crawling most batch documents are fresh, yet every one
-    pays the history exchange. With ``prefilter_slots = m`` set, one
-    distinct-aggregation pass projects the index onto ``pmod(
-    xxhash64(fingerprint), m)`` slots -- a table of AT MOST m longs
-    regardless of index size -- which broadcasts, and the batch splits
-    on a broadcast semi-join against it: rows whose slot is absent are
-    PROVABLY not in the index (a Bloom filter with k=1 has no false
-    negatives) and bypass the anti-join entirely; slot hits (real dups
-    + ~n/m false positives) continue into the exact anti-join. Results
-    are byte-identical with the prefilter on or off. Everything stays
-    JVM-side builtins (Spark 4.1 does not expose ``bloom_filter_agg``
-    publicly; a broadcast hash relation of slots trades ~64 bits/slot
-    for staying inside Tungsten with zero Python).
-
-    Sizing: false-positive rate ~ 1 - e^(-n/m) for n distinct index
-    fingerprints, so m = 8n gives ~12%, m = 32n ~3%; the slot table
-    caps at min(n, m) rows. Past :data:`_PREFILTER_MAX_SLOTS` this
-    raises rather than building a broadcast that costs more than the
-    exchange it skips -- at 10^12-doc scale, shard the index (one slot
-    table each) by fingerprint prefix, or skip the prefilter."""
+    and the surviving ids semi-join back to the full rows."""
     index = spark.read.parquet(index_path)
-    batch_fp = fingerprint(new_docs, text_col).select(
-        F.col(id_col), "fingerprint"
+    fresh = (
+        fingerprint(new_docs, text_col)
+        .select(F.col(id_col), "fingerprint")
+        .join(index, "fingerprint", "left_anti")
     )
-    if prefilter_slots is not None:
-        if prefilter_slots < 1:
-            raise ValueError(
-                f"prefilter_slots must be >= 1, got {prefilter_slots}"
-            )
-        if prefilter_slots > _PREFILTER_MAX_SLOTS:
-            raise ValueError(
-                f"prefilter_slots={prefilter_slots} exceeds the broadcast "
-                f"cap {_PREFILTER_MAX_SLOTS}; shard the index by "
-                "fingerprint prefix or skip the prefilter"
-            )
-        slot = F.pmod(F.xxhash64("fingerprint"), F.lit(prefilter_slots))
-        slots = index.select(slot.alias("slot")).distinct()
-        tagged = batch_fp.withColumn("slot", slot)
-        # broadcast semi/anti pair on the slot table: the anti side is
-        # provably fresh and never reaches the history exchange
-        definitely_fresh = tagged.join(
-            F.broadcast(slots), "slot", "left_anti"
-        ).select(F.col(id_col), "fingerprint")
-        maybe = tagged.join(F.broadcast(slots), "slot", "left_semi").select(
-            F.col(id_col), "fingerprint"
-        )
-        fresh = definitely_fresh.unionByName(
-            maybe.join(index, "fingerprint", "left_anti")
-        )
-    else:
-        fresh = batch_fp.join(index, "fingerprint", "left_anti")
     reps = (
         fresh.groupBy("fingerprint")
         .agg(F.min(id_col).alias(id_col))
@@ -191,52 +138,12 @@ def update_fingerprint_index(
     )
 
 
-def _bind(expr: "F.Column", fn) -> "F.Column":
-    """Evaluate ``expr`` ONCE per row and pass the value to ``fn`` as a
-    lambda variable (1-element array transform). Without this, every
-    textual reference to ``expr`` inside a lambda is re-evaluated per
-    array ELEMENT -- e.g. element_at(split(text), i) re-tokenizes the
-    whole document for every shingle, turning gram construction O(len^2)
-    (measured: 6s of an 8s signature stage at sf0.1)."""
-    return F.element_at(F.transform(F.array(expr), fn), 1)
-
-
-def _gram_array(text_col: str, n: int) -> "F.Column":
-    """Word n-gram shingles of a text column as array<string>.
-
-    Built from ``n`` shifted slices of the token array zipped with
-    concat: the text is split exactly once per row (see _bind), not once
-    per gram. Documents with fewer than ``n`` tokens yield an EMPTY
-    array: without the guard, slice lengths go non-positive and the job
-    dies on any corpus containing short/empty docs.
-    """
-    tokens = F.split(F.trim(F.col(text_col)), r"\s+")
-
-    def grams_from(t):
-        m = F.size(t) - (n - 1)
-        acc = F.slice(t, 1, m)
-        for j in range(1, n):
-            acc = F.zip_with(
-                acc,
-                F.slice(t, 1 + j, m),
-                lambda a, b: F.concat(a, F.lit(" "), b),
-            )
-        return acc
-
-    return _bind(
-        tokens,
-        lambda t: F.when(F.size(t) >= n, grams_from(t)).otherwise(
-            F.array().cast("array<string>")
-        ),
-    )
-
-
 def _shingles(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
     """Distinct word n-gram shingles per document (id, shingle)."""
     return (
         df.select(
             F.col(id_col).alias("id"),
-            F.explode(_gram_array(text_col, n)).alias("shingle"),
+            F.explode(text.ngrams(text_col, n)).alias("shingle"),
         )
         .distinct()
     )
@@ -277,15 +184,22 @@ def ngram_jaccard_pairs(
         .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
         .agg(F.count("*").alias("inter"))
     )
-    return (
+    return _jaccard_at_least(
         inter.join(counts.withColumnRenamed("id", "id_a").withColumnRenamed("n_sh", "na"), "id_a")
-        .join(counts.withColumnRenamed("id", "id_b").withColumnRenamed("n_sh", "nb"), "id_b")
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter")), 6
-            ),
-        )
+        .join(counts.withColumnRenamed("id", "id_b").withColumnRenamed("n_sh", "nb"), "id_b"),
+        threshold,
+    )
+
+
+def _jaccard_at_least(pairs: DataFrame, threshold: float) -> DataFrame:
+    """(id_a, id_b, inter, na, nb) -> (id_a, id_b, jaccard) for the pairs
+    whose shingle-set Jaccard, rounded to 6 dp, is at least
+    ``threshold``."""
+    jaccard = F.round(
+        F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter")), 6
+    )
+    return (
+        pairs.withColumn("jaccard", jaccard)
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
@@ -321,21 +235,6 @@ def _uh_params(num_hashes: int) -> list[tuple[int, int]]:
     return out
 
 
-def _base_hash(col, portable: bool):
-    """64-bit base hash of a string column, reduced mod MINHASH_P.
-
-    portable=False: xxhash64 (JVM-native, the production default).
-    portable=True:  15-hex-char slice of md5 -- bit-identical in DuckDB
-    (``CAST(concat('0x', substr(md5(s),1,15)) AS BIGINT)``), which is what
-    lets the driver hash-check the LSH operators against an oracle.
-    """
-    if portable:
-        h = F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
-    else:
-        h = F.xxhash64(col)
-    return F.pmod(h, F.lit(MINHASH_P))
-
-
 def minhash_signatures(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -358,11 +257,15 @@ def minhash_signatures(
     params = _uh_params(num_hashes)
     base = (
         df.select(
-            F.col(id_col).alias("id"), _gram_array(text_col, shingle_n).alias("_g")
+            F.col(id_col).alias("id"), text.ngrams(text_col, shingle_n).alias("_g")
         )
         .filter(F.size("_g") > 0)
         .withColumn(
-            "_hb", F.transform(F.col("_g"), lambda s: _base_hash(s, portable_hash))
+            "_hb",
+            F.transform(
+                F.col("_g"),
+                lambda s: F.pmod(text.hash64(s, portable_hash), F.lit(MINHASH_P)),
+            ),
         )
         # single pass over the base hashes: running elementwise min of all
         # num_hashes universal hashes at once (vs num_hashes array_min sweeps)
@@ -404,13 +307,8 @@ def lsh_buckets(
     for b in range(bands):
         cols = [F.col(f"mh{b * rows_per_band + r}") for r in range(rows_per_band)]
         if portable_hash:
-            bucket = F.conv(
-                F.substring(
-                    F.md5(F.concat_ws("_", *[c.cast("string") for c in cols])), 1, 15
-                ),
-                16,
-                10,
-            ).cast("long")
+            joined = F.concat_ws("_", *[c.cast("string") for c in cols])
+            bucket = text.hash64(joined, True)
         else:
             bucket = F.xxhash64(*cols)
         band_cols.append(
@@ -464,7 +362,7 @@ def minhash_lsh_pairs(
     (band, bucket) -> window + group + pair explode -> ONE exchange on
     the pair key.
     """
-    return _bucket_pairs(
+    return bucket_pairs(
         lsh_buckets(
             df, id_col, text_col, num_hashes, bands, shingle_n, portable_hash
         ),
@@ -472,36 +370,52 @@ def minhash_lsh_pairs(
     )
 
 
-def _bucket_pairs(buckets: DataFrame, max_bucket_size: int) -> DataFrame:
-    """(id, band, bucket) -> once-emitted candidate pairs with the number
-    of matching bands; window cap + in-row combination explode."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("band", "bucket")
-    capped = (
-        buckets.withColumn("_bsz", F.count("*").over(w))
-        .filter(F.col("_bsz") <= max_bucket_size)
-        .drop("_bsz")
-    )
-    grouped = (
-        capped.groupBy("band", "bucket")
-        .agg(F.sort_array(F.collect_list("id")).alias("ids"))
-        .filter(F.size("ids") >= 2)
-    )
-    pairs = F.flatten(
-        F.transform(
-            F.col("ids"),
-            lambda x, i: F.transform(
-                F.slice(F.col("ids"), i + 2, F.size(F.col("ids"))),
-                lambda y: F.struct(x.alias("id_a"), y.alias("id_b")),
-            ),
-        )
-    )
+def bucket_pairs(buckets: DataFrame, max_bucket_size: int) -> DataFrame:
+    """(id, band, bucket) -> once-emitted candidate pairs (id_a < id_b)
+    with the number of matching bands; see _capped_pair_explode."""
     return (
-        grouped.select("band", F.explode(pairs).alias("p"))
+        _capped_pair_explode(
+            buckets,
+            max_bucket_size,
+            F.col("id"),
+            lambda x, y: F.struct(x.alias("id_a"), y.alias("id_b")),
+        )
         .groupBy(F.col("p.id_a").alias("id_a"), F.col("p.id_b").alias("id_b"))
         .agg(F.countDistinct("band").alias("matching_bands"))
     )
+
+
+def _capped_pair_explode(
+    buckets: DataFrame, max_bucket_size: int, item: "F.Column", pair
+) -> DataFrame:
+    """(band, bucket, ...) rows -> (band, p): one row per pair of items
+    that share a band bucket, ``p = pair(x, y)`` with x before y in
+    ``item`` sort order.
+
+    Buckets holding more than ``max_bucket_size`` rows are dropped by a
+    window count first, so every collected list is bounded by the cap;
+    the pairs come from an in-row combination explode over that list
+    (no self-join), and the groupBy reuses the window's (band, bucket)
+    partitioning -- one exchange for cap, group and explode together.
+    """
+    w = Window.partitionBy("band", "bucket")
+    grouped = (
+        buckets.withColumn("_bsz", F.count("*").over(w))
+        .filter(F.col("_bsz") <= max_bucket_size)
+        .groupBy("band", "bucket")
+        .agg(F.sort_array(F.collect_list(item)).alias("ids"))
+        .filter(F.size("ids") >= 2)
+    )
+    ids = F.col("ids")
+    pairs = F.flatten(
+        F.transform(
+            ids,
+            lambda x, i: F.transform(
+                F.slice(ids, i + 2, F.size(ids)), lambda y: pair(x, y)
+            ),
+        )
+    )
+    return grouped.select("band", F.explode(pairs).alias("p"))
 
 
 def minhash_verified_pairs(
@@ -544,11 +458,11 @@ def minhash_verified_pairs(
         df.join(cand_ids, id_col, "left_semi")
         .select(
             F.col(id_col).alias("id"),
-            F.array_distinct(_gram_array(text_col, shingle_n)).alias("gs"),
+            F.array_distinct(text.ngrams(text_col, shingle_n)).alias("gs"),
         )
         .withColumn("n_sh", F.size("gs"))
     )
-    return (
+    return _jaccard_at_least(
         candidates.join(
             sets.select(
                 F.col("id").alias("id_a"),
@@ -565,13 +479,8 @@ def minhash_verified_pairs(
             ),
             "id_b",
         )
-        .withColumn("inter", F.size(F.array_intersect("ga", "gb")))
-        .withColumn(
-            "jaccard",
-            F.round(F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter")), 6),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
+        .withColumn("inter", F.size(F.array_intersect("ga", "gb"))),
+        threshold,
     )
 
 
@@ -599,18 +508,11 @@ def simhash64(
     count can never carry into bit 31 and the packed sum stays under
     2^62. The old +/-1 vote ``sum > 0`` is equivalent to
     ``2 * ones_count > n`` -- pinned against the unpacked formulation
-    in tests/test_round7_dedup_opt.py.
+    in tests/test_dedup.py.
     """
-    if portable_hash:
-        tok_hash = F.conv(F.substring(F.md5(F.col("tok")), 1, 15), 16, 10).cast(
-            "long"
-        )
-    else:
-        tok_hash = F.xxhash64("tok")
     tokens = df.select(
-        F.col(id_col).alias("id"),
-        F.explode(F.split(F.trim(F.col(text_col)), r"\s+")).alias("tok"),
-    ).withColumn("h", tok_hash)
+        F.col(id_col).alias("id"), F.explode(text.tokens(text_col)).alias("tok")
+    ).withColumn("h", text.hash64(F.col("tok"), portable_hash))
     one = F.lit(1).cast("long")
     packed_sums = [
         F.sum(
@@ -660,8 +562,6 @@ def simhash_neardup_pairs(
     """
     if max_hamming > bands - 1:
         raise ValueError("completeness requires max_hamming <= bands - 1")
-    from pyspark.sql import Window
-
     sims = simhash64(df, id_col, text_col, portable_hash)
     width = 64 // bands
     mask = (1 << width) - 1
@@ -669,7 +569,7 @@ def simhash_neardup_pairs(
         F.struct(
             F.lit(b).alias("band"),
             F.shiftright("simhash", b * width).bitwiseAND(F.lit(mask)).alias(
-                "chunk"
+                "bucket"
             ),
         )
         for b in range(bands)
@@ -678,38 +578,21 @@ def simhash_neardup_pairs(
         "id", "simhash", F.explode(F.array(*chunk_cols)).alias("bc")
     ).select(
         "id", "simhash",
-        F.col("bc.band").alias("band"), F.col("bc.chunk").alias("chunk"),
+        F.col("bc.band").alias("band"), F.col("bc.bucket").alias("bucket"),
     )
-    # window cap + in-row combination explode over (id, simhash) structs:
-    # single scan, no self-join (see _bucket_pairs); lists are bounded by
-    # the cap, so collect_list cannot blow on a hot chunk
-    w = Window.partitionBy("band", "chunk")
-    grouped = (
-        buckets.withColumn("_bsz", F.count("*").over(w))
-        .filter(F.col("_bsz") <= max_bucket_size)
-        .groupBy("band", "chunk")
-        .agg(
-            F.sort_array(F.collect_list(F.struct("id", "simhash"))).alias("xs")
-        )
-        .filter(F.size("xs") >= 2)
-    )
-    pairs = F.flatten(
-        F.transform(
-            F.col("xs"),
-            lambda x, i: F.transform(
-                F.slice(F.col("xs"), i + 2, F.size(F.col("xs"))),
-                lambda y: F.struct(
-                    x["id"].alias("id_a"),
-                    y["id"].alias("id_b"),
-                    F.bit_count(x["simhash"].bitwiseXOR(y["simhash"])).alias(
-                        "hamming"
-                    ),
+    return (
+        _capped_pair_explode(
+            buckets,
+            max_bucket_size,
+            F.struct("id", "simhash"),
+            lambda x, y: F.struct(
+                x["id"].alias("id_a"),
+                y["id"].alias("id_b"),
+                F.bit_count(x["simhash"].bitwiseXOR(y["simhash"])).alias(
+                    "hamming"
                 ),
             ),
         )
-    )
-    return (
-        grouped.select(F.explode(pairs).alias("p"))
         .select("p.id_a", "p.id_b", "p.hamming")
         .filter(F.col("hamming") <= max_hamming)
         .distinct()  # a pair can collide in several chunks

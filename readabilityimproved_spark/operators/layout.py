@@ -35,6 +35,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions import text
+
 #: US-Letter points; PDF's historical default media box width
 DEFAULT_PAGE_WIDTH = 612.0
 
@@ -202,7 +204,7 @@ def fake_pdf_blocks(
     """
     d = docs.select(
         F.col(id_col).alias("doc_id"),
-        F.split(F.trim(F.col(text_col)), r"\s+").alias("toks"),
+        text.tokens(text_col).alias("toks"),
     ).withColumn(
         "nb",
         F.ceil(F.size("toks") / F.lit(float(_TOKENS_PER_BLOCK))).cast("int"),

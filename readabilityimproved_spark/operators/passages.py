@@ -39,20 +39,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .dedup import _gram_array
+from ..functions import text
 
 
 def _gram_postings(
     df: DataFrame, id_col: str, text_col: str, n: int
 ) -> DataFrame:
     """(id, pos, h): 1-based token position of every n-gram start, with
-    the gram's xxhash64. Tokenization matches the rest of the repo:
-    split(trim(text), r"\\s+") — an all-whitespace document yields one
-    empty token, and a document shorter than ``n`` tokens yields no
-    postings (``_gram_array``'s guard)."""
+    the gram's xxhash64. Grams are functions.text.ngrams: a document
+    shorter than ``n`` tokens yields no postings."""
     return df.select(
         F.col(id_col).alias("id"),
-        F.posexplode(_gram_array(text_col, n)).alias("p0", "gram"),
+        F.posexplode(text.ngrams(text_col, n)).alias("p0", "gram"),
     ).select(
         "id",
         (F.col("p0") + 1).alias("pos"),
@@ -152,7 +150,7 @@ def strip_duplicate_passages(
             "array<struct<span_start:int,span_end:int>>"
         )),
     )
-    tokens = F.split(F.trim(F.col(text_col)), r"\s+")
+    tokens = text.tokens(text_col)
 
     def keep(t, i):
         # token index i is 0-based; spans are 1-based inclusive
@@ -162,7 +160,7 @@ def strip_duplicate_passages(
             lambda s: (s["span_start"] <= p) & (p <= s["span_end"]),
         )
 
-    # no _bind needed: `tokens` is the direct input of filter(), so the
+    # no text._bind needed: `tokens` is the direct input of filter(), so the
     # split runs once per row; the lambda never re-references it
     clean = F.concat_ws(" ", F.filter(tokens, keep))
     return joined.withColumn("clean_text", clean).drop("_spans")

@@ -36,6 +36,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .dedup import bucket_pairs
+
 _SCALED = "transform({col}, x -> cast(floor(cast(x as double) * 1000.0 + 0.5) as bigint))"
 _DOT = (
     "aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0L, (acc, v) -> acc + v)"
@@ -453,12 +455,10 @@ def embedding_neardup_pairs(
         F.col(id_col).alias("id"),
         F.explode(F.array(*bucket_structs)).alias("tb"),
     ).select("id", F.col("tb.tbl").alias("tbl"), F.col("tb.bucket").alias("bucket"))
-    # window cap + in-row combination explode (see dedup._bucket_pairs):
+    # window cap + in-row combination explode (see dedup.bucket_pairs):
     # one corpus scan, no self-join re-evaluating the bucket subtree;
     # the groupBy dedupes pairs across tables before any cosine math
-    from .dedup import _bucket_pairs
-
-    cand = _bucket_pairs(
+    cand = bucket_pairs(
         buckets.withColumnRenamed("tbl", "band"), max_bucket_size
     ).select("id_a", "id_b")
     return (

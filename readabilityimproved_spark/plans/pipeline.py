@@ -121,6 +121,23 @@ def _fs_list_part_dirs(spark: SparkSession, path: str) -> set[str]:
     }
 
 
+def _metrics_current(
+    spark: SparkSession, metrics_path: str, lineage_path: str
+) -> bool:
+    """True when the metrics table was committed (its ``_SUCCESS``
+    marker) after every lineage file was written, so a rollup now would
+    write the same rows. A few filesystem calls and one listing of the
+    lineage directory (one file per wave); no Spark job."""
+    fs, marker = _hadoop_fs(spark, os.path.join(metrics_path, "_SUCCESS"))
+    _, lineage = _hadoop_fs(spark, lineage_path)
+    if not (fs.exists(marker) and fs.exists(lineage)):
+        return False
+    committed = fs.getFileStatus(marker).getModificationTime()
+    return all(
+        st.getModificationTime() < committed for st in fs.listStatus(lineage)
+    )
+
+
 #: characters Hadoop's glob syntax treats specially; escaped in the
 #: literal root of a glob pattern
 _GLOB_SPECIAL = str.maketrans({c: "\\" + c for c in "\\*?[]{}"})
@@ -486,7 +503,13 @@ def run_extraction(
         else:
             spark.conf.set(overwrite_key, prev_mode)
 
-    # metrics rollup (declarative; AQE coalesces)
+    # metrics rollup (declarative; AQE coalesces). An attempt that ran
+    # no wave over a table committed after the last lineage write would
+    # only rewrite the same rows: skip it
+    if stats["waves_run"] == 0 and _metrics_current(
+        spark, metrics_path, lineage_path
+    ):
+        return stats
     try:
         _attempt_totals(_read_lineage(spark, lineage_path)).select(
             "attempt", "docs", "spans", "images", "errors", "wall_ms_sum",

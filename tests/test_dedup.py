@@ -1,9 +1,12 @@
-"""Round-7 dedup-tier optimization pins.
+"""Dedup tier (operators/dedup.py) and the shared text rules it uses
+(functions/text.py).
 
-simhash64 was rewritten to pack two per-bit majority counters into one
-long aggregate (63 sums -> 33), cutting codegen and per-row aggregate
-cost roughly in half. The simhash VALUES must be bit-identical to the
-unpacked formulation, reproduced inline here, for both hash families.
+* Every operator on the shared tokenizer survives short, empty,
+  whitespace-only and ``\xa0``-only documents.
+* simhash64 packs two per-bit majority counters into one long aggregate
+  (63 sums -> 33), cutting codegen and per-row aggregate cost roughly in
+  half. The simhash VALUES must be bit-identical to the unpacked
+  formulation, reproduced inline here, for both hash families.
 """
 
 from __future__ import annotations
@@ -11,18 +14,45 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from readabilityimproved_spark.operators.dedup import simhash64
+from readabilityimproved_spark.operators.curation import (
+    pack_sequences,
+    token_rarity_scores,
+)
+from readabilityimproved_spark.operators.dedup import (
+    minhash_lsh_pairs,
+    minhash_signatures,
+    minhash_verified_pairs,
+    ngram_jaccard_pairs,
+    simhash64,
+)
+from readabilityimproved_spark.operators.layout import fake_pdf_blocks
+from readabilityimproved_spark.operators.passages import (
+    strip_duplicate_passages,
+)
 
 SF_DIR = "/root/testdata/sf0.001"
 
 
-@pytest.fixture(scope="module")
-def spark():
-    from readabilityimproved_spark.plans.session import build_session
+def test_shingles_survive_short_and_empty_docs(spark):
+    rows = [("a", "one two three four five"), ("b", "too short"), ("c", ""),
+            ("d", "one"), ("e", "one two three four five"),
+            ("f", " \t\n "), ("g", "\xa0")]
+    df = spark.createDataFrame(rows, "doc_id string, text string")
+    # every operator in the shingle family runs to completion
+    assert ngram_jaccard_pairs(df, threshold=0.5).count() == 1  # (a, e)
+    sigs = minhash_signatures(df).collect()
+    assert {r["id"] for r in sigs} == {"a", "e"}  # <n-token docs dropped
+    assert minhash_lsh_pairs(df).count() >= 1
+    assert minhash_verified_pairs(df, threshold=0.5).count() == 1
+    assert simhash64(df).count() == 7  # simhash tokenizes, no shingle gate
+    # ... and so does every other operator on the shared tokenizer
+    assert token_rarity_scores(df).count() == 7
+    assert pack_sequences(df).count() == 7
+    assert strip_duplicate_passages(df, n=2).count() == 7
+    # one block per 4 tokens (an empty text is one empty token, so one
+    # block) plus one footer per page: a and e hold 2 blocks, the rest 1
+    assert fake_pdf_blocks(df).count() == 16
 
-    s = build_session(app_name="r07-dedup-test", master="local[4]",
-                      shuffle_partitions=8)
-    yield s
 
 
 def _old_simhash64(df, id_col="doc_id", text_col="text", portable_hash=False):

@@ -3,6 +3,7 @@ and its lineage/metrics contract (plans/pipeline.py)."""
 
 import logging
 import os
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -260,9 +261,10 @@ def _jobs_run(spark, group, fn):
 @pytest.fixture(scope="module")
 def resumed_twice(spark, corpus, tmp_path_factory):
     """Kill after wave 2 of 4, resume, append a wave-less legacy attempt
-    (id 111, two waves of wall 800 and 900, non-zero errors), then
-    resume once more with every part done. Returns the output dir and
-    the number of Spark jobs that last resume ran."""
+    (id 111, two waves of wall 800 and 900, non-zero errors), resume
+    with every part done (the lineage changed, so the metrics rollup
+    runs), then resume once more with nothing changed. Returns the
+    output dir and the number of Spark jobs that last resume ran."""
     out = str(tmp_path_factory.mktemp("rollup") / "out")
     P.run_extraction(
         spark, corpus, out, waves=4, resume=False, fail_after_wave=2
@@ -276,6 +278,7 @@ def resumed_twice(spark, corpus, tmp_path_factory):
         "part int, doc_count bigint, span_count bigint, image_count bigint,"
         " error_count bigint, status string, attempt int, wall_ms int",
     ).write.mode("append").parquet(os.path.join(out, "lineage"))
+    P.run_extraction(spark, corpus, out, waves=4, resume=True)
     jobs = _jobs_run(
         spark, "resume-all-done",
         lambda: P.run_extraction(spark, corpus, out, waves=4, resume=True),
@@ -286,7 +289,8 @@ def resumed_twice(spark, corpus, tmp_path_factory):
 def test_lineage_reads_run_one_job(spark, corpus, resumed_twice):
     """``completed_parts`` reads lineage with its declared schema in one
     job (no footer inference, no shuffle distinct), and a resume with
-    every part done runs at most 7 jobs."""
+    every part done and the metrics table current runs at most 3 jobs:
+    the input listing, its footer read and ``completed_parts``."""
     out, resume_jobs = resumed_twice
     lineage = os.path.join(out, "lineage")
     done = set()
@@ -296,7 +300,23 @@ def test_lineage_reads_run_one_job(spark, corpus, resumed_twice):
     )
     assert done == set(_visible_sizes(corpus)) | {90, 91}
     assert jobs == 1
-    assert resume_jobs <= 7
+    assert resume_jobs <= 3
+
+
+def test_resume_rewrites_a_missing_metrics_table(
+    spark, corpus, resumed_twice, tmp_path
+):
+    """A resume that runs no wave still writes the metrics table when it
+    is missing, with the rows the rollup gives."""
+    out, _ = resumed_twice
+    copy = str(tmp_path / "out")
+    shutil.copytree(out, copy)
+    want = sorted(spark.read.parquet(os.path.join(copy, "metrics")).collect())
+    shutil.rmtree(os.path.join(copy, "metrics"))
+    stats = P.run_extraction(spark, corpus, copy, waves=4, resume=True)
+    assert stats["waves_run"] == 0
+    got = spark.read.parquet(os.path.join(copy, "metrics")).collect()
+    assert sorted(got) == want
 
 
 def _by_rank(rows, wall_fields):

@@ -1,35 +1,14 @@
-"""Round-2 regression tests: ADVICE fixes (short-doc shingles, float32
-parity, idempotent wave writes, attribute escaping) and VERDICT asks
-(LSH bucket caps bound the join). Similarity tests live in
-test_similarity.py."""
+"""Round-2 regression tests: ADVICE fixes (float32 parity, idempotent
+wave writes, attribute escaping) and VERDICT asks (LSH bucket caps bound
+the join). Short-doc shingle tests live in test_dedup.py, similarity
+tests in test_similarity.py."""
 
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from readabilityimproved_spark.operators.dedup import (
-    minhash_lsh_pairs,
-    minhash_signatures,
-    minhash_verified_pairs,
-    ngram_jaccard_pairs,
-    simhash64,
-)
+from readabilityimproved_spark.operators.dedup import minhash_lsh_pairs
 from readabilityimproved_spark.operators.extract import reconstruct_html
-
-
-# --- ADVICE high: short docs must not crash the shingle path ---------------
-
-def test_shingles_survive_short_and_empty_docs(spark):
-    rows = [("a", "one two three four five"), ("b", "too short"), ("c", ""),
-            ("d", "one"), ("e", "one two three four five")]
-    df = spark.createDataFrame(rows, "doc_id string, text string")
-    # every operator in the shingle family runs to completion
-    assert ngram_jaccard_pairs(df, threshold=0.5).count() == 1  # (a, e)
-    sigs = minhash_signatures(df).collect()
-    assert {r["id"] for r in sigs} == {"a", "e"}  # <n-token docs dropped
-    assert minhash_lsh_pairs(df).count() >= 1
-    assert minhash_verified_pairs(df, threshold=0.5).count() == 1
-    assert simhash64(df).count() == 5  # simhash tokenizes, no shingle gate
 
 
 def test_minhash_portable_matches_xxhash_pairs_semantics(spark):

@@ -724,91 +724,6 @@ def test_repetition_and_prune_queries_are_narrow_maps(spark):
         assert "BatchScan" in plan or "Scan parquet" in plan, (name, plan[:500])
 
 
-# --- hash-slot prefilter for incremental dedup (round 6 addition) -----------
-
-def _prefilter_fixture(spark, tmp_path):
-    from readabilityimproved_spark.operators.dedup import (
-        build_fingerprint_index,
-    )
-
-    history = spark.createDataFrame(
-        [(i, f"doc body {i % 40}") for i in range(80)],
-        "doc_id long, text string",
-    )
-    idx = str(tmp_path / "fp_index")
-    build_fingerprint_index(history, idx, num_files=4)
-    # batch: 30 docs duplicating history content, 50 genuinely new
-    batch = spark.createDataFrame(
-        [(1000 + i, f"doc body {i}") for i in range(30)]
-        + [(2000 + i, f"fresh content {i}") for i in range(50)],
-        "doc_id long, text string",
-    )
-    return idx, batch
-
-
-@pytest.mark.parametrize("slots", [7, 1024, 1 << 20])
-def test_slot_prefilter_results_identical(spark, tmp_path, slots):
-    """The slot prefilter is an optimization, never a semantics change:
-    surviving ids must be identical with it on or off at ANY slot count
-    (false positives are resolved by the anti-join; a k=1 Bloom filter
-    has no false negatives). slots=7 forces heavy collisions."""
-    from readabilityimproved_spark.operators.dedup import dedup_against_index
-
-    idx, batch = _prefilter_fixture(spark, tmp_path)
-    plain = {
-        r["doc_id"] for r in dedup_against_index(spark, batch, idx).collect()
-    }
-    filtered = {
-        r["doc_id"]
-        for r in dedup_against_index(
-            spark, batch, idx, prefilter_slots=slots
-        ).collect()
-    }
-    assert plain == filtered
-    # fresh content survives, history dups are dropped
-    assert all(d >= 2000 for d in plain), sorted(plain)[:5]
-    assert len(plain) == 50
-
-
-def test_slot_prefilter_validates_arguments(spark, tmp_path):
-    from readabilityimproved_spark.operators.dedup import (
-        _PREFILTER_MAX_SLOTS,
-        dedup_against_index,
-    )
-
-    idx, batch = _prefilter_fixture(spark, tmp_path)
-    with pytest.raises(ValueError, match="prefilter_slots"):
-        dedup_against_index(spark, batch, idx, prefilter_slots=0)
-    with pytest.raises(ValueError, match="shard the index"):
-        dedup_against_index(
-            spark, batch, idx, prefilter_slots=_PREFILTER_MAX_SLOTS + 1
-        )
-
-
-def test_slot_prefilter_plan_shape(spark, tmp_path):
-    """The slot table must reach the batch side as BROADCAST semi/anti
-    hash joins (never an exchange), and the provably-fresh leg must
-    reach the output through a Union with no further join."""
-    from tests.test_plan_quality import plan_of
-
-    from readabilityimproved_spark.operators.dedup import dedup_against_index
-
-    idx, batch = _prefilter_fixture(spark, tmp_path)
-    out = dedup_against_index(spark, batch, idx, prefilter_slots=1024)
-    plan = plan_of(out)
-    assert "Union" in plan, plan[:3000]
-    import re as _re
-
-    # formatted sections: "(n) BroadcastHashJoin / Left keys [..slot..] /
-    # Right keys [...] / Join type: LeftX"
-    semi_anti = _re.findall(
-        r"\(\d+\) BroadcastHashJoin\s*\nLeft keys \[1\]: \[slot[^\n]*\n"
-        r"Right keys[^\n]*\nJoin type: (Left\w+)",
-        plan,
-    )
-    assert sorted(semi_anti) == ["LeftAnti", "LeftSemi"], (semi_anti, plan[:3000])
-
-
 # --- passage-level dedup + token rarity (round 6, late batch) ---------------
 
 _PASSAGE_CORPUS = [

@@ -42,6 +42,24 @@ def test_spread_repartitions_single_file_scan(spark, entry, tmp_path):
     assert sorted(r["doc_id"] for r in spread.collect()) == list(range(500))
 
 
+def test_spread_counts_files_without_listing_them(
+    spark, entry, tmp_path, monkeypatch
+):
+    """The guard counts input files on the JVM side: ``DataFrame.inputFiles``
+    would ship every file name through py4j into a Python list just to
+    take its length."""
+    one = str(tmp_path / "one")
+    spark.range(50).selectExpr("id as doc_id").coalesce(1).write.parquet(one)
+    df = spark.read.parquet(one)
+
+    def no_listing(self):
+        raise AssertionError("inputFiles() listed every file name")
+
+    monkeypatch.setattr(type(df), "inputFiles", no_listing)
+    spread = entry._spread(df, spark)
+    assert "RoundRobinPartitioning" in spread._jdf.queryExecution().toString()
+
+
 def test_spread_noop_for_many_files(spark, entry, tmp_path):
     many = str(tmp_path / "many")
     n_files = spark.sparkContext.defaultParallelism
