@@ -16,6 +16,10 @@ columns by name).
 
 from __future__ import annotations
 
+import atexit
+import os
+import shutil
+import tempfile
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -40,6 +44,9 @@ from readabilityimproved_spark.operators.similarity import (
 
 SPARK, DUCKDB = sqlgen.SPARK, sqlgen.DUCKDB
 
+#: index dirs already registered for removal at interpreter exit
+_INDEX_DIRS: set[str] = set()
+
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -51,6 +58,24 @@ def _tbl(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+
+
+def _index_dir(spark: SparkSession, sf_dir: str, kind: str) -> str:
+    """``<tempdir>/<kind>_index_<sf>_<appId>``: where a query persists
+    the index it builds, removed when the interpreter exits.
+
+    The application id makes the path unique PER DRIVER RUN: a fixed
+    shared path let two concurrent runs overwrite the index under each
+    other's live partition-pruned scans (ADVICE r3). Within one run the
+    path is stable, so repeated invocations (cold/warm bench) exercise
+    the overwrite path without piling up directories."""
+    tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
+    app_id = spark.sparkContext.applicationId
+    path = os.path.join(tempfile.gettempdir(), f"{kind}_index_{tag}_{app_id}")
+    if path not in _INDEX_DIRS:
+        _INDEX_DIRS.add(path)
+        atexit.register(shutil.rmtree, path, ignore_errors=True)
+    return path
 
 
 # ---------------------------------------------------------------------------
@@ -1713,25 +1738,13 @@ def q_similarity_ivf_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     cluster-partitioned corpus, ivf_topk_from_index probes it with a
     partition-pruned scan. Same arithmetic as similarity_ivf, so it
     shares that oracle (results must be identical)."""
-    import os
-    import tempfile
-
     from readabilityimproved_spark.operators.similarity import (
         build_ivf_index,
         ivf_topk_from_index,
     )
 
     emb = _emb(spark, sf_dir)
-    tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    # the application id makes the path unique PER DRIVER RUN: a fixed
-    # shared path let two concurrent runs overwrite the index under each
-    # other's live partition-pruned scans (ADVICE r3). Within one run the
-    # path is stable, so repeated invocations (cold/warm bench) exercise
-    # the overwrite path without piling up directories.
-    app_id = spark.sparkContext.applicationId
-    index_dir = os.path.join(
-        tempfile.gettempdir(), f"ivf_index_{tag}_{app_id}"
-    )
+    index_dir = _index_dir(spark, sf_dir, "ivf")
     build_ivf_index(
         emb, index_dir,
         num_centroids=_IVF_CENTROIDS, kmeans_iters=_IVF_ITERS,
@@ -1763,19 +1776,14 @@ SELECT doc_id, 'image' AS kind, cast(NULL as varchar) AS text,
 # scalar operator battery (same logic template rendered per dialect)
 # ---------------------------------------------------------------------------
 
-def _cast_str(x: str, dialect: str) -> str:
-    t = "string" if dialect == SPARK else "varchar"
-    return f"cast({x} as {t})"
-
-
 def _url_case(dialect: str) -> str:
     """Deterministic URL mix covering every date_from_url branch."""
-    y = _cast_str("1985 + doc_id % 40", dialect)
-    m = _cast_str("doc_id % 14", dialect)
-    d = _cast_str("1 + doc_id % 31", dialect)
-    m2 = f"lpad({_cast_str('doc_id % 14', dialect)}, 2, '0')"
-    d2 = f"lpad({_cast_str('1 + doc_id % 31', dialect)}, 2, '0')"
-    yy = f"lpad({_cast_str('(1985 + doc_id % 40) % 100', dialect)}, 2, '0')"
+    y = sqlgen.cast_str("1985 + doc_id % 40", dialect)
+    m = sqlgen.cast_str("doc_id % 14", dialect)
+    d = sqlgen.cast_str("1 + doc_id % 31", dialect)
+    m2 = f"lpad({sqlgen.cast_str('doc_id % 14', dialect)}, 2, '0')"
+    d2 = f"lpad({sqlgen.cast_str('1 + doc_id % 31', dialect)}, 2, '0')"
+    yy = f"lpad({sqlgen.cast_str('(1985 + doc_id % 40) % 100', dialect)}, 2, '0')"
     return f"""CASE cast(doc_id % 6 as int)
  WHEN 0 THEN 'http://h/' || {y} || '-' || {m} || '/' || {d} || '/a.html'
  WHEN 1 THEN 'http://h/' || {y} || {m2} || {d2} || '/x.html'
@@ -1816,11 +1824,11 @@ def _redact_pii_query(dialect: str) -> str:
     """PII injected deterministically from doc_id (the synth corpus has
     none), then redacted via the shared dialect template -- pins every
     rule: email, card-shaped run, IPv4, phone shape."""
-    did = _cast_str("doc_id", dialect)
-    p3 = f"lpad({_cast_str('doc_id % 1000', dialect)}, 3, '0')"
-    p4 = f"lpad({_cast_str('doc_id % 10000', dialect)}, 4, '0')"
-    ip2 = _cast_str("doc_id % 200", dialect)
-    ip3 = _cast_str("(doc_id * 7) % 250", dialect)
+    did = sqlgen.cast_str("doc_id", dialect)
+    p3 = f"lpad({sqlgen.cast_str('doc_id % 1000', dialect)}, 3, '0')"
+    p4 = f"lpad({sqlgen.cast_str('doc_id % 10000', dialect)}, 4, '0')"
+    ip2 = sqlgen.cast_str("doc_id % 200", dialect)
+    ip3 = sqlgen.cast_str("(doc_id * 7) % 250", dialect)
     injected = (
         f"(substr(text, 1, 60) || ' reach user' || {did}"
         f" || '@mail.example.com or 555-' || {p3} || '-' || {p4}"
@@ -1886,7 +1894,7 @@ FROM documents
 
 
 def _url_normalize_query(dialect: str) -> str:
-    d = _cast_str("doc_id", dialect)
+    d = sqlgen.cast_str("doc_id", dialect)
     case = f"""CASE cast(doc_id % 6 as int)
  WHEN 0 THEN 'HTTP://Example.COM:80/Path/' || {d} || '?a=1#frag'
  WHEN 1 THEN 'https://H' || {d} || '.com:443?'
@@ -1993,20 +2001,13 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     against history), appends ' v2' to the rest, and adds within-batch
     duplicates of the v2 texts for ids % 4 == 0 (only the min-id copy
     survives). Emits surviving batch doc_ids."""
-    import os
-    import tempfile
-
     from readabilityimproved_spark.operators.dedup import (
         build_fingerprint_index,
         dedup_against_index,
     )
 
     docs = _docs(spark, sf_dir).select("doc_id", "text")
-    tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    app_id = spark.sparkContext.applicationId
-    index_path = os.path.join(
-        tempfile.gettempdir(), f"fp_index_{tag}_{app_id}"
-    )
+    index_path = _index_dir(spark, sf_dir, "fp")
     build_fingerprint_index(docs, index_path)
     new = docs.select(
         (F.col("doc_id") + 1000000).alias("doc_id"),

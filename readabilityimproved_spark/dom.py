@@ -234,9 +234,6 @@ class Element:
     def has_attr(self, key: str) -> bool:
         return key.lower() in self.attrs
 
-    def remove_attr(self, key: str) -> None:
-        self.attrs.pop(key.lower(), None)
-
     def class_name(self) -> str:
         return self.attr("class")
 
@@ -250,14 +247,6 @@ class Element:
             node.parent.children.remove(node)
         node.parent = self
         self.children.append(node)
-        self._bump()
-
-    def prepend_child(self, node: "Element | TextNode") -> None:
-        if node.parent is not None:
-            node.parent._bump()
-            node.parent.children.remove(node)
-        node.parent = self
-        self.children.insert(0, node)
         self._bump()
 
     def remove(self) -> None:
@@ -278,17 +267,6 @@ class Element:
         if self.parent is None:
             return []
         return [c for c in self.parent.child_elements() if c is not self]
-
-    def next_element_sibling(self) -> "Element | None":
-        if self.parent is None:
-            return None
-        seen = False
-        for c in self.parent.children:
-            if c is self:
-                seen = True
-            elif seen and isinstance(c, Element):
-                return c
-        return None
 
     def iter_elements(self, include_self: bool = True):
         """Preorder traversal of element descendants."""

@@ -24,6 +24,8 @@ group in BOTH dialects -- equivalent for leftmost-first extraction.
 
 from __future__ import annotations
 
+from .. import patterns
+
 SPARK = "spark"
 DUCKDB = "duckdb"
 
@@ -78,7 +80,7 @@ def _date_plus(d: str, n: str, dialect: str) -> str:
     return f"date_add({d}, {n})" if dialect == SPARK else f"({d} + ({n}))"
 
 
-def _cast_str(x: str, dialect: str) -> str:
+def cast_str(x: str, dialect: str) -> str:
     t = "string" if dialect == SPARK else "varchar"
     return f"cast({x} as {t})"
 
@@ -96,8 +98,8 @@ _L2 = r"(^|[^0-9])([0-9][0-9])[-_./]([01]?[0-9])[-_./]([0123]?[0-9])[^0-9]"
 
 def _fmt(y: str, m: str, d: str, dialect: str) -> str:
     return (
-        f"({y} || '-' || lpad({_cast_str(m, dialect)}, 2, '0')"
-        f" || '-' || lpad({_cast_str(d, dialect)}, 2, '0'))"
+        f"({y} || '-' || lpad({cast_str(m, dialect)}, 2, '0')"
+        f" || '-' || lpad({cast_str(d, dialect)}, 2, '0'))"
     )
 
 
@@ -138,7 +140,7 @@ def date_from_url_sql(url: str, dialect: str, ref_date: str = REF_DATE_SQL) -> s
     p3 = (
         f"CASE WHEN {m3} BETWEEN 1 AND 12 AND {dd3} BETWEEN 1 AND 31"
         f" AND {y3} > 1990"
-        f" THEN {_fmt(_cast_str(y3, dialect), m3, dd3, dialect)} END"
+        f" THEN {_fmt(cast_str(y3, dialect), m3, dd3, dialect)} END"
     )
 
     # L1 pattern 4: m?m/d?d/yyyy
@@ -185,11 +187,9 @@ def comma_segments_sql(s: str, dialect: str) -> str:
     )
 
 
-NEGATIVE_RE = (
-    r"(?i)combx|comment|contact|foot|footer|footnote|link|media|meta|promo"
-    r"|related|scroll|shoutbox|sponsor|tags|widget|share|scan"
-)
-POSITIVE_RE = r"(?i)article|body|content|entry|hentry|page|pagination|post|text|main"
+#: the kernel's img-variant class/id rules (patterns.py), case-folded
+NEGATIVE_RE = "(?i)" + patterns.NEGATIVE_IMGVARIANT.pattern
+POSITIVE_RE = "(?i)" + patterns.POSITIVE_IMGVARIANT.pattern
 
 
 def class_weight_sql(cls: str, node_id: str, dialect: str) -> str:
@@ -369,8 +369,7 @@ def _tokens_lower(s: str, dialect: str) -> str:
 def _bind_spark(value: str, var: str, body: str) -> str:
     """Spark-only let-binding: evaluate ``value`` ONCE per row and hand
     it to ``body`` as the lambda variable ``var`` (1-element array
-    transform -- the same trick as functions.text._bind, rendered as SQL
-    text).
+    transform).
 
     Spark performs common-subexpression elimination inside a projection
     but NOT inside higher-order-function lambda bodies, so an array
@@ -381,9 +380,12 @@ def _bind_spark(value: str, var: str, body: str) -> str:
     return f"element_at(transform(array({value}), {var} -> {body}), 1)"
 
 
-def _ngrams(w: str, n: int, dialect: str) -> str:
+def ngrams_sql(w: str, n: int, dialect: str) -> str:
     """Space-joined word n-grams of the token array ``w`` (n >= 1),
-    preserving in-row order; empty array when fewer than n tokens."""
+    preserving in-row order; empty array when fewer than n tokens, and
+    NULL when ``w`` is NULL. The one n-gram builder: the repetition
+    metrics render it here, and functions.text.ngrams is its Column
+    form for the corpus tier."""
     if n == 1:
         return w
     if dialect == SPARK:
@@ -413,7 +415,7 @@ def dup_ngram_frac_sql(s: str, n: int, dialect: str) -> str:
     to 4 dp. ``n=1`` measures duplicate words. Pure per-row array math:
     no shuffle, no UDF -- the metric a 100-TB quality pass can compute
     in the same narrow map as the rest of the scalar battery."""
-    g = _ngrams(_tokens_lower(s, dialect), n, dialect)
+    g = ngrams_sql(_tokens_lower(s, dialect), n, dialect)
     distinct_fn = "array_distinct" if dialect == SPARK else "list_distinct"
     if dialect == SPARK:
         # bind the gram array too: total/uniq reference it twice, and

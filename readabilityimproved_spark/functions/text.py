@@ -3,12 +3,12 @@ r"""Whitespace-token text rules shared by the corpus tier
 each of the tokenizer, the word n-gram builder, the 64-bit hash and the
 content fingerprint.
 
-The tokenizer and the fingerprint are rendered from the
-:mod:`functions.sqlgen` templates that also give the DuckDB oracles
-their SQL, so an operator and its oracle cannot drift apart. Column
-names are backtick-quoted before rendering (a dotted struct path would
-be quoted whole and not resolve -- project the field to a top-level
-column first).
+The tokenizer, the n-gram builder and the fingerprint are rendered from
+the :mod:`functions.sqlgen` templates that also give the DuckDB oracles
+and the repetition metrics their SQL, so an operator and its oracle
+cannot drift apart. Column names are backtick-quoted before rendering
+(a dotted struct path would be quoted whole and not resolve -- project
+the field to a top-level column first).
 """
 
 from __future__ import annotations
@@ -32,43 +32,18 @@ def tokens(col: str) -> Column:
     return F.expr(sqlgen.tokens_sql(_quoted(col), sqlgen.SPARK))
 
 
-def _bind(expr: Column, fn) -> Column:
-    """Evaluate ``expr`` ONCE per row and pass the value to ``fn`` as a
-    lambda variable (1-element array transform). Without this, every
-    textual reference to ``expr`` inside a lambda is re-evaluated per
-    array ELEMENT -- e.g. element_at(split(text), i) re-tokenizes the
-    whole document for every shingle, turning gram construction O(len^2)
-    (measured: 6s of an 8s signature stage at sf0.1)."""
-    return F.element_at(F.transform(F.array(expr), fn), 1)
-
-
 def ngrams(col: str, n: int) -> Column:
-    """Word n-gram shingles of a text column as array<string>.
+    """Word n-gram shingles of a text column as array<string>
+    (:func:`functions.sqlgen.ngrams_sql` over :func:`tokens`).
 
-    Built from ``n`` shifted slices of the token array zipped with
-    concat: the text is split exactly once per row (see _bind), not once
-    per gram. Documents with fewer than ``n`` tokens yield an EMPTY
-    array: without the guard, slice lengths go non-positive and the job
-    dies on any corpus containing short/empty docs.
+    The token array is bound once per row, so the text is split once,
+    not once per gram. A document with fewer than ``n`` tokens, and a
+    NULL one, yields an EMPTY array.
     """
-
-    def grams_from(t):
-        m = F.size(t) - (n - 1)
-        acc = F.slice(t, 1, m)
-        for j in range(1, n):
-            acc = F.zip_with(
-                acc,
-                F.slice(t, 1 + j, m),
-                lambda a, b: F.concat(a, F.lit(" "), b),
-            )
-        return acc
-
-    return _bind(
-        tokens(col),
-        lambda t: F.when(F.size(t) >= n, grams_from(t)).otherwise(
-            F.array().cast("array<string>")
-        ),
+    grams = sqlgen.ngrams_sql(
+        sqlgen.tokens_sql(_quoted(col), sqlgen.SPARK), n, sqlgen.SPARK
     )
+    return F.expr(f"coalesce({grams}, cast(array() as array<string>))")
 
 
 def hash64(col: Column, portable: bool) -> Column:

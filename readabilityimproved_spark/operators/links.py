@@ -72,6 +72,14 @@ def _outlinks(row, html, base_uri, max_links):
         link_no += 1
 
 
+def _host(url_col: str) -> F.Column:
+    """The lowercased host of a URL column, NULL for a malformed URL.
+    try_parse_url, not parse_url: a malformed URL must become NULL (the
+    callers drop it), not an [INVALID_URL] job failure — one bad row in
+    10^12 cannot be allowed to kill the aggregation."""
+    return F.lower(F.try_parse_url(F.col(url_col), F.lit("HOST")))
+
+
 def extract_outlinks(df: DataFrame, max_links_per_doc: int = 10_000) -> DataFrame:
     """documents(doc_id, spans[, base_uri]) ->
     (doc_id, link_no, url, anchor, rel): every resolvable anchor, in
@@ -108,11 +116,8 @@ def host_link_graph(
     are lowercased; rows whose src or dst host cannot be parsed are
     dropped (a graph edge needs both ends).
     """
-    # try_parse_url: a malformed URL must become NULL (dropped below),
-    # not an [INVALID_URL] job failure — one bad row in 10^12 cannot be
-    # allowed to kill the aggregation
-    src = F.lower(F.try_parse_url(F.col(src_url_col), F.lit("HOST")))
-    dst = F.lower(F.try_parse_url(F.col("url"), F.lit("HOST")))
+    src = _host(src_url_col)
+    dst = _host("url")
     return (
         outlinks.select(src.alias("src_host"), dst.alias("dst_host"))
         .filter(F.col("src_host").isNotNull() & F.col("dst_host").isNotNull())
@@ -151,7 +156,7 @@ def anchor_text_topk(
     if by not in ("host", "url"):
         raise ValueError(f"by must be 'host' or 'url', got {by!r}")
     if by == "host":
-        dst = F.lower(F.try_parse_url(F.col("url"), F.lit("HOST")))
+        dst = _host("url")
     else:
         dst = F.col("url")
     agg = (
@@ -230,9 +235,7 @@ def crawl_frontier(
         .select(norm.alias("url"))
         .filter(F.col("url").isNotNull())
     )
-    fresh = cand.join(seen, "url", "left_anti").withColumn(
-        "host", F.lower(F.try_parse_url(F.col("url"), F.lit("HOST")))
-    )
+    fresh = cand.join(seen, "url", "left_anti").withColumn("host", _host("url"))
     # an unparsable candidate (no host) cannot be fetched: drop it here
     # rather than hand the crawler a NULL-host partition
     fresh = fresh.filter(F.col("host").isNotNull() & (F.col("host") != ""))
@@ -253,7 +256,6 @@ def host_pagerank(
     src_col: str = "src_host",
     dst_col: str = "dst_host",
     weight_col: str | None = "n_links",
-    checkpoint_every: int = 1,
 ) -> DataFrame:
     """(host, pr): PageRank over the host link graph after a FIXED
     number of synchronous power-method rounds — the crawl-scheduling /
@@ -277,24 +279,18 @@ def host_pagerank(
     distributed PageRank; a mega-host's million in-edges collapse
     map-side. The dangling mass is a one-row aggregate broadcast back
     over the node set. Each round's rank vector references the
-    previous round TWICE (contrib and dangling branches), so by
-    default every round is lazily localCheckpoint-ed
-    (``checkpoint_every=1``): both branches then read one cached
-    block set instead of doubling the plan per round. The only driver
-    action is the node count (a control-plane scalar needed for the
-    uniform prior). Executor-loss
-    durability follows the repo's localCheckpoint discipline (cf.
-    `graph.py`): a lost executor restarts the job, acceptable for a
-    fixed-round batch prior.
+    previous round TWICE (contrib and dangling branches), so every
+    round is lazily localCheckpoint-ed: both branches then read one
+    cached block set instead of doubling the plan per round. The only
+    driver action is the node count (a control-plane scalar needed for
+    the uniform prior). Executor-loss durability follows the repo's
+    localCheckpoint discipline (cf. `graph.py`): a lost executor
+    restarts the job, acceptable for a fixed-round batch prior.
     """
     if not 0.0 < damping < 1.0:
         raise ValueError(f"damping must be in (0, 1), got {damping}")
     if iterations < 1:
         raise ValueError(f"iterations must be >= 1, got {iterations}")
-    if checkpoint_every < 1:
-        raise ValueError(
-            f"checkpoint_every must be >= 1, got {checkpoint_every}"
-        )
     for c in (src_col, dst_col) + (
         (weight_col,) if weight_col is not None else ()
     ):
@@ -377,7 +373,7 @@ def host_pagerank(
                 ).alias("pr"),
             )
         )
-        if (i + 1) % checkpoint_every == 0 and i + 1 < iterations:
+        if i + 1 < iterations:
             pr = pr.localCheckpoint(eager=False)
     return pr
 
@@ -391,7 +387,7 @@ def registrable_domain(url_col: str, labels: int = 2) -> F.Column:
     Malformed URLs yield NULL."""
     if labels < 1:
         raise ValueError(f"labels must be >= 1, got {labels}")
-    host = F.lower(F.try_parse_url(F.col(url_col), F.lit("HOST")))
+    host = _host(url_col)
     # drop empty labels: a trailing-dot FQDN ('example.com.') splits to
     # ['example','com',''] and would key as 'com.', silently escaping
     # the blocklist (round-6 advice)

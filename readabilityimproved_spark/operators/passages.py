@@ -160,7 +160,8 @@ def strip_duplicate_passages(
             lambda s: (s["span_start"] <= p) & (p <= s["span_end"]),
         )
 
-    # no text._bind needed: `tokens` is the direct input of filter(), so the
-    # split runs once per row; the lambda never re-references it
+    # no let-binding needed (cf. sqlgen._bind_spark): `tokens` is the
+    # direct input of filter(), so the split runs once per row; the
+    # lambda never re-references it
     clean = F.concat_ws(" ", F.filter(tokens, keep))
     return joined.withColumn("clean_text", clean).drop("_spans")

@@ -7,13 +7,18 @@
   (63 sums -> 33), cutting codegen and per-row aggregate cost roughly in
   half. The simhash VALUES must be bit-identical to the unpacked
   formulation, reproduced inline here, for both hash families.
+* text.ngrams renders the sqlgen n-gram template; its grams must equal
+  the Column ``zip_with`` builder it replaced, reproduced inline here.
 """
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
+from readabilityimproved_spark.functions import text
 from readabilityimproved_spark.operators.curation import (
     pack_sequences,
     token_rarity_scores,
@@ -122,3 +127,55 @@ def test_simhash64_schema_unchanged(spark):
         simhash64(docs, portable_hash=True).schema
         == _old_simhash64(docs, portable_hash=True).schema
     )
+
+
+def _old_bind(expr, fn):
+    """The pre-sqlgen text._bind, verbatim."""
+    return F.element_at(F.transform(F.array(expr), fn), 1)
+
+
+def _old_ngrams(col, n):
+    """The pre-sqlgen text.ngrams, verbatim: n shifted slices of the
+    token array zipped with concat."""
+
+    def grams_from(t):
+        m = F.size(t) - (n - 1)
+        acc = F.slice(t, 1, m)
+        for j in range(1, n):
+            acc = F.zip_with(
+                acc,
+                F.slice(t, 1 + j, m),
+                lambda a, b: F.concat(a, F.lit(" "), b),
+            )
+        return acc
+
+    return _old_bind(
+        text.tokens(col),
+        lambda t: F.when(F.size(t) >= n, grams_from(t)).otherwise(
+            F.array().cast("array<string>")
+        ),
+    )
+
+
+def test_ngrams_match_zip_with_builder(spark):
+    sf001 = os.path.join(os.path.dirname(SF_DIR), "sf0.01")
+    docs = spark.read.parquet(f"{sf001}/documents.parquet").select(
+        "doc_id", "text"
+    )
+    edge = spark.createDataFrame(
+        [(-1, None), (-2, ""), (-3, " \t\n "), (-4, "\nfoo\n"),
+         (-5, "\xa0")],
+        "doc_id bigint, text string",
+    )
+    ns = range(1, 7)
+    both = docs.unionByName(edge).select(
+        "doc_id",
+        *[text.ngrams("text", n).alias(f"new{n}") for n in ns],
+        *[_old_ngrams("text", n).alias(f"old{n}") for n in ns],
+    )
+    for n in ns:
+        assert both.schema[f"new{n}"].dataType == both.schema[f"old{n}"].dataType
+    differs = " OR ".join(f"NOT (new{n} <=> old{n})" for n in ns)
+    assert both.filter(differs).count() == 0
+    # a NULL text is an empty gram array, not NULL
+    assert both.filter("doc_id = -1").first()["new3"] == []

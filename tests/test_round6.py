@@ -1348,17 +1348,15 @@ def test_host_pagerank_drops_invalid_and_validates(spark):
         host_pagerank(edges, damping=1.0)
     with _pytest.raises(ValueError, match="iterations"):
         host_pagerank(edges, iterations=0)
-    with _pytest.raises(ValueError, match="checkpoint_every"):
-        host_pagerank(edges, checkpoint_every=0)
     with _pytest.raises(ValueError, match="column 'missing'"):
         host_pagerank(edges, weight_col="missing")
 
 
 def test_host_pagerank_plan_bounded_and_no_data_nlj(spark):
-    """Lineage truncates every round (default checkpoint_every=1), so
-    the 10-iteration plan stays O(rounds) instead of doubling per
-    round; the only nested-loop build sides are the one-row dangling
-    aggregates; contrib aggregation is partial before its exchange."""
+    """Lineage truncates every round, so the 10-iteration plan stays
+    O(rounds) instead of doubling per round; the only nested-loop build
+    sides are the one-row dangling aggregates; contrib aggregation is
+    partial before its exchange."""
     from tests.test_plan_quality import plan_of
 
     from readabilityimproved_spark.operators.links import host_pagerank
@@ -1373,10 +1371,4 @@ def test_host_pagerank_plan_bounded_and_no_data_nlj(spark):
     assert "CartesianProduct" not in plan10
     assert "partial_sum" in plan10 or "partial sum" in plan10.lower(), (
         plan10[:3000]
-    )
-    # un-checkpointed rounds double the plan: 4 rounds at
-    # checkpoint_every=4 must still stay a real plan, just bigger
-    plan4 = plan_of(host_pagerank(edges, iterations=4, checkpoint_every=4))
-    assert len(plan4.split("\n\n")[0].splitlines()) > len(
-        tree10.splitlines()
     )
