@@ -5,9 +5,16 @@ Scale design (BASELINE.json north_rule — explicit partitioning, skew
 handling, checkpoint/resume):
 
 * the corpus carries a stored ``part`` column (``hash(doc_id) % P``,
-  written as a parquet partition column) so both the resume filter and
-  the wave filter become **partition-pruned scans** — at 10^12 docs a
-  resume touches only unfinished partitions' files;
+  written as a parquet partition column), so each wave reads **only its
+  own** ``part=N`` **dirs**, named from the part inventory (below) with
+  ``basePath`` -- the corpus root is never read, so no attempt lists
+  every partition before it knows which are done, and at 10^12 docs a
+  resume touches only unfinished partitions' files. The first wave
+  that runs infers the schema (one footer job); later waves pass it.
+  A wave of more than ``parallelPartitionDiscovery.threshold`` (32)
+  dirs still lists them in one parallel Spark job, but only its own.
+  A flat corpus with a stored ``part`` column, or one whose part is
+  derived, is read at the root and filtered per wave instead;
 * work proceeds in **waves** of partitions; each wave writes the
   ``extracted`` output (partitioned by ``part``) via **dynamic partition
   overwrite** — idempotent, so a crash between the extracted write and
@@ -21,10 +28,11 @@ handling, checkpoint/resume):
   retry/speculation -- with a constant-size result-stage ``observe()``
   cross-check;
 * the wave plan is a pure function of the input's part inventory and
-  sizes (ONE ``globStatus`` listing per attempt), so a resumed attempt
-  runs the unfinished waves of the ORIGINAL plan, done parts dropped
-  and empty waves skipped, and lineage ``wave`` indices are stable
-  across attempts;
+  sizes (ONE ``globStatus`` listing per attempt, which is also what
+  each wave reads), so a resumed attempt runs the unfinished waves of
+  the ORIGINAL plan, done parts dropped and empty waves skipped, and
+  lineage ``wave`` indices are stable across attempts; a resume with
+  every part done runs one Spark job (``completed_parts``);
 * a wave's fixed cost is kept to its Spark jobs: writer tasks are
   capped at ``parallelism``, the committed re-read passes the schema
   it just wrote (no footer-inference job), and lineage rows reach the
@@ -43,7 +51,10 @@ handling, checkpoint/resume):
   items);
 * everything relational (resume anti-filter, metrics rollup) is plain
   DataFrame code — Catalyst/AQE handle pushdown and small-side
-  broadcast; the only Python worker runs the Arrow kernel.
+  broadcast; the only Python worker runs the Arrow kernel. The rollup
+  runs over one partition of the tiny lineage table: one Spark job;
+* each committed wave logs one INFO line (wave i of n, parts, docs,
+  seconds, docs/s) from values the run already holds -- no extra job.
 
 The reference analogue of lineage/metrics is its per-page timing print
 and debug DOM dump (Extractor.java:103-108; ReadabilityForImg.java:786-791).
@@ -147,15 +158,16 @@ def _fs_part_sizes(
     spark: SparkSession, path: str
 ) -> tuple[dict[int, int], set[str]]:
     """(bytes per ``part=N`` directory, set of ``part=`` directory
-    names whose value does NOT parse as an int) under ``path`` from ONE
-    ``globStatus(<path>/part=*/*)`` call (the same single-listing
-    discipline as _fs_list_part_dirs -- never one call per partition).
-    Only files directly inside a ``part=`` directory count; checksum
-    ``.crc`` files are filtered by the checksummed filesystem. Both
-    empty when the input is not part-partitioned. The unparsed set
-    exists so callers cannot mistake a partial inventory for a complete
-    one: ``part=__HIVE_DEFAULT_PARTITION__`` (null-part rows) must not
-    be silently skipped.
+    names whose value is NOT an int as Spark writes it) under ``path``
+    from ONE ``globStatus(<path>/part=*/*)`` call (the same
+    single-listing discipline as _fs_list_part_dirs -- never one call
+    per partition). Only files directly inside a ``part=`` directory
+    count; checksum ``.crc`` files are filtered by the checksummed
+    filesystem. Both empty when the input is not part-partitioned. The
+    unparsed set exists so callers cannot mistake a partial inventory
+    for a complete one: ``part=__HIVE_DEFAULT_PARTITION__`` (null-part
+    rows) must not be silently skipped, and a hand-made ``part=07``
+    holds part 7 but is not the ``part=7`` dir a wave would read.
 
     ``globStatus`` rather than a recursive ``listFiles``: the latter
     builds a ``LocatedFileStatus`` per file, which loads permissions --
@@ -174,6 +186,8 @@ def _fs_part_sizes(
         try:
             part = int(parent[5:])
         except ValueError:
+            part = None
+        if parent != f"part={part}":
             unparsed.add(parent)
             continue
         sizes[part] = sizes.get(part, 0) + int(st.getLen())
@@ -235,13 +249,24 @@ def _attempt_totals(lineage: DataFrame) -> DataFrame:
     keeps a multi-wave legacy attempt (all in wave -1) apart by its
     per-wave walls -- two legacy waves that measured the exact same
     wall merge, slightly undercounting, which beats the 2-3x undercount
-    of one max() over all waves."""
-    per_wave = lineage.groupBy("attempt", "wave", "wall_ms").agg(
-        F.countDistinct("part").alias("parts"),
-        F.sum("doc_count").alias("docs"),
-        F.sum("span_count").alias("spans"),
-        F.sum("image_count").alias("images"),
-        F.sum("error_count").alias("errors"),
+    of one max() over all waves.
+
+    Both groupBys run over ``lineage.coalesce(1)``. That is safe because
+    lineage is tiny -- one row per part per wave, five numbers and a
+    status each, so even 10^5 parts fit one task -- and one partition
+    satisfies both groupings: the rollup plans no exchange and runs as
+    ONE Spark job instead of one per shuffle stage (``job_summary``'s
+    orderBy then needs no range-sampling job either)."""
+    per_wave = (
+        lineage.coalesce(1)
+        .groupBy("attempt", "wave", "wall_ms")
+        .agg(
+            F.countDistinct("part").alias("parts"),
+            F.sum("doc_count").alias("docs"),
+            F.sum("span_count").alias("spans"),
+            F.sum("image_count").alias("images"),
+            F.sum("error_count").alias("errors"),
+        )
     )
     return per_wave.groupBy("attempt").agg(
         F.count(F.lit(1)).alias("waves"),
@@ -297,10 +322,6 @@ def run_extraction(
     lineage_path = os.path.join(output_dir, "lineage")
     metrics_path = os.path.join(output_dir, "metrics")
 
-    docs_raw = spark.read.parquet(input_path)
-    has_stored_part = "part" in docs_raw.columns
-    docs = with_part(docs_raw, num_parts)
-
     if not resume:
         # a rerun into a populated output_dir would otherwise mix attempts:
         # partitions the new run doesn't write keep stale data and old
@@ -313,35 +334,41 @@ def run_extraction(
     # every part >= num_parts -- a partial run reporting success.
     # Resolution order, cheapest first:
     #  * part=N layout on disk: the single recursive listing already
-    #    fetched for wave sizing IS the part inventory -- no Spark job.
+    #    fetched for wave sizing IS the part inventory -- no Spark job --
+    #    and each wave reads only its own part=N dirs from it, so the
+    #    corpus root is never read (docs stays None).
     #    Guard: a part= directory whose value does not parse as an int
     #    (e.g. part=__HIVE_DEFAULT_PARTITION__ from null-part rows)
     #    would be silently absent from the listing-derived inventory --
     #    those docs would land in no wave while the run reports
-    #    success. Fall back to the distinct discovery, which surfaces
-    #    the null loudly (sorted() over None raises);
+    #    success. Fall back to the root read and the distinct
+    #    discovery, which surfaces the null loudly;
     #  * stored `part` column, unpartitioned layout: one bounded
     #    distinct job (column-pruned scan of `part` only);
     #  * derived part (with_part xxhash64): pmod's range IS
     #    0..num_parts-1, so range() is exact -- a distinct here would
     #    be a full corpus scan just to rediscover it.
     part_sizes, unparsed_part_dirs = _fs_part_sizes(spark, input_path)
+    docs = None
     if part_sizes and not unparsed_part_dirs:
         actual_parts = sorted(part_sizes)
-    elif has_stored_part:
-        vals = [
-            r["part"] for r in docs.select("part").distinct().collect()
-        ]
-        if any(v is None for v in vals):
-            raise ValueError(
-                "corpus has rows with a NULL part value (on disk: "
-                "part=__HIVE_DEFAULT_PARTITION__); they would belong to "
-                "no wave. Repair the part column (e.g. coalesce to a "
-                "hash) before running extraction"
-            )
-        actual_parts = sorted(vals)
     else:
-        actual_parts = list(range(num_parts))
+        docs_raw = spark.read.parquet(input_path)
+        docs = with_part(docs_raw, num_parts)
+        if "part" in docs_raw.columns:
+            vals = [
+                r["part"] for r in docs.select("part").distinct().collect()
+            ]
+            if any(v is None for v in vals):
+                raise ValueError(
+                    "corpus has rows with a NULL part value (on disk: "
+                    "part=__HIVE_DEFAULT_PARTITION__); they would belong "
+                    "to no wave. Repair the part column (e.g. coalesce to "
+                    "a hash) before running extraction"
+                )
+            actual_parts = sorted(vals)
+        else:
+            actual_parts = list(range(num_parts))
     done = completed_parts(spark, lineage_path) if resume else set()
     # byte-balanced waves when the input is part-partitioned (the same
     # listing); even count split otherwise -- see plan_waves. The plan
@@ -364,15 +391,28 @@ def run_extraction(
     overwrite_key = "spark.sql.sources.partitionOverwriteMode"
     prev_mode = spark.conf.get(overwrite_key, None)
     spark.conf.set(overwrite_key, "dynamic")
+    corpus_schema = None
     try:
         attempt = int(time.time())
         for wave_idx, group in enumerate(wave_groups):
             wave_parts = [p for p in group if p not in done]
             if not wave_parts:
                 continue  # committed by an earlier attempt
-            # partition-pruned scan: `part` is a parquet partition column
-            # when the corpus was written by sources.synth
-            wave_df = docs.filter(F.col("part").isin(wave_parts))
+            if docs is None:
+                # only this wave's dirs; basePath keeps `part` a
+                # partition column. The first read infers the schema
+                # (one footer job), later waves pass it
+                reader = spark.read.option("basePath", input_path)
+                if corpus_schema is not None:
+                    reader = reader.schema(corpus_schema)
+                wave_df = reader.parquet(
+                    *(os.path.join(input_path, f"part={p}")
+                      for p in wave_parts)
+                )
+                corpus_schema = wave_df.schema
+            else:
+                # partition-pruned scan when `part` is a partition column
+                wave_df = docs.filter(F.col("part").isin(wave_parts))
             t0 = time.time()
             extracted = extract_spans(wave_df, ref_date=ref_date)
             # hash the rows by part onto at most `parallelism` writer tasks:
@@ -472,12 +512,13 @@ def run_extraction(
             # cross-check the result-stage observe against the committed
             # counts; on any divergence the committed numbers already won
             # (lineage_rows came from them), so this only surfaces the event
+            wave_docs = sum(r[1] for r in lineage_rows)
             m = obs.get
-            if int(m.get("docs") or 0) != sum(r[1] for r in lineage_rows):
+            if int(m.get("docs") or 0) != wave_docs:
                 log.warning(
                     "wave %d: observed docs %s != committed %d; lineage "
                     "uses committed counts",
-                    wave_idx, m.get("docs"), sum(r[1] for r in lineage_rows),
+                    wave_idx, m.get("docs"), wave_docs,
                 )
             # the rows reach the JVM as an Arrow table: a list of tuples
             # would go through SparkContext.parallelize and a PythonRDD,
@@ -490,7 +531,15 @@ def run_extraction(
             )
             lineage.coalesce(1).write.mode("append").parquet(lineage_path)
             stats["waves_run"] += 1
-            stats["docs"] += sum(r[1] for r in lineage_rows)
+            stats["docs"] += wave_docs
+            # progress: wave i of the plan's n (i = lineage `wave` + 1);
+            # seconds and docs/s over wall_ms, as job_summary counts them
+            log.info(
+                "wave %d of %d committed: %d parts, %d docs in %.2f s "
+                "(%.1f docs/s)",
+                wave_idx + 1, len(wave_groups), len(wave_parts), wave_docs,
+                wall_ms / 1000, wave_docs * 1000 / max(wall_ms, 1),
+            )
 
             if (
                 fail_after_wave is not None

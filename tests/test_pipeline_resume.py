@@ -3,6 +3,7 @@ and its lineage/metrics contract (plans/pipeline.py)."""
 
 import logging
 import os
+import re
 import shutil
 
 import pytest
@@ -246,8 +247,32 @@ def test_part_sizes_report_null_part_directory(spark, corpus, tmp_path):
     assert sizes and all(k % 7 for k in sizes)
 
 
-def _jobs_run(spark, group, fn):
-    """Number of Spark jobs ``fn()`` starts, counted through a job group."""
+def test_zero_padded_part_directory_falls_back_to_the_root_read(
+    spark, corpus, uninterrupted, tmp_path
+):
+    """A hand-made ``part=07`` holds part 7 for Spark's partition
+    discovery, but it is not the ``part=7`` dir a wave reads by name:
+    the inventory reports it as unparsed, so the run reads the corpus
+    root and still extracts every doc once."""
+    padded = str(tmp_path / "padded")
+    shutil.copytree(corpus, padded)
+    part = min(_visible_sizes(corpus))
+    os.rename(
+        os.path.join(padded, f"part={part}"),
+        os.path.join(padded, f"part=0{part}"),
+    )
+    assert P._fs_part_sizes(spark, padded)[1] == {f"part=0{part}"}
+    out = str(tmp_path / "out")
+    stats = P.run_extraction(spark, padded, out, waves=4, resume=False)
+    assert stats["docs"] == N_DOCS
+    assert _extracted(spark, out) == uninterrupted
+
+
+def _job_descriptions(spark, group, fn):
+    """Descriptions of the Spark jobs ``fn()`` starts, read from the
+    status store through a job group. A job's description is the
+    group's name unless Spark set its own (a parallel file listing is
+    "Listing leaf files and directories for N paths...")."""
     sc = spark.sparkContext
     sc.setJobGroup(group, group)
     try:
@@ -255,7 +280,17 @@ def _jobs_run(spark, group, fn):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
+    store = sc._jsc.sc().statusStore()
+    descriptions = []
+    for job_id in sc.statusTracker().getJobIdsForGroup(group):
+        d = store.job(job_id).description()
+        descriptions.append(d.get() if d.isDefined() else "")
+    return descriptions
+
+
+def _jobs_run(spark, group, fn):
+    """Number of Spark jobs ``fn()`` starts, counted through a job group."""
+    return len(_job_descriptions(spark, group, fn))
 
 
 @pytest.fixture(scope="module")
@@ -289,8 +324,9 @@ def resumed_twice(spark, corpus, tmp_path_factory):
 def test_lineage_reads_run_one_job(spark, corpus, resumed_twice):
     """``completed_parts`` reads lineage with its declared schema in one
     job (no footer inference, no shuffle distinct), and a resume with
-    every part done and the metrics table current runs at most 3 jobs:
-    the input listing, its footer read and ``completed_parts``."""
+    every part done and the metrics table current runs that job alone:
+    the corpus is read per wave, so with no wave left it is neither
+    listed nor read."""
     out, resume_jobs = resumed_twice
     lineage = os.path.join(out, "lineage")
     done = set()
@@ -300,7 +336,7 @@ def test_lineage_reads_run_one_job(spark, corpus, resumed_twice):
     )
     assert done == set(_visible_sizes(corpus)) | {90, 91}
     assert jobs == 1
-    assert resume_jobs <= 3
+    assert resume_jobs == 1
 
 
 def test_resume_rewrites_a_missing_metrics_table(
@@ -317,6 +353,92 @@ def test_resume_rewrites_a_missing_metrics_table(
     assert stats["waves_run"] == 0
     got = spark.read.parquet(os.path.join(copy, "metrics")).collect()
     assert sorted(got) == want
+
+
+def test_rollup_and_job_summary_run_one_job_each(
+    spark, corpus, resumed_twice, tmp_path
+):
+    """The lineage rollup plans no exchange, so the metrics write and
+    ``job_summary(...).collect()`` are one Spark job each. A resume that
+    runs no wave and finds the metrics table missing runs two jobs:
+    ``completed_parts`` and the rollup's write."""
+    out, _ = resumed_twice
+    copy = str(tmp_path / "out")
+    shutil.copytree(out, copy)
+    shutil.rmtree(os.path.join(copy, "metrics"))
+    stats = {}
+    jobs = _jobs_run(
+        spark, "rollup-only",
+        lambda: stats.update(
+            P.run_extraction(spark, corpus, copy, waves=4, resume=True)
+        ),
+    )
+    assert stats["waves_run"] == 0
+    assert os.path.isdir(os.path.join(copy, "metrics"))
+    assert jobs == 2
+    rows = []
+    jobs = _jobs_run(
+        spark, "job-summary",
+        lambda: rows.extend(P.job_summary(spark, copy).collect()),
+    )
+    assert len(rows) == 3
+    assert jobs == 1
+
+
+def test_kill_and_resume_lists_no_corpus_partitions_in_a_job(
+    spark, corpus, uninterrupted, tmp_path
+):
+    """Each wave reads its own part=N dirs from the inventory that
+    ``_fs_part_sizes`` listed, never the corpus root: a kill-and-resume
+    run over the 52-part corpus starts no partition-discovery job (a
+    root read lists more dirs than parallelPartitionDiscovery.threshold,
+    32, in a Spark job on every attempt). The schema is inferred once
+    per attempt, by the first wave that runs."""
+    assert len(_visible_sizes(corpus)) > 32
+    out = str(tmp_path / "out")
+
+    def kill_and_resume():
+        P.run_extraction(
+            spark, corpus, out, waves=4, resume=False, fail_after_wave=2
+        )
+        P.run_extraction(spark, corpus, out, waves=4, resume=True)
+
+    descriptions = _job_descriptions(
+        spark, "kill-and-resume", kill_and_resume
+    )
+    assert descriptions
+    listings = [d for d in descriptions if d.startswith("Listing leaf files")]
+    assert listings == []
+    assert _extracted(spark, out) == uninterrupted
+
+
+def test_each_committed_wave_logs_one_progress_line(
+    spark, corpus, tmp_path, caplog
+):
+    """One INFO line per committed wave: wave i of n, parts, docs,
+    seconds and docs/s, from values the run already holds."""
+    caplog.set_level(logging.INFO, logger=P.__name__)
+    stats = P.run_extraction(
+        spark, corpus, str(tmp_path / "out"), waves=2, resume=False
+    )
+    lines = [
+        r.getMessage() for r in caplog.records
+        if r.name == P.__name__ and r.levelno == logging.INFO
+    ]
+    assert len(lines) == stats["waves_run"] == 2, lines
+    parts = docs = 0
+    for i, line in enumerate(lines, 1):
+        m = re.fullmatch(
+            r"wave (\d+) of 2 committed: (\d+) parts, (\d+) docs in "
+            r"(\d+\.\d\d) s \((\d+\.\d) docs/s\)",
+            line,
+        )
+        assert m, line
+        assert int(m[1]) == i
+        parts += int(m[2])
+        docs += int(m[3])
+    assert parts == len(_visible_sizes(corpus))
+    assert docs == N_DOCS
 
 
 def _by_rank(rows, wall_fields):

@@ -4,6 +4,8 @@ These guard the 100 TB story: column pruning reaching the scan, no
 shuffle on the extraction hot path, broadcast on the small join side.
 """
 
+import os
+
 from pyspark.sql import functions as F
 
 from readabilityimproved_spark.operators.extract import extract_spans
@@ -13,6 +15,11 @@ from readabilityimproved_spark.operators.similarity import (
     cosine_topk,
 )
 from readabilityimproved_spark.sources.synth import synth_corpus_df
+
+_ENTRY = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    "__spark_entry__.py",
+)
 
 
 def plan_of(df) -> str:
@@ -61,9 +68,7 @@ def test_wave_write_has_one_part_exchange(spark, tmp_path, monkeypatch):
 def test_flagship_scan_prunes_columns(spark):
     import importlib.util, sys
 
-    spec = importlib.util.spec_from_file_location(
-        "spark_entry_pq", "/root/repo/__spark_entry__.py"
-    )
+    spec = importlib.util.spec_from_file_location("spark_entry_pq", _ENTRY)
     m = importlib.util.module_from_spec(spec)
     sys.modules["spark_entry_pq"] = m
     spec.loader.exec_module(m)

@@ -11,19 +11,22 @@ and single-exchange aggregation plans.
 from __future__ import annotations
 
 import importlib.util
+import os
 import sys
 
 import pytest
 from pyspark.sql import functions as F
 
 SF_DIR = "/root/testdata/sf0.001"
+_ENTRY = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    "__spark_entry__.py",
+)
 
 
 @pytest.fixture(scope="module")
 def entry_mod():
-    spec = importlib.util.spec_from_file_location(
-        "spark_entry_r3", "/root/repo/__spark_entry__.py"
-    )
+    spec = importlib.util.spec_from_file_location("spark_entry_r3", _ENTRY)
     mod = importlib.util.module_from_spec(spec)
     sys.modules["spark_entry_r3"] = mod
     spec.loader.exec_module(mod)

@@ -712,9 +712,9 @@ def test_repetition_and_prune_queries_are_narrow_maps(spark):
     the ingest scan, never force a shuffle)."""
     import importlib.util
 
-    from tests.test_plan_quality import plan_of
+    from tests.test_plan_quality import _ENTRY, plan_of
 
-    spec = importlib.util.spec_from_file_location("entry6", "__spark_entry__.py")
+    spec = importlib.util.spec_from_file_location("entry6", _ENTRY)
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
     qs = mod.queries()
