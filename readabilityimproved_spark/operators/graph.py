@@ -51,7 +51,11 @@ loop continues from its read-back, which truncates lineage just as
 well. The files survive executor loss (stage retry recomputes from
 them) and driver loss (a rerun resumes from the newest snapshot); the
 round's convergence sum rides the snapshot write through observe(), so
-no separate aggregate job runs.
+no separate aggregate job runs. Each snapshot records its facts in the
+filesystem alone: it lives under ``{state_dir}/fp_<count>_<hashsum>/``,
+named by the fingerprint of the pairs input, and it is committed by
+its own ``_SUCCESS`` file -- one glob lists every committed snapshot,
+and there is no second state table to keep in step with the files.
 
 The DuckDB oracle for the driver row replays the same semantics as a
 recursive-CTE transitive closure -- exact equality, no tolerance.
@@ -61,7 +65,7 @@ from __future__ import annotations
 
 import logging
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -79,7 +83,7 @@ _CONTRACT_NODE_CAP = 2_000_000
 log = logging.getLogger(__name__)
 
 
-def _star_batches(batches, a_col, b_col, max_nodes, stats=None):
+def _star_batches(batches, a_col, b_col, max_nodes):
     """Pure-Python core of _contract_local: stream (a, b) edge batches
     through a union-find, yielding (node, local_root) star DataFrames.
 
@@ -90,7 +94,9 @@ def _star_batches(batches, a_col, b_col, max_nodes, stats=None):
     while worker memory stays O(max_nodes) even when a skewed pair
     file lands one giant near-dup family in a single partition
     (round-5 verdict: the unbounded dict was the one open scale risk).
-    ``stats`` (tests only) records the observed peak dict size."""
+    Every flush emits every node the dict holds, so no yielded frame
+    has more than ``max_nodes`` rows. At ``max_nodes=2`` each edge is
+    flushed as its own star: the raw edge set plus self edges."""
     import pandas as pd
 
     if max_nodes < 2:
@@ -128,20 +134,11 @@ def _star_batches(batches, a_col, b_col, max_nodes, stats=None):
                 if rb < ra:
                     ra, rb = rb, ra
                 parent[rb] = ra  # union by min id
-            if stats is not None:
-                stats["peak_nodes"] = max(
-                    stats.get("peak_nodes", 0), len(parent)
-                )
     if parent:
         yield flush()
 
 
-def _contract_local(
-    pairs: DataFrame,
-    id_a: str,
-    id_b: str,
-    max_nodes: int | None = None,
-) -> DataFrame:
+def _contract_local(pairs: DataFrame, id_a: str, id_b: str) -> DataFrame:
     """Arrow-batched per-partition union-find: replace every
     partition's edge set with STARS rooted at the local minimum --
     (node, local_root) rows, plus a (root, root) self edge so even a
@@ -164,16 +161,15 @@ def _contract_local(
 
     One pass, no shuffle (mapInPandas over whatever partitioning the
     pair generator produced). Worker memory is HARD-BOUNDED at
-    ``max_nodes`` dict entries (default ``_CONTRACT_NODE_CAP``, read at
-    call time) regardless of partition size or skew: the union-find
-    flushes its partial star and restarts when it fills (see
-    _star_batches) -- labels downstream are unchanged. Measured
-    ~0.4M edges/s/core on this host's Python (1M random edges, 500k
-    nodes, 2.3 s): a 10^12-edge contraction is ~minutes across a few
-    thousand cores, paid once to shrink every subsequent round.
+    ``_CONTRACT_NODE_CAP`` dict entries (read at call time) regardless
+    of partition size or skew: the union-find flushes its partial star
+    and restarts when it fills (see _star_batches) -- labels downstream
+    are unchanged. Measured ~0.4M edges/s/core on this host's Python
+    (1M random edges, 500k nodes, 2.3 s): a 10^12-edge contraction is
+    ~minutes across a few thousand cores, paid once to shrink every
+    subsequent round.
     """
-    if max_nodes is None:
-        max_nodes = _CONTRACT_NODE_CAP
+    max_nodes = _CONTRACT_NODE_CAP
     if max_nodes < 2:
         # validate on the DRIVER before any plan is built: inside
         # _star_batches the same check would only fire lazily on
@@ -190,73 +186,65 @@ def _contract_local(
     return pairs.select(id_a, id_b).mapInPandas(gen, out_schema)
 
 
-_MARKER_SCHEMA = "round int, label_sum string, edge_fp string"
+def _dsum(col: Column) -> Column:
+    # decimal(38,0): exact, and immune to the bigint overflow a
+    # 10^12-row id sum hits (ANSI mode would raise mid-job); 0, not
+    # null, on an empty graph
+    return F.coalesce(
+        F.sum(col.cast("decimal(38,0)")), F.lit(0).cast("decimal(38,0)")
+    )
 
 
-def _list_snapshots(spark, state_dir: str):
-    # (round, jvm Path) for every labels_r{N} dir, from ONE listing;
-    # the listed Path is reused for deletion so path construction
-    # cannot drift from what the filesystem resolved
-    from ..plans.pipeline import _hadoop_fs
+def _committed(spark, state_dir: str):
+    """(fs, {fp dir name: {round: snapshot Path}}) for every COMMITTED
+    ``{state_dir}/fp_*/labels_r{N}`` snapshot, from ONE globStatus. A
+    snapshot's commit is its own ``_SUCCESS`` file, which Spark writes
+    only when the snapshot's write job commits: a torn write has none
+    and is never listed. The listed Paths are reused for reads and
+    deletes, so path construction cannot drift from what the
+    filesystem resolved."""
+    from ..plans.pipeline import _GLOB_SPECIAL, _hadoop_fs
 
-    fs, p = _hadoop_fs(spark, state_dir)
-    if not fs.exists(p):
-        return fs, []
-    out = []
-    for st in fs.listStatus(p):
-        name = st.getPath().getName()
-        if st.isDirectory() and name.startswith("labels_r"):
-            try:
-                out.append((int(name[len("labels_r"):]), st.getPath()))
-            except ValueError:
-                pass
+    fs, pattern = _hadoop_fs(
+        spark,
+        state_dir.rstrip("/").translate(_GLOB_SPECIAL)
+        + "/fp_*/labels_r*/_SUCCESS",
+    )
+    out: dict = {}
+    for st in fs.globStatus(pattern) or []:
+        snap = st.getPath().getParent()
+        try:
+            rnd = int(snap.getName()[len("labels_r"):])
+        except ValueError:
+            continue
+        out.setdefault(snap.getParent().getName(), {})[rnd] = snap
     return fs, out
 
 
-def _prune_snapshots(
-    spark, state_dir: str, current: int, keep: int = 2
+def _prune_state(
+    spark, state_dir: str, fp_dir: str, current: int, keep: int = 2
 ) -> None:
     # resume needs only the newest snapshot (plus one spare in case
-    # that write was torn); without pruning every round would leave one
-    # full label-table copy behind. Round ``current`` is never dropped:
-    # the loop reads it back next, even when a higher round survives
-    # from an earlier run that could not be resumed
-    from pyspark.errors import AnalysisException
-
+    # that one is unreadable); without pruning every round would leave
+    # one full label-table copy behind. Round ``current`` is never
+    # dropped: the loop reads it back next, even when a higher round
+    # survives from an earlier run that could not be resumed. Another
+    # input's fp_ directory can never be resumed by this input, and
+    # leaving it would keep a full label table per input ever clustered
     try:
-        fs, snaps = _list_snapshots(spark, state_dir)
-        dropped = [
-            s for s in sorted(snaps, key=lambda t: t[0])[:-keep]
-            if s[0] != current
-        ]
-        for _, path in dropped:
-            fs.delete(path, True)
-        if not dropped:
-            return
-        # compact the marker table to the SURVIVING rounds: markers
-        # are append-only one-row parquet files, so without this
-        # every resume's mergeSchema read opens one footer per
-        # lifetime snapshot -- O(total snapshots ever) RPCs on an
-        # object store. Rows are tiny (one per snapshot), so a
-        # driver-side collect + overwrite is the cheap rewrite;
-        # legacy no-fingerprint rows are kept with a null edge_fp
-        # (resume already treats that as UNVERIFIED).
-        kept = {r for r, _ in snaps} - {r for r, _ in dropped}
-        try:
-            rows = spark.read.option("mergeSchema", "true").parquet(
-                f"{state_dir}/state"
-            ).collect()
-        except AnalysisException:
-            return  # no marker table yet: nothing to compact
-        live = [
-            (int(r["round"]), str(r["label_sum"]), r.asDict().get("edge_fp"))
-            for r in rows
-            if int(r["round"]) in kept
-        ]
-        if len(live) < len(rows):
-            spark.createDataFrame(live, _MARKER_SCHEMA).coalesce(
-                1
-            ).write.mode("overwrite").parquet(f"{state_dir}/state")
+        fs, committed = _committed(spark, state_dir)
+        for name, snaps in committed.items():
+            if name != fp_dir:
+                log.warning(
+                    "state_dir %s holds state built from a DIFFERENT "
+                    "pairs input (%s, this input is %s); deleting it",
+                    state_dir, name, fp_dir,
+                )
+                fs.delete(next(iter(snaps.values())).getParent(), True)
+        own = committed.get(fp_dir, {})
+        for rnd in sorted(own)[:-keep]:
+            if rnd != current:
+                fs.delete(own[rnd], True)
     except Exception as exc:
         # pruning is hygiene, not correctness: never fail the job
         # over it, but leave a trace (unbounded growth is a cost)
@@ -266,94 +254,31 @@ def _prune_snapshots(
         )
 
 
-def _clear_state(spark, state_dir: str) -> None:
-    # a state_dir whose content VERIFIABLY does not belong to THIS
-    # input (fingerprint mismatch) must be emptied, not just
-    # ignored: markers are append-only and labels_r{N} dirs are
-    # keyed by round alone, so leaving foreign rows behind lets a
-    # later rerun tie-break onto the WRONG labels parquet (silently
-    # wrong clusters) or rank a stale higher-round marker first
-    # forever (resume permanently dead)
-    from ..plans.pipeline import _fs_delete
-
+def _resume_state(spark, state_dir: str, fp_dir: str):
+    """(round, labels, label_sum) of the newest readable committed
+    snapshot under ``{state_dir}/{fp_dir}``, or None to start fresh."""
     try:
-        fs, snaps = _list_snapshots(spark, state_dir)
-        for _, path in snaps:
-            fs.delete(path, True)
-        _fs_delete(spark, f"{state_dir}/state")
+        _, committed = _committed(spark, state_dir)
     except Exception as exc:
-        log.warning(
-            "could not clear stale state in %s (%s: %s); delete it "
-            "manually before the next resume",
-            state_dir, type(exc).__name__, exc,
-        )
-
-
-def _resume_state(spark, state_dir: str, edge_fp: str):
-    """(round, labels, label_sum) of the newest readable snapshot in
-    ``state_dir`` that belongs to the input fingerprinted ``edge_fp``,
-    or None to start fresh."""
-    from decimal import Decimal
-
-    from pyspark.errors import AnalysisException
-
-    try:
-        # mergeSchema: pre-round-6 markers have no edge_fp column.
-        # dropDuplicates on round: repeat runs append identical
-        # marker rows, and two copies of the newest round would
-        # defeat the one-older-snapshot fallback below.
-        markers = spark.read.option("mergeSchema", "true").parquet(
-            f"{state_dir}/state"
-        )
-        rows = (
-            markers.dropDuplicates(["round"])
-            .orderBy(F.col("round").desc())
-            .limit(2)
-            .collect()
-        )
-    except AnalysisException:
-        return None  # no state yet: the expected first-run case
-    except Exception as exc:
-        # a marker READ failure is not proof of corruption -- an
+        # a listing failure is not proof of corruption -- an
         # object-store throttle or FS timeout lands here too, and
-        # deleting days of valid snapshots over a transient error
-        # is worse than one redundant recompute. Keep the data,
-        # warn loudly, start fresh; only a VERIFIED mismatch (the
-        # fingerprint branch below) clears the directory.
+        # deleting days of valid snapshots over a transient error is
+        # worse than one redundant recompute. Keep the data, warn
+        # loudly, start fresh.
         log.warning(
-            "state resume from %s failed (%s: %s); starting fresh "
-            "WITHOUT clearing it (may be transient -- if the state "
-            "table is truly corrupt, delete the directory manually)",
+            "state listing of %s failed (%s: %s); starting fresh "
+            "WITHOUT clearing it (may be transient -- if the state is "
+            "truly corrupt, delete the directory manually)",
             state_dir, type(exc).__name__, exc,
         )
         return None
-    has_fp = "edge_fp" in markers.columns
-    for row in rows:
-        stored_fp = row["edge_fp"] if has_fp else None
-        if stored_fp is None:
-            log.warning(
-                "snapshot in %s carries no input fingerprint (pre-round-6 "
-                "state); resuming UNVERIFIED -- the caller must guarantee "
-                "the pairs input is unchanged", state_dir,
-            )
-        elif stored_fp != edge_fp:
-            # a different pairs input: resuming would silently drop
-            # nodes absent from the old labels and import foreign
-            # clusters -- the one failure mode worse than recompute.
-            # The stale content is CLEARED, not just ignored: mixed
-            # markers/snapshots from two inputs could otherwise
-            # tie-break a later rerun onto the wrong labels table.
-            log.warning(
-                "state_dir %s was built from a DIFFERENT pairs input "
-                "(fingerprint %s != %s); clearing it and starting fresh",
-                state_dir, stored_fp, edge_fp,
-            )
-            _clear_state(spark, state_dir)
-            return None
-        rnd = int(row["round"])
+    own = committed.get(fp_dir, {})
+    for rnd in sorted(own, reverse=True):
         try:
-            labels = spark.read.parquet(f"{state_dir}/labels_r{rnd}")
-            return (rnd, labels, Decimal(row["label_sum"]))
+            # the label sum is the one resume-only job; it also proves
+            # every file of the snapshot readable
+            labels = spark.read.parquet(own[rnd].toString())
+            return rnd, labels, labels.agg(_dsum(F.col("label"))).first()[0]
         except Exception as exc:
             log.warning(
                 "snapshot labels_r%d in %s unreadable (%s: %s); trying "
@@ -368,44 +293,44 @@ def neardup_clusters(
     id_a: str = "id_a",
     id_b: str = "id_b",
     max_rounds: int = 20,
-    pre_contract: bool = True,
     state_dir: str | None = None,
 ) -> DataFrame:
     """(doc_id, cluster_id) for every document appearing in ``pairs``;
     ``cluster_id`` is the minimum doc id of the connected component.
 
-    ``state_dir``: optional durability. The symmetrized edge table is
-    written once per run to ``{state_dir}/edges`` and every round's
-    labels to ``{state_dir}/labels_r{N}`` (plus a marker row in
-    ``{state_dir}/state``); each round continues from the parquet
+    The pairs first pass through the per-partition union-find
+    contraction (_contract_local): identical labels, a much smaller
+    iterated edge table and fewer rounds whenever a component's pairs
+    are at all co-located (bucketed pair generators emit them that
+    way). Worker memory is bounded by ``_CONTRACT_NODE_CAP`` dict
+    entries, so the pass is safe on arbitrarily skewed pair files.
+
+    ``state_dir``: optional durability. State lives under
+    ``{state_dir}/fp_<count>_<hashsum>/``, a directory named by the
+    INPUT FINGERPRINT: pair count + exact decimal sum of per-pair
+    xxhash64 over (min, max) of the RAW pairs -- orientation-, order-
+    and partitioning-invariant, computed before the layout-dependent
+    contraction, one cheap action per run. The symmetrized edge table
+    is written there once per run as ``edges`` and every round's
+    labels as ``labels_r{N}``; each round continues from the parquet
     read-back instead of a local checkpoint, and the converged result
     is the last snapshot's read-back. Nothing is cached or
     checkpointed, so the files are the only copy: an executor loss is
     recomputed from them by Spark's stage retry, and after a driver
     loss a rerun with the same ``state_dir`` and the SAME pairs input
-    resumes from the newest readable snapshot instead of round 1 --
-    including after a round-cap RuntimeError, whose completed
-    snapshots remain valid. Each marker records an INPUT FINGERPRINT
-    (pair count + exact decimal sum of per-pair xxhash64 over (min,
-    max) of the RAW pairs -- orientation/order/partitioning-invariant,
-    and computed before the layout-dependent contraction pass; one
-    cheap action per run): resuming against a state_dir built from a
-    DIFFERENT pairs input would silently drop nodes and import foreign
-    labels, so on fingerprint mismatch the run warns, CLEARS the stale
-    directory (mixed markers from two inputs could tie-break a later
-    rerun onto the wrong labels table), and starts fresh. Snapshots
-    are PRUNED to the newest 2 (resume needs the latest; one spare in
-    case the newest write was torn -- resume falls back to it). The
-    caller owns the directory.
-
-    ``pre_contract``: run the per-partition union-find pass first
-    (_contract_local) -- identical labels, much smaller iterated edge
-    table and fewer rounds whenever a component's pairs are at all
-    co-located (bucketed pair generators emit them that way). Worker
-    memory is bounded by ``_CONTRACT_NODE_CAP`` dict entries (the
-    union-find flushes partial stars when it fills), so the pass is
-    safe on arbitrarily skewed pair files; disable only to skip the
-    extra map pass on inputs known to be already star-shaped.
+    resumes from the newest committed snapshot of its own fingerprint
+    directory instead of round 1 -- including after a round-cap
+    RuntimeError, whose completed snapshots remain valid. A snapshot
+    is committed by its own ``_SUCCESS`` file: a torn write is never
+    resumed, and an unreadable snapshot falls back to the one before.
+    Resume recomputes the snapshot's label sum (one aggregate). Another
+    input's ``fp_*`` directory is never read; it is deleted with a
+    warning, and own snapshots are PRUNED to the newest 2. A failed
+    state listing deletes nothing: the run warns and starts fresh.
+    A ``state_dir`` written in the older marker-table layout
+    (``state/``, root ``edges`` and ``labels_r*``) is neither read nor
+    deleted: the first run over it recomputes from round 1. The caller
+    owns the directory.
 
     Ids must be INTEGRAL: the label-sum convergence invariant is exact
     only because labels are numbers that strictly decrease on change
@@ -443,37 +368,20 @@ def neardup_clusters(
     # forever.)
     pairs = pairs.filter(F.col(id_a).isNotNull() & F.col(id_b).isNotNull())
     spark = pairs.sparkSession
-    edge_fp = None
     if state_dir is not None:
-        # input fingerprint for snapshot/resume validation, computed
-        # over the RAW pairs BEFORE contraction (the contracted stars
-        # depend on partition layout and flush boundaries, so they
-        # would falsely mismatch a same-input rerun at different
-        # parallelism): row count + exact decimal sum of per-pair
-        # xxhash64 over (min, max) -- orientation-, order- and
-        # partitioning-invariant. ONE extra action per run, only when
-        # durability was requested.
+        # fingerprinted over the RAW pairs BEFORE contraction: the
+        # contracted stars depend on partition layout and flush
+        # boundaries, so they would falsely mismatch a same-input
+        # rerun at different parallelism. No ':' in the name --
+        # Hadoop paths reject it.
         lo = F.least(F.col(id_a), F.col(id_b))
         hi = F.greatest(F.col(id_a), F.col(id_b))
-        fp = pairs.agg(
-            F.count(F.lit(1)).alias("cnt"),
-            F.coalesce(
-                F.sum(F.xxhash64(lo, hi).cast("decimal(38,0)")),
-                F.lit(0).cast("decimal(38,0)"),
-            ).alias("hsum"),
-        ).collect()[0]
-        edge_fp = f"{fp['cnt']}:{fp['hsum']}"
-    if pre_contract:
-        pairs = _contract_local(pairs, id_a, id_b)
-
-    def _dsum(col: str):
-        # decimal(38,0): exact, and immune to the bigint overflow a
-        # 10^12-row id sum hits (ANSI mode would raise mid-job); 0, not
-        # null, on an empty graph so a snapshot marker stays a number
-        return F.coalesce(
-            F.sum(F.col(col).cast("decimal(38,0)")),
-            F.lit(0).cast("decimal(38,0)"),
-        )
+        cnt, hsum = pairs.agg(
+            F.count(F.lit(1)), _dsum(F.xxhash64(lo, hi))
+        ).first()
+        fp_dir = f"fp_{cnt}_{hsum}"
+        fp_path = f"{state_dir.rstrip('/')}/{fp_dir}"
+    pairs = _contract_local(pairs, id_a, id_b)
 
     def _materialize(df: DataFrame, rnd: int, *sums):
         # round rnd's labels plus its convergence sums, in ONE action.
@@ -484,15 +392,11 @@ def neardup_clusters(
         if state_dir is None:
             labels = df.localCheckpoint(eager=False)
             return labels, labels.agg(*sums).collect()[0]
-        path = f"{state_dir}/labels_r{rnd}"
+        path = f"{fp_path}/labels_r{rnd}"
         obs = Observation()
         df.observe(obs, *sums).write.mode("overwrite").parquet(path)
-        got = obs.get
-        spark.createDataFrame(
-            [(rnd, str(got["new"]), edge_fp)], _MARKER_SCHEMA
-        ).write.mode("append").parquet(f"{state_dir}/state")
-        _prune_snapshots(spark, state_dir, rnd)
-        return spark.read.parquet(path), got
+        _prune_state(spark, state_dir, fp_dir, rnd)
+        return spark.read.parquet(path), obs.get
 
     fwd = pairs.select(F.col(id_a).alias("s"), F.col(id_b).alias("d"))
     edges = fwd.unionByName(
@@ -502,14 +406,12 @@ def neardup_clusters(
     if state_dir is None:
         edges = edges.localCheckpoint(eager=False)
     else:
-        resumed = _resume_state(spark, state_dir, edge_fp)
-        edges.write.mode("overwrite").parquet(f"{state_dir}/edges")
-        edges = spark.read.parquet(f"{state_dir}/edges")
+        resumed = _resume_state(spark, state_dir, fp_dir)
+        edges.write.mode("overwrite").parquet(f"{fp_path}/edges")
+        edges = spark.read.parquet(f"{fp_path}/edges")
     if resumed is not None:
-        # the marker stored the snapshot's exact decimal sum -- no
-        # re-aggregation pass over the snapshot. prev is unknown
-        # across the restart: worth at most one extra (no-op) round
-        # before convergence is re-detected.
+        # prev is unknown across the restart: worth at most one extra
+        # (no-op) round before convergence is re-detected.
         start_rnd, labels, new_sum = resumed
         prev_sum = None
         start = start_rnd + 1
@@ -527,8 +429,8 @@ def neardup_clusters(
                 F.least(F.col("s"), F.col("m")).alias("label"),
             ),
             1,
-            _dsum("label").alias("new"),
-            _dsum("node").alias("prev"),
+            _dsum(F.col("label")).alias("new"),
+            _dsum(F.col("node")).alias("prev"),
         )
         prev_sum, new_sum = first["prev"], first["new"]
         start = 2
@@ -563,7 +465,7 @@ def neardup_clusters(
             .agg(F.min("label").alias("label"))
             .select(F.col("s").alias("node"), "label"),
             rnd,
-            _dsum("label").alias("new"),
+            _dsum(F.col("label")).alias("new"),
         )
         new_sum = got["new"]
     raise RuntimeError(

@@ -25,8 +25,8 @@ handling, checkpoint/resume):
   partitions; per-part doc/span/image/error counts are aggregated from
   the COMMITTED wave output (a partition-pruned, column-pruned read
   that never touches the heavy ``spans`` column) -- exact under task
-  retry/speculation -- with a constant-size result-stage ``observe()``
-  cross-check;
+  retry/speculation -- with a result-stage ``observe()`` of the doc
+  count as a cross-check;
 * the wave plan is a pure function of the input's part inventory and
   sizes (ONE ``globStatus`` listing per attempt, which is also what
   each wave reads), so a resumed attempt runs the unfinished waves of
@@ -425,21 +425,16 @@ def run_extraction(
             extracted = extracted.repartition(
                 min(len(wave_parts), parallelism), F.col("part")
             )
-            # O(1) sanity metrics, observed BELOW the exchange (result
+            # O(1) sanity check, observed BELOW the exchange (result
             # stage: accumulator updates are exactly-once there; a
             # shuffle-map-stage observe double-counts under task retry /
-            # speculation). Expression count is CONSTANT -- per-part
-            # detail comes from the committed output below, never from
-            # per-part conditional sums (O(parts) codegen at 10^4+ parts).
+            # speculation). One constant-size count, cross-checked against
+            # the committed docs below -- per-part detail comes from the
+            # committed output, never from per-part conditional sums
+            # (O(parts) codegen at 10^4+ parts).
             obs = Observation(f"wave_{attempt}_{wave_idx}")
             extracted = extracted.observe(
-                obs,
-                F.count(F.lit(1)).alias("docs"),
-                F.sum("n_spans").alias("spans"),
-                F.sum("n_images").alias("images"),
-                F.sum(
-                    F.when(F.col("status") != "ok", 1).otherwise(0)
-                ).alias("errors"),
+                obs, F.count(F.lit(1)).alias("docs")
             )
             extracted.write.mode("overwrite").partitionBy("part").parquet(
                 extracted_path

@@ -14,11 +14,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 
-def iceberg_available(spark: SparkSession, catalog: str = "spark_catalog") -> bool:
-    impl = spark.conf.get(f"spark.sql.catalog.{catalog}", None)
-    return impl is not None and "Iceberg" in str(impl)
-
-
 #: supported file formats: parquet is the production default (columnar,
 #: predicate pushdown, the Iceberg file format); orc is the drop-in
 #: columnar alternative; json is the interchange edge (schema must be

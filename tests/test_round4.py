@@ -509,142 +509,6 @@ def test_corpus_format_roundtrip_drives_kernel(spark, tmp_path):
         assert canon(extract_spans(back)) == baseline, fmt
 
 
-def test_neardup_clusters_transitive(spark):
-    """Chained pairs merge into one component labeled by the min id;
-    disjoint pairs stay separate; convergence needs multiple rounds on
-    a path graph (9-8-7-...-1 propagates the min along the chain)."""
-    from readabilityimproved_spark.operators.graph import neardup_clusters
-
-    # path 1-2-...-9 (diameter 8) + disjoint pair (100, 200)
-    path = [(i, i + 1) for i in range(1, 9)]
-    pairs = spark.createDataFrame(
-        path + [(100, 200)], "id_a long, id_b long"
-    )
-    got = {
-        (r["doc_id"], r["cluster_id"])
-        for r in neardup_clusters(pairs).collect()
-    }
-    want = {(i, 1) for i in range(1, 10)} | {(100, 100), (200, 100)}
-    assert got == want
-
-    # cache hygiene: every round localCheckpoints, never persist()s
-    spark.catalog.clearCache()
-    neardup_clusters(pairs).collect()
-    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
-
-
-def test_neardup_clusters_single_action_per_round(spark, monkeypatch):
-    """Driver-action discipline (round-5 fix): every round issues ONE
-    blocking action -- the lazy checkpoint is materialized by the same
-    job that computes the convergence aggregate. Round 4 ran an eager
-    localCheckpoint *plus* a separate aggregate per round; pin that no
-    eager checkpoint ever happens and the action count stays bounded
-    by rounds, not 2x rounds."""
-    # the CLASSIC class: patching the pyspark.sql.DataFrame abstract
-    # base intercepts nothing in Spark 4
-    from pyspark.sql.classic.dataframe import DataFrame
-
-    from readabilityimproved_spark.operators.graph import neardup_clusters
-
-    calls = {"collect": 0, "eager": 0}
-    orig_collect, orig_local = DataFrame.collect, DataFrame.localCheckpoint
-
-    def counting_collect(self):
-        calls["collect"] += 1
-        return orig_collect(self)
-
-    def counting_local(self, eager=True):
-        if eager:
-            calls["eager"] += 1
-        return orig_local(self, eager=eager)
-
-    monkeypatch.setattr(DataFrame, "collect", counting_collect)
-    monkeypatch.setattr(DataFrame, "localCheckpoint", counting_local)
-    # path of 9 (diameter 8): needs several pointer-jump rounds
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(1, 9)], "id_a long, id_b long"
-    )
-    got = {tuple(r) for r in orig_collect(neardup_clusters(pairs))}
-    assert got == {(i, 1) for i in range(1, 10)}
-    assert calls["eager"] == 0, "eager checkpoint = a second action per round"
-    # fused round 1 + jump-doubling: well under the old 2-actions/round
-    assert calls["collect"] <= 6, calls
-
-
-def test_neardup_clusters_reliable_checkpoint(spark, tmp_path, monkeypatch):
-    """state_dir = the durability mode: same labels, the edge table and
-    per-round label snapshots actually land in the directory, NO
-    localCheckpoint anywhere (a local checkpoint truncates lineage onto
-    executor-local blocks -- executor loss would then be fatal, the
-    exact failure the mode exists to survive), no cached residue
-    afterwards, and the session's prior checkpoint dir is left as it
-    was."""
-    from pyspark.sql.classic.dataframe import DataFrame
-
-    from readabilityimproved_spark.operators.graph import neardup_clusters
-
-    local_calls = {"n": 0}
-    orig_local = DataFrame.localCheckpoint
-
-    def counting_local(self, eager=True):
-        local_calls["n"] += 1
-        return orig_local(self, eager=eager)
-
-    monkeypatch.setattr(DataFrame, "localCheckpoint", counting_local)
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(1, 9)] + [(100, 200)],
-        "id_a long, id_b long",
-    )
-    prior_dir = str(tmp_path / "prior")
-    spark.sparkContext.setCheckpointDir(prior_dir)
-    state = tmp_path / "state"
-    got = {
-        tuple(r)
-        for r in neardup_clusters(pairs, state_dir=str(state)).collect()
-    }
-    assert got == {(i, 1) for i in range(1, 10)} | {(100, 100), (200, 100)}
-    names = {p.name for p in state.iterdir()}
-    assert "edges" in names and "state" in names, names
-    assert any(n.startswith("labels_r") for n in names), names
-    written = [p for p in (state / "edges").rglob("*.parquet")]
-    assert written, "no edge snapshot files were written"
-    assert local_calls["n"] == 0, "the durable mode must not truncate lineage"
-    assert spark._jsparkSession.sharedState().cacheManager().isEmpty(), (
-        "the durable mode leaked persisted rounds"
-    )
-    restored = spark.sparkContext._jsc.sc().getCheckpointDir()
-    assert restored.isDefined() and prior_dir in restored.get()
-
-
-def test_neardup_clusters_round_cap_raises(spark):
-    """Hitting the round cap must raise, not return a partial closure
-    (silent under-merging would under-deduplicate the corpus)."""
-    import pytest as _pytest
-
-    from readabilityimproved_spark.operators.graph import neardup_clusters
-
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(1, 9)], "id_a long, id_b long"
-    )
-    with _pytest.raises(RuntimeError, match="converge"):
-        neardup_clusters(pairs, max_rounds=2)
-
-
-def test_dedup_keep_representative(spark):
-    """Only component min-ids survive among clustered docs; documents
-    in no pair pass through untouched."""
-    from readabilityimproved_spark.operators.graph import (
-        dedup_keep_representative,
-    )
-
-    docs = spark.createDataFrame(
-        [(i, f"t{i}") for i in (1, 2, 3, 5, 7)], "doc_id long, text string"
-    )
-    pairs = spark.createDataFrame([(1, 2), (2, 3)], "id_a long, id_b long")
-    kept = {r["doc_id"] for r in dedup_keep_representative(docs, pairs).collect()}
-    assert kept == {1, 5, 7}
-
-
 def test_contains_markup_guard_is_sound_on_random_docs():
     """The serialize-skip guard's one-way contract, judged against the
     ACTUAL rewrite regexes (not a re-typed needle list): whenever
@@ -751,46 +615,6 @@ def test_reading_order_matches_python_reference_on_random_layouts(spark):
         for idx, (_, bid) in enumerate(sorted(keyed), start=1):
             want[(doc, bid)] = idx
     assert got == want
-
-
-def test_clusters_match_python_union_find_on_random_graphs(spark):
-    """Randomized cross-check of connected components against a
-    pure-Python union-find, including long paths, stars, and cliques."""
-    import random
-
-    from readabilityimproved_spark.operators.graph import neardup_clusters
-
-    for seed in (7, 99):
-        rng = random.Random(seed)
-        nodes = list(range(200))
-        edges = set()
-        # random edges + one long path + a star
-        for _ in range(120):
-            a, b = rng.sample(nodes, 2)
-            edges.add((min(a, b), max(a, b)))
-        edges |= {(i, i + 1) for i in range(150, 199)}
-        edges |= {(50, t) for t in range(60, 70)}
-
-        parent = {n: n for n in nodes}
-
-        def find(x):
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        for a, b in edges:
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                parent[max(ra, rb)] = min(ra, rb)
-        in_graph = {n for e in edges for n in e}
-        want = {(n, find(n)) for n in in_graph}
-
-        df = spark.createDataFrame(
-            sorted(edges), "id_a long, id_b long"
-        )
-        got = {tuple(r) for r in neardup_clusters(df).collect()}
-        assert got == want, seed
 
 
 def test_pipeline_wave_listing_batched(spark, tmp_path, monkeypatch):

@@ -76,136 +76,6 @@ def test_run_extraction_part_discovery_unpartitioned_layouts(
     assert calls2["distinct"] == 0, calls2
 
 
-def test_clusters_pre_contract_identical_labels(spark):
-    """The per-partition union-find contraction is a pure plan
-    optimization: labels (including cluster_id = global component min)
-    must be identical with and without it, across random graphs and
-    partitionings."""
-    import random
-
-    from readabilityimproved_spark.operators.graph import neardup_clusters
-
-    rng = random.Random(5150)
-    edges = set()
-    for _ in range(150):
-        a, b = rng.sample(range(300), 2)
-        edges.add((min(a, b), max(a, b)))
-    edges |= {(i, i + 1) for i in range(200, 260)}  # a long chain
-    edges |= {(7, t) for t in range(270, 281)}      # a star
-    df = spark.createDataFrame(sorted(edges), "id_a long, id_b long")
-    for layout in (df, df.repartition(11), df.coalesce(1)):
-        on = {tuple(r) for r in neardup_clusters(layout).collect()}
-        off = {
-            tuple(r)
-            for r in neardup_clusters(layout, pre_contract=False).collect()
-        }
-        assert on == off
-
-
-def test_clusters_pre_contract_cuts_rounds_on_colocated_chains(spark, monkeypatch):
-    """The point of the star contraction: when a component's edges are
-    co-located (as bucketed pair generators emit them), intra-partition
-    diameter collapses to 1 and the iteration needs strictly fewer
-    rounds. Count convergence actions (one per round) both ways over a
-    long chain packed into one partition."""
-    from pyspark.sql.classic.dataframe import DataFrame
-
-    from readabilityimproved_spark.operators.graph import neardup_clusters
-
-    chain = spark.createDataFrame(
-        [(i, i + 1) for i in range(600)], "id_a long, id_b long"
-    ).coalesce(1)
-
-    def rounds_for(**kw):
-        calls = {"collect": 0}
-        orig = DataFrame.collect
-
-        def counting(self):
-            calls["collect"] += 1
-            return orig(self)
-
-        monkeypatch.setattr(DataFrame, "collect", counting)
-        try:
-            res = neardup_clusters(chain, **kw)
-            labels = {tuple(r) for r in orig(res)}
-        finally:
-            monkeypatch.setattr(DataFrame, "collect", orig)
-        assert labels == {(i, 0) for i in range(601)}
-        return calls["collect"]
-
-    contracted, raw = rounds_for(), rounds_for(pre_contract=False)
-    # diameter 600: raw needs ~log2(600) pointer-jump rounds; the
-    # contracted star converges in ~2
-    assert contracted <= 3 < raw
-
-
-def test_contract_local_plan_is_shuffle_free(spark):
-    """The star contraction must ride the pair generator's existing
-    partitioning: exactly one MapInPandas, zero exchanges."""
-    from readabilityimproved_spark.operators.graph import _contract_local
-
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(50)], "id_a long, id_b long"
-    )
-    plan = (
-        _contract_local(pairs, "id_a", "id_b")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert plan.count("MapInPandas") == 1, plan
-    assert plan.count("Exchange") == 0, plan
-
-
-def test_clusters_pre_contract_selfpair_and_id_typing(spark):
-    """Degenerate self-pairs keep their node in the output (the star
-    emits a (root, root) edge), and non-numeric ids fail FAST with
-    hashing guidance -- the label-sum convergence invariant is only
-    exact for numbers, so a string id must not reach the iteration."""
-    from readabilityimproved_spark.operators.graph import neardup_clusters
-
-    pairs = spark.createDataFrame(
-        [(9, 9), (2, 3), (3, 4)], "id_a long, id_b long"
-    )
-    got = {tuple(r) for r in neardup_clusters(pairs).collect()}
-    assert got == {(9, 9), (2, 2), (3, 2), (4, 2)}
-
-    strings = spark.createDataFrame(
-        [("a", "b")], "id_a string, id_b string"
-    )
-    with pytest.raises(TypeError, match="xxhash64"):
-        neardup_clusters(strings)
-
-    # fractional ids are rejected too: the decimal(38,0) convergence
-    # sums would ROUND them, letting distinct label sets compare equal
-    # and return a silently wrong closure
-    doubles = spark.createDataFrame(
-        [(1.45, 1.4), (1.4, 0.6)], "id_a double, id_b double"
-    )
-    with pytest.raises(TypeError, match="integral"):
-        neardup_clusters(doubles)
-
-
-def test_clusters_survive_hashed_near_max_ids(spark):
-    """The numeric-id guidance says 'xxhash64 your string ids' -- such
-    ids sit near +/-2^63, and a bigint convergence sum overflows after
-    a handful of rows (ANSI mode, on by default, turns that into a
-    mid-job error). The decimal(38,0) sums must keep hashed id spaces
-    working."""
-    from readabilityimproved_spark.operators.graph import neardup_clusters
-
-    big = 2 ** 62
-    pairs = spark.createDataFrame(
-        [(big + 1, big + 2), (big + 2, big + 3), (-big - 5, -big - 4)],
-        "id_a long, id_b long",
-    )
-    got = {tuple(r) for r in neardup_clusters(pairs).collect()}
-    assert got == {
-        (big + 1, big + 1), (big + 2, big + 1), (big + 3, big + 1),
-        (-big - 5, -big - 5), (-big - 4, -big - 5),
-    }
-
-
 def test_run_extraction_rejects_null_parts_loudly(spark, tmp_path):
     """Null-part rows land on disk under part=__HIVE_DEFAULT_PARTITION__,
     which the listing-derived inventory cannot represent -- the run
@@ -260,68 +130,6 @@ def test_metrics_rollup_counts_wave_wall_once(spark, tmp_path):
     for attempt, mrow in metrics.items():
         assert mrow["wall_ms_sum"] == summary[attempt]["wall_ms_sum"]
         assert mrow["docs"] == summary[attempt]["docs"]
-
-
-def test_clusters_checkpoint_interval_validated_and_dir_cleared(
-    spark, tmp_path
-):
-    """The retired reliable-checkpoint options (checkpoint_dir,
-    checkpoint_interval, contract_node_cap) fail fast on the driver
-    instead of being silently ignored, and when no checkpoint dir was
-    set before the call, a durable run leaves the session with none
-    afterwards (not permanently pointed at a caller-owned directory)."""
-    from readabilityimproved_spark.operators.graph import neardup_clusters
-
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3)], "id_a long, id_b long"
-    )
-    for retired in (
-        dict(checkpoint_interval=0),
-        dict(checkpoint_dir=str(tmp_path / "ck")),
-        dict(contract_node_cap=4),
-    ):
-        with pytest.raises(TypeError, match=next(iter(retired))):
-            neardup_clusters(pairs, **retired)
-    assert not (tmp_path / "ck").exists()
-
-    spark.sparkContext._jsc.sc().setCheckpointDir(None)
-    got = {
-        tuple(r)
-        for r in neardup_clusters(
-            pairs, state_dir=str(tmp_path / "state")
-        ).collect()
-    }
-    assert got == {(1, 1), (2, 1), (3, 1)}
-    assert not spark.sparkContext._jsc.sc().getCheckpointDir().isDefined()
-
-
-def test_clusters_incremental_matches_full_recompute(spark):
-    """Folding new pairs into an existing clustering via the label
-    edges must equal re-clustering old + new pairs from scratch --
-    including a new pair that BRIDGES two old components."""
-    from readabilityimproved_spark.operators.graph import (
-        neardup_clusters,
-        neardup_clusters_incremental,
-    )
-
-    old_pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (10, 11), (20, 21)], "id_a long, id_b long"
-    )
-    prev = neardup_clusters(old_pairs)
-    # new crawl: extends a component, bridges 3~10, adds a fresh one
-    new_pairs = spark.createDataFrame(
-        [(3, 4), (3, 10), (30, 31)], "id_a long, id_b long"
-    )
-    inc = {
-        tuple(r)
-        for r in neardup_clusters_incremental(prev, new_pairs).collect()
-    }
-    full = {
-        tuple(r)
-        for r in neardup_clusters(old_pairs.unionByName(new_pairs)).collect()
-    }
-    assert inc == full
-    assert (10, 1) in inc and (11, 1) in inc  # bridge merged components
 
 
 def test_job_summary_tolerates_pre_wave_lineage(spark, tmp_path):

@@ -1,95 +1,11 @@
-"""Round-6 pins: bounded-memory star contraction, loud metrics-rollup
-failures, and the ADVICE r5 hardening items (legacy-lineage metrics
-rollup, id-column validation). The state_dir pins live in
-test_graph.py."""
+"""Round-6 pins: loud metrics-rollup failures and the ADVICE r5
+hardening items (legacy-lineage metrics rollup). The clustering pins
+live in test_graph.py."""
 
 import logging
 import os
 
 import pytest
-
-
-# ---------------------------------------------------------------------------
-# bounded-memory contraction (_star_batches node cap)
-# ---------------------------------------------------------------------------
-
-def test_star_batches_flushes_at_node_cap():
-    """The union-find dict must never exceed the node cap (a skewed
-    pair file that lands one giant family in one partition used to grow
-    it without bound), and the flushed partial stars must still stitch
-    into the same single component."""
-    import pandas as pd
-
-    from readabilityimproved_spark.operators.graph import _star_batches
-
-    chain = pd.DataFrame(
-        {"a": list(range(0, 30)), "b": list(range(1, 31))}
-    )
-    stats = {}
-    outs = list(_star_batches(iter([chain]), "a", "b", 6, stats=stats))
-    assert stats["peak_nodes"] <= 6
-    assert len(outs) > 1  # the cap actually forced mid-batch flushes
-
-    # python-side union-find over the emitted stars: one component,
-    # rooted at the global min
-    parent = {}
-
-    def find(x):
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for pdf in outs:
-        for a, b in zip(pdf["a"], pdf["b"]):
-            parent.setdefault(a, a)
-            parent.setdefault(b, b)
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                parent[max(ra, rb)] = min(ra, rb)
-    assert set(parent) == set(range(31))
-    assert {find(n) for n in parent} == {0}
-
-    with pytest.raises(ValueError, match="max_nodes"):
-        list(_star_batches(iter([chain]), "a", "b", 1))
-
-
-def test_clusters_identical_labels_under_tiny_contract_cap(spark, monkeypatch):
-    """Flushing partial stars is a pure memory bound: labels through
-    neardup_clusters must be identical with an absurdly small cap, a
-    production-size cap, and contraction off."""
-    import random
-
-    from readabilityimproved_spark.operators import graph as G
-    from readabilityimproved_spark.operators.graph import neardup_clusters
-
-    rng = random.Random(606)
-    edges = {(i, i + 1) for i in range(80)}  # chain
-    edges |= {(5, t) for t in range(100, 120)}  # star
-    for _ in range(60):
-        a, b = rng.sample(range(200), 2)
-        edges.add((min(a, b), max(a, b)))
-    df = spark.createDataFrame(sorted(edges), "id_a long, id_b long")
-    for layout in (df.coalesce(1), df.repartition(7)):
-        with monkeypatch.context() as m:
-            m.setattr(G, "_CONTRACT_NODE_CAP", 4)
-            tiny = {tuple(r) for r in neardup_clusters(layout).collect()}
-        off = {
-            tuple(r)
-            for r in neardup_clusters(layout, pre_contract=False).collect()
-        }
-        assert tiny == off
-
-
-def test_clusters_missing_id_column_raises_value_error(spark):
-    """A misspelled id column must fail with the same helpful error
-    style as every other invalid argument -- naming the missing column
-    and what IS available -- not a raw schema KeyError."""
-    from readabilityimproved_spark.operators.graph import neardup_clusters
-
-    pairs = spark.createDataFrame([(1, 2)], "id_a long, id_b long")
-    with pytest.raises(ValueError, match=r"id_aa.*id_a"):
-        neardup_clusters(pairs, id_a="id_aa")
 
 
 def test_dom_attr_names_with_quotes_roundtrip_stable():
@@ -180,36 +96,6 @@ def test_metrics_rollup_tolerates_pre_wave_lineage(spark, tmp_path):
     assert metrics[111]["wall_ms_sum"] == 1700  # 800 + 900, once per wave
     real = [r for a, r in metrics.items() if a != 111]
     assert sum(r["docs"] for r in real) == 40
-
-
-def test_clusters_contract_cap_validated_eagerly(spark, monkeypatch):
-    """A contraction node cap < 2 must raise on the DRIVER before any
-    job launches, like every other argument check -- not as an opaque
-    executor-side PythonException mid-job."""
-    from pyspark.sql.classic.dataframe import DataFrame
-
-    from readabilityimproved_spark.operators import graph as G
-    from readabilityimproved_spark.operators.graph import (
-        _contract_local,
-        neardup_clusters,
-    )
-
-    pairs = spark.createDataFrame([(1, 2)], "id_a long, id_b long")
-    with pytest.raises(ValueError, match="max_nodes"):
-        _contract_local(pairs, "id_a", "id_b", max_nodes=1)
-
-    actions = {"n": 0}
-    orig_collect = DataFrame.collect
-
-    def counting(self):
-        actions["n"] += 1
-        return orig_collect(self)
-
-    monkeypatch.setattr(DataFrame, "collect", counting)
-    monkeypatch.setattr(G, "_CONTRACT_NODE_CAP", 1)
-    with pytest.raises(ValueError, match="max_nodes"):
-        neardup_clusters(pairs)
-    assert actions["n"] == 0, "the cap check ran after a job launched"
 
 
 # ---------------------------------------------------------------------------
