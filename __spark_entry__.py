@@ -22,7 +22,8 @@ import shutil
 import tempfile
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from py4j.java_gateway import is_instance_of
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from readabilityimproved_spark.functions import sqlgen
@@ -99,14 +100,7 @@ _PAGE_CLOSE = (
 
 def q_extract_article_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     extracted = extract_spans(_shaped_docs(spark, sf_dir))
-    s = F.explode("spans").alias("s")
-    return extracted.select(F.col("doc_id"), s).select(
-        F.col("doc_id").cast("bigint").alias("doc_id"),
-        F.col("s.kind").alias("kind"),
-        F.col("s.text").alias("text"),
-        F.col("s.media_ref").alias("media_ref"),
-        F.col("s.offset").alias("span_offset"),
-    )
+    return _span_rows(extracted, "kind", "text", "media_ref", "offset")
 
 
 def _spread(df: DataFrame, spark: SparkSession) -> DataFrame:
@@ -120,57 +114,94 @@ def _spread(df: DataFrame, spark: SparkSession) -> DataFrame:
     getNumPartitions). Round-robin repartition ONLY when the scan has
     fewer files than cores — at production scale the input is many
     files/splits and this is a no-op (no shuffle of a 10^12-doc
-    corpus). An empty ``inputFiles()`` (an in-memory or otherwise
-    non-file source) means the layout is unknown, not small: no-op too.
-    The file count is the JVM array's length, so no file name crosses
-    py4j. Result rows are unchanged (pure per-row kernel; the oracle
-    check compares sorted rows)."""
+    corpus). The count is the size of each file scan's cached file
+    index (the analyzed plan's ``LogicalRelation`` leaves), so no
+    per-file string is built. A plan with no such leaf (an in-memory or
+    otherwise non-file source) has an unknown layout, not a small one:
+    no-op too. Result rows are unchanged (pure per-row kernel; the
+    oracle check compares sorted rows)."""
+    gw = spark.sparkContext._gateway
+    pkg = "org.apache.spark.sql.execution.datasources."
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    files = 0
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if is_instance_of(gw, leaf, pkg + "LogicalRelation") and is_instance_of(
+            gw, leaf.relation(), pkg + "HadoopFsRelation"
+        ):
+            index = leaf.relation().location()
+            if is_instance_of(gw, index, pkg + "PartitioningAwareFileIndex"):
+                files += index.leafFiles().size()
     target = spark.sparkContext.defaultParallelism
-    if 0 < len(df._jdf.inputFiles()) < target:
+    if 0 < files < target:
         return df.repartition(target)
     return df
 
 
+def _doc_url(prefix: str, suffix: str) -> Column:
+    return F.concat(F.lit(prefix), F.col("doc_id").cast("string"), F.lit(suffix))
+
+
+def _span(
+    kind: str, text: Column | None, media_ref: Column | None = None, offset: int = 0
+) -> Column:
+    """One element of a constructed page's ``spans``; ``None`` is a null
+    string."""
+    null = F.lit(None).cast("string")
+    return F.struct(
+        F.lit(kind).alias("kind"),
+        (null if text is None else text).alias("text"),
+        (null if media_ref is None else media_ref).alias("media_ref"),
+        F.lit(offset).cast("int").alias("offset"),
+    )
+
+
+def _pages(
+    spark: SparkSession,
+    sf_dir: str,
+    spans: list[Column],
+    base_uri: Column | None = None,
+) -> DataFrame:
+    """Each document as a constructed page: string ``doc_id``,
+    ``base_uri`` when given, and ``spans``. Every page feeds a per-row
+    DOM kernel, so the scan is spread here, once."""
+    cols = [F.col("doc_id").cast("string").alias("doc_id")]
+    if base_uri is not None:
+        cols.append(base_uri.alias("base_uri"))
+    docs = _spread(_docs(spark, sf_dir), spark)
+    return docs.select(*cols, F.array(*spans).alias("spans"))
+
+
+def _span_rows(extracted: DataFrame, *fields: str) -> DataFrame:
+    """One row per extracted span: bigint ``doc_id`` plus the named span
+    fields, ``offset`` as ``span_offset``."""
+    s = F.explode("spans").alias("s")
+    return extracted.select(F.col("doc_id"), s).select(
+        F.col("doc_id").cast("bigint").alias("doc_id"),
+        *(
+            F.col(f"s.{f}").alias("span_offset" if f == "offset" else f)
+            for f in fields
+        ),
+    )
+
+
 def _shaped_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents.text wrapped into the constructed flagship pages."""
-    docs = _spread(_docs(spark, sf_dir), spark)
     ptext = F.concat(F.col("text"), F.lit(_TAIL))
-    src = F.concat(F.lit(_IMG_PREFIX), F.col("doc_id").cast("string"), F.lit(".jpg"))
-    base = F.concat(F.lit(_BASE_PREFIX), F.col("doc_id").cast("string"), F.lit(".html"))
-
-    def span(kind, text, media_ref, off):
-        return F.struct(
-            F.lit(kind).alias("kind"),
-            text.alias("text"),
-            media_ref.alias("media_ref"),
-            F.lit(off).cast("int").alias("offset"),
-        )
-
-    nulls = F.lit(None).cast("string")
-    spans = F.array(
-        span("html", F.lit(_PAGE_OPEN), nulls, 0),
-        span("html", F.concat(F.lit("<p>"), ptext, F.lit("</p>")), nulls, 1),
-        span("image", nulls, src, 2),
-        span("html", F.lit(_PAGE_CLOSE), nulls, 3),
-    )
-    return docs.select(
-        F.col("doc_id").cast("string").alias("doc_id"),
-        base.alias("base_uri"),
-        spans.alias("spans"),
-    )
+    spans = [
+        _span("html", F.lit(_PAGE_OPEN)),
+        _span("html", F.concat(F.lit("<p>"), ptext, F.lit("</p>")), offset=1),
+        _span("image", None, _doc_url(_IMG_PREFIX, ".jpg"), 2),
+        _span("html", F.lit(_PAGE_CLOSE), offset=3),
+    ]
+    return _pages(spark, sf_dir, spans, _doc_url(_BASE_PREFIX, ".html"))
 
 
 def q_extract_text_variant(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The Readability.java text-only variant (C12 retry path included):
     same constructed pages, but no image spans are emitted."""
     extracted = extract_spans(_shaped_docs(spark, sf_dir), variant="text")
-    s = F.explode("spans").alias("s")
-    return extracted.select(F.col("doc_id"), s).select(
-        F.col("doc_id").cast("bigint").alias("doc_id"),
-        F.col("s.kind").alias("kind"),
-        F.col("s.text").alias("text"),
-        F.col("s.offset").alias("span_offset"),
-    )
+    return _span_rows(extracted, "kind", "text", "offset")
 
 
 def _oracle_extract_text_variant() -> str:
@@ -207,7 +238,6 @@ _TITLE_PREFIX = "Story "
 def q_title_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T0 title extraction (Extractor.java:28-76) over constructed pages
     covering: h1 == title, h1 contains title, no h1, unrelated h1."""
-    docs = _spread(_docs(spark, sf_dir), spark)
     title = F.concat(F.lit(_TITLE_PREFIX), F.col("doc_id").cast("string"))
     h1 = (
         F.when(F.col("doc_id") % 4 == 0, F.concat(F.lit("<h1>"), title, F.lit("</h1>")))
@@ -222,19 +252,9 @@ def q_title_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("<html><head><title>"), title, F.lit("</title></head><body>"),
         h1, F.lit("<p>body text</p></body></html>"),
     )
-    spans = F.array(
-        F.struct(
-            F.lit("html").alias("kind"),
-            page.alias("text"),
-            F.lit(None).cast("string").alias("media_ref"),
-            F.lit(0).cast("int").alias("offset"),
-        )
-    )
-    shaped = docs.select(
-        F.col("doc_id").cast("string").alias("doc_id"), spans.alias("spans")
-    )
     from readabilityimproved_spark.operators.textops import extract_titles
 
+    shaped = _pages(spark, sf_dir, [_span("html", page)])
     return extract_titles(shaped).select(
         F.col("doc_id").cast("bigint").alias("doc_id"), F.col("title")
     )
@@ -271,7 +291,6 @@ _DATE_EXPECT = [
 def q_pub_date_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T2 weighted HTML date extraction (TimeUtil.getDateFromHtml) over
     constructed pages covering numeric/Chinese/English/datetime/yy/none."""
-    docs = _spread(_docs(spark, sf_dir), spark)
     datestr = F.element_at(
         F.array(*[F.lit(c) for c in _DATE_CASES]),
         (F.col("doc_id") % 6).cast("int") + 1,
@@ -283,19 +302,9 @@ def q_pub_date_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("text"),
         F.lit("</p></body></html>"),
     )
-    spans = F.array(
-        F.struct(
-            F.lit("html").alias("kind"),
-            page.alias("text"),
-            F.lit(None).cast("string").alias("media_ref"),
-            F.lit(0).cast("int").alias("offset"),
-        )
-    )
-    shaped = docs.select(
-        F.col("doc_id").cast("string").alias("doc_id"), spans.alias("spans")
-    )
     from readabilityimproved_spark.operators.textops import extract_pub_dates
 
+    shaped = _pages(spark, sf_dir, [_span("html", page)])
     return extract_pub_dates(shaped).select(
         F.col("doc_id").cast("bigint").alias("doc_id"), F.col("pub_date")
     )
@@ -417,7 +426,6 @@ def q_extract_rejects_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame
     logo, a duplicated photo, and a data-uri image -- the kernel must emit
     the text span ONLY (I5 size buckets, I11 count==1 dedup, I1 data-uri
     skip, C1 sidebar pruning all verified by hash equality)."""
-    docs = _spread(_docs(spark, sf_dir), spark)
     # 5 paragraphs so the img>p conditional-clean rule (correctly) does
     # not fire on this 4-image page
     words = ["alpha", "bravo", "charlie", "delta", "echo"]
@@ -425,11 +433,7 @@ def q_extract_rejects_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame
         F.concat(F.lit(f"<p>{w}: "), F.col("text"), F.lit(_TAIL + "</p>"))
         for w in words
     ]
-    dup = F.concat(
-        F.lit("http://img.example.com/2019-06/18/photo"),
-        F.col("doc_id").cast("string"),
-        F.lit("_dup.jpg"),
-    )
+    dup = _doc_url(_IMG_PREFIX, "_dup.jpg")
     page = F.concat(
         F.lit(_PAGE_OPEN),
         *paras,
@@ -441,30 +445,10 @@ def q_extract_rejects_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame
               ' height="600">'),
         F.lit(_PAGE_CLOSE),
     )
-    spans = F.array(
-        F.struct(
-            F.lit("html").alias("kind"),
-            page.alias("text"),
-            F.lit(None).cast("string").alias("media_ref"),
-            F.lit(0).cast("int").alias("offset"),
-        )
+    shaped = _pages(
+        spark, sf_dir, [_span("html", page)], _doc_url(_BASE_PREFIX, ".html")
     )
-    base = F.concat(
-        F.lit(_BASE_PREFIX), F.col("doc_id").cast("string"), F.lit(".html")
-    )
-    shaped = docs.select(
-        F.col("doc_id").cast("string").alias("doc_id"),
-        base.alias("base_uri"),
-        spans.alias("spans"),
-    )
-    extracted = extract_spans(shaped)
-    s = F.explode("spans").alias("s")
-    return extracted.select(F.col("doc_id"), s).select(
-        F.col("doc_id").cast("bigint").alias("doc_id"),
-        F.col("s.kind").alias("kind"),
-        F.col("s.text").alias("text"),
-        F.col("s.offset").alias("span_offset"),
-    )
+    return _span_rows(extract_spans(shaped), "kind", "text", "offset")
 
 
 def _oracle_extract_rejects_boilerplate() -> str:
@@ -1536,11 +1520,9 @@ def q_media_attach(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     extracted = extract_spans(_shaped_docs(spark, sf_dir))
-    docs = _docs(spark, sf_dir)
-    src = F.concat(F.lit(_IMG_PREFIX), F.col("doc_id").cast("string"), F.lit(".jpg"))
-    media = docs.select(
+    media = _docs(spark, sf_dir).select(
         F.col("doc_id").cast("string").alias("doc_id"),
-        src.alias("media_ref"),
+        _doc_url(_IMG_PREFIX, ".jpg").alias("media_ref"),
         F.lit("image").alias("media_type"),
         F.col("text").cast("binary").alias("payload"),
         F.create_map(
@@ -2149,12 +2131,9 @@ WHERE round(inter * 1.0 / (ca.n_sh + cb.n_sh - inter), 6)
 _SIMHASH_ND_HAMMING, _SIMHASH_ND_BANDS = 3, 4
 
 
-def q_simhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Simhash-hamming near-dup over a constructed corpus: every doc plus
-    a copy (exact for even ids, one-token-appended for odd ids), so the
-    pigeonhole banding + bit_count verify is exercised on real pairs."""
-    from readabilityimproved_spark.operators.dedup import simhash_neardup_pairs
-
+def _neardup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Every doc plus a copy (exact for even ids, one-token-appended for
+    odd ids), so near-dup pairs exist at every scale factor."""
     docs = _docs(spark, sf_dir).select("doc_id", "text")
     mutated = docs.select(
         (F.col("doc_id") + 1000000).alias("doc_id"),
@@ -2162,17 +2141,26 @@ def q_simhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.concat(F.col("text"), F.lit(" zz")))
         .alias("text"),
     )
+    return docs.union(mutated)
+
+
+def q_simhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Simhash-hamming near-dup over the constructed near-dup corpus, so
+    the pigeonhole banding + bit_count verify is exercised on real pairs."""
+    from readabilityimproved_spark.operators.dedup import simhash_neardup_pairs
+
     return simhash_neardup_pairs(
-        docs.union(mutated),
+        _neardup_corpus(spark, sf_dir),
         max_hamming=_SIMHASH_ND_HAMMING,
         bands=_SIMHASH_ND_BANDS,
         portable_hash=True,
     )
 
 
-def _simhash_neardup_oracle() -> str:
-    width = 64 // _SIMHASH_ND_BANDS
-    mask = (1 << width) - 1
+def _simhash_vote() -> tuple[str, str]:
+    """The oracle's 63-bit simhash vote: the per-bit ``sum`` select list
+    over token hashes ``h``, and the expression that packs its ``b{i}``
+    columns into one BIGINT."""
     bit_sums = ",\n         ".join(
         f"sum(CASE WHEN (h >> {b}) & 1 = 1 THEN 1 ELSE -1 END) AS b{b}"
         for b in range(63)
@@ -2181,6 +2169,13 @@ def _simhash_neardup_oracle() -> str:
         f"(CASE WHEN b{b} > 0 THEN (1::BIGINT << {b}) ELSE 0::BIGINT END)"
         for b in range(63)
     )
+    return bit_sums, recombine
+
+
+def _simhash_neardup_oracle() -> str:
+    width = 64 // _SIMHASH_ND_BANDS
+    mask = (1 << width) - 1
+    bit_sums, recombine = _simhash_vote()
     chunk_selects = " UNION ALL ".join(
         f"SELECT id, simhash, {b} AS band,"
         f" (simhash >> {b * width}) & {mask} AS chunk FROM sims"
@@ -2221,12 +2216,6 @@ WHERE a.id < b.id
 """
 
 
-def _simhash_neardup_pairs_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Shared pair source for the cluster queries: identical to
-    q_simhash_neardup's constructed corpus."""
-    return q_simhash_neardup(spark, sf_dir)
-
-
 def q_neardup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components over the simhash near-dup pairs: the
     transitive closure Spark has no recursive CTE for, computed by
@@ -2234,7 +2223,7 @@ def q_neardup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     replays it as a DuckDB recursive CTE."""
     from readabilityimproved_spark.operators.graph import neardup_clusters
 
-    return neardup_clusters(_simhash_neardup_pairs_df(spark, sf_dir))
+    return neardup_clusters(q_simhash_neardup(spark, sf_dir))
 
 
 def q_neardup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2250,7 +2239,7 @@ def q_neardup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         neardup_clusters_incremental,
     )
 
-    pairs = _simhash_neardup_pairs_df(spark, sf_dir)
+    pairs = q_simhash_neardup(spark, sf_dir)
     base = pairs.filter((F.col("id_a") + F.col("id_b")) % 2 == 0)
     new = pairs.filter((F.col("id_a") + F.col("id_b")) % 2 != 0)
     prev_labels = neardup_clusters(base)
@@ -2264,15 +2253,8 @@ def q_dedup_representatives(spark: SparkSession, sf_dir: str) -> DataFrame:
         dedup_keep_representative,
     )
 
-    docs = _docs(spark, sf_dir).select("doc_id", "text")
-    mutated = docs.select(
-        (F.col("doc_id") + 1000000).alias("doc_id"),
-        F.when(F.col("doc_id") % 2 == 0, F.col("text"))
-        .otherwise(F.concat(F.col("text"), F.lit(" zz")))
-        .alias("text"),
-    )
-    corpus = docs.union(mutated)
-    pairs = _simhash_neardup_pairs_df(spark, sf_dir)
+    corpus = _neardup_corpus(spark, sf_dir)
+    pairs = q_simhash_neardup(spark, sf_dir)
     return dedup_keep_representative(corpus, pairs).select("doc_id")
 
 
@@ -2313,14 +2295,7 @@ WHERE doc_id NOT IN (SELECT node FROM labels WHERE cluster_id <> node)
 
 
 def _simhash_oracle() -> str:
-    bit_sums = ",\n         ".join(
-        f"sum(CASE WHEN (h >> {b}) & 1 = 1 THEN 1 ELSE -1 END) AS b{b}"
-        for b in range(63)
-    )
-    recombine = " + ".join(
-        f"(CASE WHEN b{b} > 0 THEN (1::BIGINT << {b}) ELSE 0::BIGINT END)"
-        for b in range(63)
-    )
+    bit_sums, recombine = _simhash_vote()
     return f"""
 WITH toks AS (
   SELECT doc_id AS id, unnest(string_split_regex(trim(text), '\\s+')) AS tok
@@ -2575,13 +2550,8 @@ SELECT doc_id, CASE {whens} ELSE '{pairs[-1][0]}' END AS split FROM m
 # nofollow external link, one fragment link; the Spark side walks the
 # real DOM, the oracle states the expected rows directly (same pattern
 # as the extraction rows).
-_LINK_BASE = "http://news.example.com/2019-06/18/story"
-
-
 def _linked_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _spread(_docs(spark, sf_dir), spark)
     did = F.col("doc_id").cast("string")
-    base = F.concat(F.lit(_LINK_BASE), did, F.lit(".html"))
     k = (F.col("doc_id") % 3 + 1).cast("int")
     content = F.concat_ws(
         "",
@@ -2606,16 +2576,8 @@ def _linked_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit('.example.org/p" rel="nofollow">partner</a>'),
         F.lit('<a href="#top">back to top</a></div></body></html>'),
     )
-    spans = F.array(
-        F.struct(
-            F.lit("html").alias("kind"),
-            page.alias("text"),
-            F.lit(None).cast("string").alias("media_ref"),
-            F.lit(0).cast("int").alias("offset"),
-        )
-    )
-    return docs.select(
-        did.alias("doc_id"), base.alias("base_uri"), spans.alias("spans")
+    return _pages(
+        spark, sf_dir, [_span("html", page)], _doc_url(_BASE_PREFIX, ".html")
     )
 
 
@@ -2835,7 +2797,7 @@ SELECT doc_id, cast(k as int) AS link_no,
 FROM d WHERE doc_id % 5 NOT IN (2, 4)
 UNION ALL
 SELECT doc_id, cast(k + 1 as int) AS link_no,
-       '{_LINK_BASE}' || doc_id || '.html#top' AS url,
+       '{_BASE_PREFIX}' || doc_id || '.html#top' AS url,
        'back to top' AS anchor, '' AS rel
 FROM d
 """
@@ -2858,7 +2820,7 @@ SELECT doc_id, cast(k as int) AS link_no,
 FROM d
 UNION ALL
 SELECT doc_id, cast(k + 1 as int) AS link_no,
-       '{_LINK_BASE}' || doc_id || '.html#top' AS url,
+       '{_BASE_PREFIX}' || doc_id || '.html#top' AS url,
        'back to top' AS anchor, '' AS rel
 FROM d
 """
@@ -2910,7 +2872,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "bpe_token_count": sql_query(_bpe_token_count_query),
         "rolling_hash": sql_query(_rolling_hash_query),
         "url_normalize": sql_query(_url_normalize_query),
-        # --- new this round: incremental clustering + temporal joins -------
+        # --- incremental clustering + temporal joins ------------------------
         "neardup_incremental": q_neardup_incremental,
         "asof_join_events": q_asof_join_events,
         "range_join_events": q_range_join_events,
@@ -2920,11 +2882,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "tpch_profit_by_nation": q_tpch_profit_by_nation,
         "repetition_stats": sql_query(_repetition_stats_query),
         "quality_prune": sql_query(_quality_prune_query),
-        # --- new this session: passage dedup + rarity scoring ---------------
+        # --- passage dedup + rarity scoring ----------------------------------
         "dup_passage_spans": q_dup_passage_spans,
         "passage_dedup_text": q_passage_dedup_text,
         "token_rarity": q_token_rarity,
-        # --- new this session: training export + link graph -----------------
+        # --- training export + link graph ------------------------------------
         "shuffle_shards": q_shuffle_shards,
         "hash_split": q_hash_split,
         "outlink_extract": q_outlink_extract,
@@ -2948,7 +2910,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dedup_keep_first": lambda spark, sf: dedup_keep_first(_docs(spark, sf)),
         "dedup_incremental": q_dedup_incremental,
         # portable_hash=True (md5-slice) so the LSH family is DuckDB-
-        # hash-checkable; production default stays xxhash64
+        # hash-checkable; production default stays xxhash64.
+        # _spread (both MinHash queries): per-row gram+md5 signature work
+        # dominates the pre-exchange stage. sf0.1 on 4 cores, 20 fresh-
+        # process pairs each (medians): warm 0.44-0.52 s faster, in
+        # 18-19/20 pairs; cold 0.16-0.31 s slower, so a cold run and one
+        # warm rerun already gain. The similarity scans lost both ways.
         "minhash_verified": lambda spark, sf: minhash_verified_pairs(
             _spread(_docs(spark, sf), spark),
             threshold=_VERIFIED_THRESHOLD,
@@ -2957,8 +2924,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ngram_jaccard": lambda spark, sf: ngram_jaccard_pairs(
             _docs(spark, sf), n=_JACCARD_N, threshold=_JACCARD_THRESHOLD
         ),
-        # _spread: per-row gram+md5 signature work dominates the
-        # pre-exchange stage (measured 1.7s -> 1.1s warm at sf0.1)
         "minhash_lsh": lambda spark, sf: minhash_lsh_pairs(
             _spread(_docs(spark, sf), spark), portable_hash=True
         ),
@@ -2979,13 +2944,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "inverted_index": q_inverted_index,
         "materialize_packs": q_materialize_packs,
         # --- similarity tier -----------------------------------------------
-        # _spread: per-row dot products against the broadcast query
-        # block (measured 0.43s -> 0.31s warm at sf0.1)
         "similarity_topk": lambda spark, sf: cosine_topk(
-            _spread(_emb(spark, sf), spark), k=_TOPK_K, num_queries=_TOPK_QUERIES
+            _emb(spark, sf), k=_TOPK_K, num_queries=_TOPK_QUERIES
         ),
         "similarity_ann_lsh": lambda spark, sf: ann_bucketed_topk(
-            _spread(_emb(spark, sf), spark), k=_TOPK_K, num_queries=_TOPK_QUERIES
+            _emb(spark, sf), k=_TOPK_K, num_queries=_TOPK_QUERIES
         ),
         "similarity_ann_multiprobe": lambda spark, sf: ann_multiprobe_topk(
             _emb(spark, sf), k=_TOPK_K, num_queries=_TOPK_QUERIES,

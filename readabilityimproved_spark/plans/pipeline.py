@@ -47,8 +47,7 @@ handling, checkpoint/resume):
   count, not by bytes -- on the perfbench ``extract`` corpus (64 files,
   4 cores) split 0 gets the 16 largest files, all 10 giants among
   them: 256 docs carrying 3-4x the span JSON bytes of any of splits
-  1-3. A byte-sized open cost packs by bytes instead (ROADMAP, smaller
-  items);
+  1-3. A byte-sized open cost packs by bytes instead (ROADMAP item 4);
 * everything relational (resume anti-filter, metrics rollup) is plain
   DataFrame code — Catalyst/AQE handle pushdown and small-side
   broadcast; the only Python worker runs the Arrow kernel. The rollup

@@ -238,3 +238,107 @@ def test_query_index_dirs_removed_at_exit(tmp_path):
     app_id, n_built = proc.stdout.split()[-2:]
     assert n_built == "2"  # both indexes existed while the process ran
     assert glob.glob(str(tmp_path / f"*_index_*_{app_id}")) == []
+
+
+# ``_spread``: documents.parquet at the check scale factors is one parquet
+# file with one row group, so a per-row kernel over the raw scan runs in
+# one task. ``_spread`` round-robin repartitions only when the scan has
+# fewer input files than cores; with many files it is a no-op, so a
+# production-scale corpus is never shuffled.
+
+
+@pytest.mark.parametrize("n_files", [1, 2])
+def test_spread_repartitions_single_file_scan(spark, entry_mod, tmp_path, n_files):
+    """One single-file read, and a union of two, both spread."""
+    reads = []
+    for i in range(n_files):
+        one = str(tmp_path / f"one{i}")
+        spark.range(500).selectExpr(
+            "id as doc_id", "repeat('x', 50) as text"
+        ).coalesce(1).write.parquet(one)
+        reads.append(spark.read.parquet(one))
+    df = reads[0] if n_files == 1 else reads[0].union(reads[1])
+    assert len(df.inputFiles()) == n_files
+    spread = entry_mod._spread(df, spark)
+    assert "RoundRobinPartitioning" in spread._jdf.queryExecution().toString()
+    # rows unchanged (the whole point: placement only)
+    got = sorted(r["doc_id"] for r in spread.collect())
+    assert got == sorted(list(range(500)) * n_files)
+
+
+def test_spread_counts_files_without_listing_them(
+    spark, entry_mod, tmp_path, monkeypatch
+):
+    """The guard counts input files on the JVM side: ``DataFrame.inputFiles``
+    would ship every file name through py4j into a Python list just to
+    take its length."""
+    one = str(tmp_path / "one")
+    spark.range(50).selectExpr("id as doc_id").coalesce(1).write.parquet(one)
+    df = spark.read.parquet(one)
+
+    def no_listing(self):
+        raise AssertionError("inputFiles() listed every file name")
+
+    monkeypatch.setattr(type(df), "inputFiles", no_listing)
+    spread = entry_mod._spread(df, spark)
+    assert "RoundRobinPartitioning" in spread._jdf.queryExecution().toString()
+
+
+def test_spread_noop_for_many_files(spark, entry_mod, tmp_path):
+    many = str(tmp_path / "many")
+    n_files = spark.sparkContext.defaultParallelism
+    spark.range(500).selectExpr("id as doc_id").repartition(
+        n_files
+    ).write.parquet(many)
+    df = spark.read.parquet(many)
+    assert len(df.inputFiles()) >= n_files
+    spread = entry_mod._spread(df, spark)
+    assert spread is df  # no shuffle injected at scale
+
+
+def test_spread_noop_for_in_memory_frame(spark, entry_mod):
+    """No input files means an unknown layout, not a small one: an
+    in-memory DataFrame is returned as is, with no shuffle."""
+    df = spark.createDataFrame([(i,) for i in range(50)], "doc_id long")
+    assert df.inputFiles() == []
+    spread = entry_mod._spread(df, spark)
+    assert spread is df
+    assert "Exchange" not in spread._jdf.queryExecution().executedPlan().toString()
+
+
+def test_shaped_docs_rows_unchanged_by_spread(spark, entry_mod):
+    sf = "/root/testdata/sf0.001"
+    shaped = entry_mod._shaped_docs(spark, sf)
+    raw = entry_mod._docs(spark, sf)
+    assert shaped.count() == raw.count()
+    got = {r["doc_id"] for r in shaped.select("doc_id").collect()}
+    want = {str(r["doc_id"]) for r in raw.select("doc_id").collect()}
+    assert got == want
+
+
+def test_spread_sites_are_pinned(spark, entry_mod):
+    """The spread sites kept by a cold-inclusive A/B: the constructed
+    pages and the two MinHash queries plan round-robin exchanges, the
+    two similarity scans, where the spread lost, plan none.
+    ``minhash_verified`` reads its one spread scan on both sides of its
+    pair join, so it plans two (AQE reuses the broadcast above them, so
+    one runs)."""
+    from pyspark.sql import functions as F
+
+    sf = "/root/testdata/sf0.01"
+
+    def round_robins(df):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        return plan.count("RoundRobinPartitioning")
+
+    pages = entry_mod._pages(spark, sf, [entry_mod._span("html", F.col("text"))])
+    assert round_robins(pages) == 1
+    queries = entry_mod.queries()
+    expected = {
+        "minhash_lsh": 1,
+        "minhash_verified": 2,
+        "similarity_topk": 0,
+        "similarity_ann_lsh": 0,
+    }
+    got = {name: round_robins(queries[name](spark, sf)) for name in expected}
+    assert got == expected
