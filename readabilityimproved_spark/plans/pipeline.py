@@ -39,15 +39,14 @@ handling, checkpoint/resume):
   JVM as one Arrow table written as one file (no Python worker);
 * **skew**: extraction cost is proportional to document bytes, and
   there is no shuffle before the kernel (plan: Scan -> MapInPandas);
-  the only exchange is the writer's ``part`` hash. The scan's file
-  splits do NOT spread giant documents under ``build_session()``
-  defaults: Spark sorts files largest first and packs them into splits
-  charging each file a 4 MB open cost
-  (``spark.sql.files.openCostInBytes``), so small files are packed by
-  count, not by bytes -- on the perfbench ``extract`` corpus (64 files,
-  4 cores) split 0 gets the 16 largest files, all 10 giants among
-  them: 256 docs carrying 3-4x the span JSON bytes of any of splits
-  1-3. A byte-sized open cost packs by bytes instead (ROADMAP item 4);
+  the only exchange is the writer's ``part`` hash. So the scan's file
+  splits are the skew control: Spark sorts files largest first and
+  packs them into splits, charging each file an open cost
+  (``spark.sql.files.openCostInBytes``). ``build_session()`` sets it to
+  16 KB, so splits are packed by bytes and giant documents spread over
+  splits. Under Spark's 4 MB default small files are packed by count:
+  on the perfbench ``extract`` corpus of seed 1 (64 files, 4 cores)
+  split 0 would get the 16 largest files, all 10 giants among them;
 * everything relational (resume anti-filter, metrics rollup) is plain
   DataFrame code — Catalyst/AQE handle pushdown and small-side
   broadcast; the only Python worker runs the Arrow kernel. The rollup

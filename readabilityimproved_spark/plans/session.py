@@ -6,9 +6,27 @@ rollups), and conservative Arrow batch sizes so giant documents cannot
 blow the Python worker (SURVEY.md §7 "per-doc recursion depth / giant
 docs").
 
-On a real cluster these same configs apply unchanged; only
-``master``/executor sizing differs (spark-submit --py-files, see
-README).
+Scan splits are packed by bytes. Extraction has no shuffle before the
+kernel, so the scan's file splits are its only skew control. Spark
+sorts files largest first and charges each one ``openCostInBytes`` on
+top of its size when it fills a split. At Spark's 4 MB default, files
+far smaller than that are packed by count: on the perfbench ``extract``
+corpus of seed 1 (64 files of 2-85 KB, 4 cores), split 0 took the 16
+largest files and all 10 giant documents, and that one task set the
+job's wall time. ``OPEN_COST_BYTES`` (16 KB, the value ``bench.py``
+already used) packs by bytes. Measured on 4 cores (1-minute load
+2.4-4.0), in 10 interleaved perfbench pairs against the 4 MB default:
+``extract`` ``docs_per_s`` rose from 630 to 751 (median; the change won
+9 of 10 pairs), ``resume_s`` fell from 1.59 to 1.33 s and the worker's
+peak RSS from 111 to 106 MB. The traced ``extract`` task skew fell from
+1.34 to 1.06. In a 3-pair sweep of 4, 16, 64 and 256 KB every value
+gained; 4 KB and 16 KB won all 3 pairs and cut the worker RSS, 64 KB
+and 256 KB won 2 of 3 and left it near 111 MB.
+
+Every entry point (perfbench, ``cli``, ``tools/``, the tests) builds
+its session here. On a real cluster these same configs apply
+unchanged; only ``master``/executor sizing differs (spark-submit
+--py-files, see README).
 """
 
 from __future__ import annotations
@@ -20,6 +38,10 @@ from pyspark.sql import SparkSession
 #: docs per Arrow batch; small enough that a batch of giant documents
 #: stays well under worker memory at ~1 MB/doc.
 ARROW_BATCH_SIZE = 256
+
+#: bytes a file is charged when scan splits are packed (Spark's
+#: ``openCostInBytes``, default 4 MB); see the module docstring.
+OPEN_COST_BYTES = 16384
 
 
 def _enable_preload_daemon(master: str) -> bool:
@@ -74,12 +96,21 @@ def build_session(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
+    """The engine's one session policy (see the module docstring).
+
+    ``master=None`` means ``local[$SPARK_GRAFT_CPUS]`` when this process
+    launches the JVM. Under ``spark-submit`` the JVM is already running
+    (it started this process and passed ``PYSPARK_GATEWAY_PORT``), so
+    ``master=None`` keeps the launcher's ``--master``, the launcher's
+    driver memory stands, and the preload daemon stays off.
+    """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
-    master = master or f"local[{cpus}]"
+    launched = "PYSPARK_GATEWAY_PORT" in os.environ
+    if master is None and not launched:
+        master = f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or max(cpus, 8)
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(master)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -89,21 +120,28 @@ def build_session(
             "spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_BATCH_SIZE)
         )
         .config("spark.sql.files.maxPartitionBytes", "134217728")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
+        .config("spark.sql.files.openCostInBytes", str(OPEN_COST_BYTES))
         .config("spark.ui.enabled", "false")
     )
-    if _enable_preload_daemon(master):
+    if master is not None:
+        builder = builder.master(master)
+    if not launched:
         builder = builder.config(
-            "spark.python.daemon.module",
-            "readabilityimproved_spark.plans.preload_daemon",
+            "spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g")
         )
-        # second belt for `python -m` resolution: the os.environ change
-        # above only reaches a JVM launched AFTER it — if some earlier
-        # code started the JVM first, the worker factory still merges
-        # executorEnv.PYTHONPATH into the daemon's environment
-        builder = builder.config(
-            "spark.executorEnv.PYTHONPATH", os.environ["PYTHONPATH"]
-        )
+        if _enable_preload_daemon(master):
+            builder = builder.config(
+                "spark.python.daemon.module",
+                "readabilityimproved_spark.plans.preload_daemon",
+            )
+            # second belt for `python -m` resolution: the os.environ
+            # change above only reaches a JVM launched AFTER it -- if some
+            # earlier code started the JVM first, the worker factory
+            # still merges executorEnv.PYTHONPATH into the daemon's
+            # environment
+            builder = builder.config(
+                "spark.executorEnv.PYTHONPATH", os.environ["PYTHONPATH"]
+            )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

@@ -23,15 +23,6 @@ from readabilityimproved_spark.operators.layout import (
 SF_DIR = "/root/testdata/sf0.001"
 
 
-@pytest.fixture(scope="module")
-def spark():
-    from readabilityimproved_spark.plans.session import build_session
-
-    s = build_session(app_name="r07-layout-test", master="local[4]",
-                      shuffle_partitions=8)
-    yield s
-
-
 def _old_fake_pdf_blocks(docs, with_footer=True):
     """The pre-r07 formulation, verbatim (explode bare ids, slice the
     carried token array per row, footers via content.distinct())."""

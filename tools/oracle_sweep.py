@@ -5,9 +5,14 @@ the same three gates the round driver records in CORRECTNESS_r{N}.json.
 
 Usage:
     python tools/oracle_sweep.py [SF_DIR] [--only name1,name2] [--cpus N]
+                                 [--conf key=value ...]
 
 Defaults to /root/testdata/sf0.01 (the driver's correctness scale).
-Exits non-zero if any query mismatches or errors.
+The Spark side runs on a ``build_session()`` session; each ``--conf``
+overrides one setting of it, e.g. ``--conf
+spark.sql.files.openCostInBytes=4194304`` checks the queries under
+Spark's default split layout. Exits non-zero if any query mismatches or
+errors.
 """
 
 from __future__ import annotations
@@ -60,15 +65,25 @@ def _rows_sorted(cols, rows):
     return out
 
 
+def _conf_pair(text: str) -> tuple[str, str]:
+    key, sep, value = text.partition("=")
+    if not sep or not key:
+        raise argparse.ArgumentTypeError(f"expected KEY=VALUE, got {text!r}")
+    return key, value
+
+
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("sf_dir", nargs="?", default="/root/testdata/sf0.01")
     ap.add_argument("--only", default="")
     ap.add_argument("--cpus", default=os.environ.get("SPARK_GRAFT_CPUS", "8"))
+    ap.add_argument("--conf", action="append", default=[], type=_conf_pair,
+                    metavar="KEY=VALUE")
     args = ap.parse_args()
 
     import duckdb
-    from pyspark.sql import SparkSession
+
+    from readabilityimproved_spark.plans.session import build_session
 
     spec = importlib.util.spec_from_file_location(
         "entry", os.path.join(REPO, "__spark_entry__.py")
@@ -81,12 +96,15 @@ def main() -> int:
     only = {s for s in args.only.split(",") if s}
     names = [n for n in qs if not only or n in only]
 
-    spark = (
-        SparkSession.builder.master(f"local[{args.cpus}]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", "12g")
-        .getOrCreate()
+    spark = build_session(
+        app_name="oracle-sweep",
+        master=f"local[{args.cpus}]",
+        shuffle_partitions=32,
+        extra_conf={
+            "spark.sql.session.timeZone": "UTC",
+            "spark.driver.memory": "12g",
+            **dict(args.conf),
+        },
     )
     spark.sparkContext.setLogLevel("ERROR")
 
